@@ -233,6 +233,23 @@ def _may_contain(entry: dict, col: str, lo, hi) -> bool:
     return True
 
 
+def _read_parquet_files(
+    spark: SparkSession, paths: list[str], schema=None
+) -> DataFrame:
+    """``spark.read.parquet(*paths)`` in O(1) py4j round trips.
+    pyspark converts the path list with one call per element, so
+    opening a snapshot would cost more with every file the table
+    gains; here the ``String[]`` is split JVM-side from one joined
+    string and handed to the varargs ``parquet(String...)`` overload.
+    The separator is NUL, the one character a POSIX path cannot
+    hold."""
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    jpaths = spark._jvm.java.util.regex.Pattern.compile("\0").split(
+        "\0".join(paths)
+    )
+    return DataFrame(reader._jreader.parquet(jpaths), spark)
+
+
 def _fmt_version(v: int) -> str:
     return f"{v:08d}.json"
 
@@ -268,7 +285,7 @@ class TxTable:
         self.root = root
         self.log_dir = os.path.join(root, "_txlog")
         self.data_dir = os.path.join(root, "data")
-        self._schema_cache: dict = {}  # (version, anchor) → StructType
+        self._schema_cache: dict = {}  # anchor footer schema → StructType
         # applied-batch-id ring size: the set is rewritten into every
         # manifest, so at high commit rates it is the one metadata
         # piece that grows without bound (measured: tools/
@@ -565,13 +582,20 @@ class TxTable:
         anchor = m.get("schema_file")
         paths = [f["path"] for f in files]
         if anchor and os.path.exists(anchor):
-            key = (m["version"], anchor)
+            import pyarrow.parquet as pq
+
+            # Keyed on the anchor's footer schema, not on the version:
+            # every commit that adds files moves the anchor, but the
+            # schema changes only on evolution. So Spark's inference
+            # (a 1-task job) runs once per distinct schema, and the
+            # footer read that finds the key is driver-local.
+            key = pq.read_schema(anchor).serialize().to_pybytes()
             schema = self._schema_cache.get(key)
             if schema is None:
                 schema = spark.read.parquet(anchor).schema
                 self._schema_cache[key] = schema
-            return spark.read.schema(schema).parquet(*paths)
-        return spark.read.parquet(*paths)
+            return _read_parquet_files(spark, paths, schema)
+        return _read_parquet_files(spark, paths)
 
     # ---- change-data feed ----------------------------------------------
 
@@ -629,7 +653,7 @@ class TxTable:
         ]
         if not added:
             return None
-        return spark.read.parquet(*added)
+        return _read_parquet_files(spark, added)
 
     # ---- write ----------------------------------------------------------
 

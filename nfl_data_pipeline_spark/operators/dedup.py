@@ -233,13 +233,16 @@ def with_minhash_signature(
         )
 
         return minhash_signature_arrow(df_sids, use)
-    out = df_sids
-    for i, (a, b) in enumerate(use):
-        out = out.withColumn(
-            f"mh{i}",
-            F.expr(f"array_min(transform(sids, x -> ({a} * x + {b}) % {P}))"),
-        )
-    return out
+    # one withColumns, not a withColumn per permutation: each
+    # withColumn re-analyzes the whole growing plan on the driver
+    return df_sids.withColumns(
+        {
+            f"mh{i}": F.expr(
+                f"array_min(transform(sids, x -> ({a} * x + {b}) % {P}))"
+            )
+            for i, (a, b) in enumerate(use)
+        }
+    )
 
 
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text", n: int = 3) -> DataFrame:
@@ -616,7 +619,8 @@ def registry_winner_verdicts(
     (text MinHash / embedding / image / audio): connected components
     over the verified ``(doc_a, doc_b)`` edges, winner = the
     component's REGISTRY member when one exists (first-arrival-wins
-    across batches, ``reg_nodes`` columns ``(doc_id, _reg)``), else
+    across batches, ``reg_nodes`` columns ``(doc_id, _reg)``; only
+    ``_reg == 1`` rows are members), else
     the min batch id; returns one ``(id_col, dup_of, keep)`` verdict
     row per ``base_ids`` row, checkpointed so the caller can mutate
     the registry afterwards. One definition so a change to winner
@@ -636,6 +640,7 @@ def registry_winner_verdicts(
         # component nodes (the only fact Spark must supply) comes from
         # ONE bounded semi-join: |comp nodes| ≤ 2·|edges|, broadcast
         # against the registry with NO exchange of the registry side.
+        # Membership is ``_reg == 1``, the fallback's contract.
         comp_rows, node_t = uf
         reg_hits: set = set()
         if reg_nodes is not None and comp_rows:
@@ -646,9 +651,8 @@ def registry_winner_verdicts(
             )
             reg_hits = {
                 r[0]
-                for r in reg_nodes.join(
-                    F.broadcast(nodes_f), "doc_id"
-                )
+                for r in reg_nodes.filter(F.col("_reg") == 1)
+                .join(F.broadcast(nodes_f), "doc_id")
                 .select("doc_id")
                 .collect()
             }
@@ -674,7 +678,9 @@ def registry_winner_verdicts(
         )
         out = base_ids.join(F.broadcast(vmap), id_col, "left")
     else:
-        comps = connected_components(dedup_edges)
+        # the bounded collect above already found the edge set too
+        # large for the driver: go straight to the distributed path
+        comps = _distributed_components(dedup_edges)
         if reg_nodes is None:
             from nfl_data_pipeline_spark.operators.localframe import (
                 empty_frame,
@@ -725,15 +731,16 @@ def _union_find_rows(
 
     Returns ``(rows, node_type)`` with ``rows = [(node, component)]``
     (component = min reachable id), or ``None`` when the edge set
-    exceeds ``driver_max_pairs`` — in that case ``pairs`` is LEFT
-    PERSISTED so the distributed fallback reuses the materialization
-    its count paid for."""
-    pairs = pairs.persist()
-    if pairs.count() > driver_max_pairs:
+    exceeds ``driver_max_pairs``. One bounded collect decides both:
+    the edges fit iff at most ``driver_max_pairs`` rows come back.
+    ``pairs`` is not persisted: on the common (fitting) path a cache
+    adds a job and nothing reads it again, and a too-large edge set
+    goes to ``_distributed_components``, which persists its input
+    itself."""
+    rows = pairs.select(a_col, b_col).limit(driver_max_pairs + 1).collect()
+    if len(rows) > driver_max_pairs:
         return None
-    rows = pairs.select(a_col, b_col).collect()
     node_t = pairs.schema[a_col].dataType
-    pairs.unpersist()
     parent: dict = {}
 
     def find(x):
@@ -807,6 +814,14 @@ def connected_components(
         )
 
         return local_frame(spark, out_rows, schema)
+    return _distributed_components(pairs, a_col, b_col)
+
+
+def _distributed_components(
+    pairs: DataFrame, a_col: str = "doc_a", b_col: str = "doc_b"
+) -> DataFrame:
+    """``connected_components``' distributed path: iterative
+    min-label propagation (see its docstring)."""
     pairs = pairs.persist()
 
     edges = (

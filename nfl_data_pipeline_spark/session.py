@@ -69,6 +69,14 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
+        # Past 32 paths Spark lists files in a parallel job, per read.
+        # Tx tables (jobs/txlog.py) pass every live file and already
+        # require a POSIX path (the commit is an os.link put-if-absent),
+        # so the driver stats them itself. Warehouse reads pass one root.
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(1 << 20),
+        )
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

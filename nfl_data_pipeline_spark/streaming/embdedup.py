@@ -108,10 +108,14 @@ def process_embdedup_batch(
     # scores probe-probe (a < b) and probe-registry (a ≠ b) pairs in
     # segment-vectorized numpy with the exact fold order of the SQL
     # engine's dim-unrolled dot, and never emits registry-registry
-    # pairs. Verdicts are therefore bit-identical to the SQL engine
-    # BY CONSTRUCTION for both engine settings (previously the arrow
-    # engine's einsum could in principle flip a knife-edge pair; the
-    # equivalence test pinned zero flips empirically).
+    # pairs. Only this VERIFY stage is exact by construction: a given
+    # candidate pair scores bit-identically to the SQL engine under
+    # both engine settings. Candidate GENERATION is not: under
+    # engine="arrow" the band projector (hyperplane_band_rows) is a
+    # BLAS matmul whose summation order can flip the sign of a
+    # near-zero projection and so change the candidate set. Equal
+    # verdicts across engines are pinned only by the equivalence
+    # tests, not guaranteed.
     from nfl_data_pipeline_spark.operators.similarity import (
         _grouped_pair_scores,
     )

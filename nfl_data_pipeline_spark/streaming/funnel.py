@@ -44,21 +44,25 @@ Scale: per batch the vocab rewrite is O(|vocab|) across _NB buckets
 merge when the vocabulary itself is huge), fingerprints grow
 append-only, and counts stay at #sources rows. The dedup gate's
 registry probe is bloom-prefiltered (operators/bloom.py): the bitmap
-sidecar moves atomically with every fps commit, so a bloom-negative
-fp is PROVABLY new and skips the registry entirely, and the
-bloom-positive remainder (true dups + ~fpp false positives) joins
-only the registry buckets it hashes into. What that buys, precisely:
-the per-batch registry SHUFFLE drops from O(registry) to O(dups +
-fpp·batch); the registry SCAN is only pruned bucket-wise and stays
-O(registry) when the maybe-set covers all buckets (uniform hashes do,
-for any batch larger than a few × _NB). Measured consequence
+sidecar moves atomically with the fps commit it covers, so a
+bloom-negative fp is PROVABLY new and skips the registry entirely,
+and the bloom-positive remainder (true dups + ~fpp false positives)
+joins only the registry buckets it hashes into. What that buys,
+precisely: the per-batch registry SHUFFLE drops from O(registry) to
+O(dups + fpp·batch); the registry SCAN is only pruned bucket-wise
+and stays O(registry) when the maybe-set covers all buckets (uniform
+hashes do, for any batch larger than a few × _NB). Measured consequence
 (tools/funnel_bloom_scale.py, SCALING.md): on local[32] with a warm
 page cache the scan dominates and the plain broadcast/shuffle join
 wins to ≥32M registry fps, so the bloom engages only past
 ``bloom_engage_bytes`` (default sized from that measurement); on a
 multi-executor cluster the scan parallelizes while shuffle bandwidth
 is the scarce resource, which moves the engage point down toward the
-broadcast-join limit — it is a deploy dial, not a constant.
+broadcast-join limit — it is a deploy dial, not a constant. Below
+that size no probe reads the bitmap, so those commits carry a null
+sidecar pointer and pay no bloom upkeep; the first commit at or past
+it bootstraps the bitmap from the registry in one pass (sound: it
+covers every committed fp).
 """
 
 from __future__ import annotations
@@ -95,10 +99,13 @@ class FunnelState:
     and for registries whose key distribution defeats a bloom (none
     known).
 
-    The bloom is MAINTAINED on every commit (O(batch)) but only
-    ENGAGED on the probe side once the registry exceeds
+    The bloom is ENGAGED on the probe side once the registry exceeds
     ``bloom_engage_bytes`` — below that the plain join is strictly
-    cheaper. The default is the measured LOCAL crossover (~4 GiB:
+    cheaper — and MAINTAINED (O(batch) per commit) only once the
+    registry has reached that size: below it, commits carry a null
+    sidecar pointer and write no bitmap, and the first maintaining
+    commit bootstraps the bloom from the registry in one pass. The
+    default is the measured LOCAL crossover (~4 GiB:
     tools/funnel_bloom_scale.py shows the plain join winning to
     ≥32M fps / 1.2 GB on local[32], both paths scan-bound); deploys
     where shuffle bandwidth, not scan, is the scarce resource should
@@ -527,8 +534,13 @@ def process_funnel_batch(
         # later yields bloom FALSE NEGATIVES (dups pass the dedup
         # gate). A null pointer makes fp_bloom fall back to the
         # one-pass bloom_from_df bootstrap, which is always sound.
+        # Below the engage size no probe reads the bloom, so it is not
+        # maintained either; the first batch at or past it bootstraps.
         meta = {"bloom": None}
-        if state.use_bloom:
+        if (
+            state.use_bloom
+            and state.fps.live_bytes() >= state.bloom_engage_bytes
+        ):
             nb = bloom or state.fp_bloom(spark) or Bloom.empty(
                 state.bloom_capacity, state.bloom_fpp
             )

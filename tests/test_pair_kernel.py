@@ -172,6 +172,39 @@ def test_winner_verdicts_no_registry(spark):
     assert got == {5: (5, 1), 6: (6, 1), 7: (6, 0)}
 
 
+def test_winner_verdicts_only_reg_1_nodes_win(spark, monkeypatch):
+    """Registry membership is ``_reg == 1`` on both paths. A ``_reg =
+    0`` node must not win its component, even as its min id, and the
+    driver path and the forced distributed fallback give equal
+    verdicts."""
+    from nfl_data_pipeline_spark.operators import dedup
+
+    base = spark.createDataFrame([(1,), (2,), (3,), (4,)], "doc_id long")
+    # component {1, 0, 100}: 0 is _reg = 0, 100 is registered → 100;
+    # component {3, 4, 60}: no registered node → min node 3, not 60
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 100), (3, 4), (3, 60)], "doc_a long, doc_b long"
+    )
+    reg = spark.createDataFrame(
+        [(0, 0), (100, 1), (60, 0)], "doc_id long, _reg int"
+    )
+
+    def verdicts():
+        return {
+            r["doc_id"]: (r["dup_of"], r["keep"])
+            for r in dedup.registry_winner_verdicts(
+                spark, base, edges, reg
+            ).collect()
+        }
+
+    driver = verdicts()
+    with monkeypatch.context() as m:
+        m.setattr(dedup, "_union_find_rows", lambda *a, **k: None)
+        fallback = verdicts()
+    assert driver == {1: (100, 0), 2: (2, 1), 3: (3, 1), 4: (3, 0)}
+    assert fallback == driver
+
+
 def test_texthash_engine_dial_is_bit_identical(spark, monkeypatch):
     """SPARK_GRAFT_TEXTHASH_ENGINE=arrow must reproduce the SQL text
     hash pipeline exactly — sids element ORDER included (the gate

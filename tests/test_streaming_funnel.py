@@ -4,6 +4,7 @@ and crash/replay idempotence through the tx state tables."""
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -170,6 +171,15 @@ def test_streaming_wiring_checkpoint_rollback(spark, tmp_path, batch_twin):
     assert _counts_map(read_funnel_counts(spark, state)) == batch_twin
 
 
+def _doc_halves(spark):
+    docs = load(spark, SF_SMOKE, "documents")
+    ids = sorted(r[0] for r in docs.select("doc_id").collect())
+    cut = ids[len(ids) // 2]
+    return docs.filter(F.col("doc_id") < cut), docs.filter(
+        F.col("doc_id") >= cut
+    )
+
+
 def test_bloom_toggle_has_no_false_negatives(spark, tmp_path):
     """fps committed while use_bloom=False must NOT stay invisible to
     a stale bloom sidecar after use_bloom is re-enabled (ADVICE r3:
@@ -177,11 +187,7 @@ def test_bloom_toggle_has_no_false_negatives(spark, tmp_path):
     so later batches saw bloom false negatives and dups passed the
     dedup gate). The fix nulls the pointer, forcing the one-pass
     bootstrap."""
-    docs = load(spark, SF_SMOKE, "documents")
-    ids = sorted(r[0] for r in docs.select("doc_id").collect())
-    cut = ids[len(ids) // 2]
-    a = docs.filter(F.col("doc_id") < cut)
-    b = docs.filter(F.col("doc_id") >= cut)
+    a, b = _doc_halves(spark)
 
     root = str(tmp_path / "state")
     on = FunnelState(root, bloom_engage_bytes=0)  # engage immediately
@@ -199,6 +205,52 @@ def test_bloom_toggle_has_no_false_negatives(spark, tmp_path):
     flagged = process_funnel_batch(spark, redo, FunnelState(
         root, bloom_engage_bytes=0
     ), "b2")
+    n_redo = redo.count()
+    dup = flagged.filter(
+        F.col("first_doc").isNotNull() & (F.col("pass_dedup") == 0)
+    ).count()
+    assert dup == n_redo, f"{n_redo - dup} dups slipped the gate"
+
+
+def _sidecars(state):
+    side = os.path.join(state.fps.root, "sidecar")
+    if not os.path.isdir(side):
+        return []
+    return [f for f in os.listdir(side) if f.endswith(".blm")]
+
+
+def test_bloom_not_maintained_below_engage_size(spark, tmp_path):
+    """Below ``bloom_engage_bytes`` no probe reads the bloom, so no
+    batch pays for it: a default state runs two batches without
+    writing a sidecar, and the registry carries a null pointer."""
+    a, b = _doc_halves(spark)
+    state = FunnelState(str(tmp_path / "state"))
+    process_funnel_batch(spark, a, state, "b0")
+    process_funnel_batch(spark, b, state, "b1")
+    assert _sidecars(state) == []
+    assert state.fps.meta()["bloom"] is None
+
+
+def test_bloom_bootstraps_when_registry_reaches_engage_size(
+    spark, tmp_path
+):
+    """The engage size sits between the registry batch 1 sees (empty)
+    and the one batch 2 sees. Batch 1 keeps no bloom; batch 2
+    bootstraps it from the registry and writes a sidecar; a third
+    batch, probing through that bloom, flags every batch-1 text
+    re-fed under a fresh doc_id as a dup (no false negatives)."""
+    a, b = _doc_halves(spark)
+    root = str(tmp_path / "state")
+    first = FunnelState(root)
+    process_funnel_batch(spark, a, first, "b0")
+    assert first.fps.meta()["bloom"] is None
+    state = FunnelState(root, bloom_engage_bytes=first.fps.live_bytes())
+    process_funnel_batch(spark, b, state, "b1")
+    assert len(_sidecars(state)) == 1
+    assert state.fps.meta()["bloom"]
+
+    redo = a.withColumn("doc_id", F.col("doc_id") + 10_000_000)
+    flagged = process_funnel_batch(spark, redo, state, "b2")
     n_redo = redo.count()
     dup = flagged.filter(
         F.col("first_doc").isNotNull() & (F.col("pass_dedup") == 0)

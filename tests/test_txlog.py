@@ -498,6 +498,39 @@ def test_schema_evolution_latest_commit_wins(spark, txroot):
     assert t.read(spark).count() == 8
 
 
+@pytest.mark.smoke
+def test_read_opens_snapshot_without_spark_jobs(spark, txroot):
+    """Opening a snapshot is driver work. Past the first read (the
+    one schema inference), ``read`` submits no Spark job at a new
+    version — the schema cache is keyed on the anchor's footer
+    schema, not the version — nor once the snapshot lists more than
+    32 files (no parallel listing job)."""
+    t = TxTable(txroot)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def read_jobs(group):
+        sc.setJobGroup(group, "tx snapshot read")
+        try:
+            df = t.read(spark)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return df, list(tracker.getJobIdsForGroup(group))
+
+    for i in range(6):
+        rows = spark.range(i * 8, i * 8 + 8).select(
+            F.col("id").alias("k"), (F.col("id") % 8).alias("p")
+        )
+        t.commit(t.stage_files(rows, "p"), batch_id=f"b{i}")
+        df, jobs = read_jobs(f"txread-{i}")
+        if i > 0:
+            assert jobs == [], f"read at v{i} submitted jobs {jobs}"
+    assert len(t.live_files()) > 32
+    assert df.schema == spark.read.parquet(t.manifest()["schema_file"]).schema
+    assert len(t._schema_cache) == 1
+    assert sorted(r["k"] for r in df.collect()) == list(range(48))
+
+
 def test_type_change_rejected_at_commit(spark, txroot):
     """Changing a column's type is not evolution — the commit must
     fail loudly instead of leaving a table whose pinned reads break."""
