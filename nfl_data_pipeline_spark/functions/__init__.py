@@ -3,6 +3,7 @@ the domain scalar vocabulary (``scalars``) the reference uses."""
 
 from nfl_data_pipeline_spark.functions.rsem import (  # noqa: F401
     r_cor,
+    r_first,
     r_mean,
     r_mean_nan,
     r_round,

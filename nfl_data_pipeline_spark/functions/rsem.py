@@ -86,6 +86,21 @@ def r_cumsum(col: Column | str, partition_by, order_by) -> Column:
     return F.sum(_c(col)).over(w)
 
 
+def r_first(order, *cols: Column | str) -> Column:
+    """Grouped ``dplyr::first(x)`` in an explicit row order
+    (R/epa_predict.R:180,202; R/wilson_game_pass_freq.R:41-45), as ONE
+    aggregate: the min of ``struct(*order, *cols)``. Read the wanted
+    values as fields of the result (``r_first(o, "name")["name"]``).
+
+    Same row as ``first(x)`` over a window ordered ascending by
+    ``order``: structs compare field by field with NULLs first and NaN
+    last, and a NULL value on the first row is returned as is. Ties on
+    ``order`` fall to the value fields, so the pick is deterministic.
+    Unlike the window it aggregates map-side before any exchange."""
+    keys = [_c(o).alias(f"_order{i}") for i, o in enumerate(order)]
+    return F.min(F.struct(*keys, *cols))
+
+
 def r_ifelse_na(col: Column | str, fallback: Column | str) -> Column:
     """``ifelse(is.na(x), y, x)`` — NA-coalesce
     (darko/2_ourlads_projections.R:83)."""

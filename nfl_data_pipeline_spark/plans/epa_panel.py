@@ -17,7 +17,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nfl_data_pipeline_spark.functions import clamp, r_mean, r_mean_nan, r_sum
+from nfl_data_pipeline_spark.functions import clamp, r_first, r_mean, r_mean_nan, r_sum
 from nfl_data_pipeline_spark.operators.relational import r_join, top1_per_group
 
 # The metrics lagged by QB across seasons — the reference's 13-column
@@ -217,10 +217,8 @@ def passing_stats(pbp: DataFrame) -> DataFrame:
             | (F.col("interception") == 1)
         )
     )
-    wname = Window.partitionBy("id", "season").orderBy("game_id", "play_id")
-    sel = sel.withColumn("_name", F.first("name").over(wname))
     agg = sel.groupBy("id", "season").agg(
-        F.first("_name").alias("name"),
+        r_first(["game_id", "play_id"], "name")["name"].alias("name"),
         # STRICT sums (R defaults, :181-183): a single NA
         # yards_gained / interception / pass_touchdown NAs the whole
         # QB-season count in R (and aya/ya/tdint derived from it);
@@ -289,19 +287,15 @@ def qb_seasons(
         & (F.col("season_type") == "REG")
         & F.col("id").isNotNull()
     ).withColumn("epa_c", clamp("qb_epa", -4.5, 1e9))
-    wname = Window.partitionBy("id", "season").orderBy("game_id", "play_id")
-    named = plays.withColumn(
-        "qb_name", F.first("name").over(wname)  # ordered first (A5)
-    ).withColumn(
-        # dplyr::first(posteam) (:202) — play order made explicit; a
-        # mid-season trade makes this differ from any min/max pick
-        "qb_team", F.first("posteam").over(wname)
-    )
+    # ordered first (A5): dplyr::first(name/posteam) (:180, :202) — play
+    # order made explicit; a mid-season trade makes posteam differ
+    # from any min/max pick
+    first = r_first(["game_id", "play_id"], "name", "posteam")
     return (
-        named.groupBy("id", "season")
+        plays.groupBy("id", "season")
         .agg(
-            F.first("qb_name").alias("name"),
-            F.first("qb_team").alias("posteam"),
+            first["name"].alias("name"),
+            first["posteam"].alias("posteam"),
             F.count("*").cast("bigint").alias("n_plays"),
             # STRICT aggregates (R defaults, no na.rm — :205-211):
             # the :196 load filter guarantees the ORIGINAL epa column

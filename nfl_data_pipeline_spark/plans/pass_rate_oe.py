@@ -4,17 +4,18 @@
 ``nflfastR::add_xpass()`` (U2) appends a modeled pass probability from
 situation features; ``pass_oe = 100*(pass - xpass)`` (``:20-24``); team
 aggregates join the broadcast teams dim (``:25-38``). The model here is
-a fixed-coefficient logistic (the engine contract — vectorized
-situational scoring — not nflfastR's fitted weights; SURVEY §7
-hard-part 5).
+a fixed-coefficient logistic (stand-in weights, not nflfastR's fitted
+ones; SURVEY §7 hard-part 5), scored as a native Catalyst expression so
+the analysis never leaves the JVM. The registry's ``udf_model_score``
+keeps the pandas-UDF scoring shape (U1/U2).
 """
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from nfl_data_pipeline_spark.functions import inv_logit
 
 # situation → pass-probability coefficients (stand-in artifact)
 _COEF = {
@@ -26,28 +27,6 @@ _COEF = {
     "half_seconds": -0.00035,
     "wp_dist": -1.2,  # |wp - 0.5|: trailing/leading teams diverge
 }
-
-
-def _make_xpass():
-    @F.pandas_udf(T.DoubleType())
-    def xpass(
-        down: pd.Series, ydstogo: pd.Series, half_seconds: pd.Series, wp: pd.Series
-    ) -> pd.Series:
-        import numpy as np
-
-        c = _COEF
-        z = (
-            c["b0"]
-            + c["down2"] * (down == 2)
-            + c["down3"] * (down == 3)
-            + c["down4"] * (down == 4)
-            + c["ydstogo"] * ydstogo
-            + c["half_seconds"] * half_seconds
-            + c["wp_dist"] * (wp - 0.5).abs()
-        )
-        return 1.0 / (1.0 + np.exp(-z))
-
-    return xpass
 
 
 def add_xpass(pbp: DataFrame) -> DataFrame:
@@ -63,9 +42,19 @@ def add_xpass(pbp: DataFrame) -> DataFrame:
         & F.col("epa").isNotNull()
         & ((F.col("pass") == 1) | (F.col("rush") == 1))
     )
-    xp = _make_xpass()
+    c, down = _COEF, F.col("down")
+    z = (
+        c["b0"]
+        + c["down2"] * (down == 2).cast("double")
+        + c["down3"] * (down == 3).cast("double")
+        + c["down4"] * (down == 4).cast("double")
+        + c["ydstogo"] * F.col("ydstogo")
+        + c["half_seconds"] * F.col("half_seconds_remaining")
+        + c["wp_dist"] * F.abs(F.col("wp") - 0.5)
+    )
+    # NULL where a feature is NULL or NaN (a NaN feature makes z NaN)
     scored = plays.withColumn(
-        "xpass", xp("down", "ydstogo", "half_seconds_remaining", "wp")
+        "xpass", F.nanvl(inv_logit(z), F.lit(None).cast("double"))
     )
     return scored.withColumn(
         "pass_oe", 100.0 * (F.col("pass") - F.col("xpass"))

@@ -28,7 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from nfl_data_pipeline_spark.functions.rsem import r_mean, r_mean_nan
+from nfl_data_pipeline_spark.functions.rsem import r_first, r_mean, r_mean_nan
 
 
 def with_game_over_flag(
@@ -66,16 +66,12 @@ def per_game_summary(
     (R/wilson_game_pass_freq.R:38-46): mean(pass), first(season),
     first(week), mean qb EPA on the named QB's plays (na.rm),
     first(defteam), first(home). `first` is over the explicit play
-    order (A5); season/week/defteam/home are game-constant, the
-    ordered first still mirrors dplyr's frame-order semantics."""
+    order (A5, ``r_first``); season/week/defteam/home are
+    game-constant, the ordered first still mirrors dplyr's frame-order
+    semantics."""
     flagged = with_game_over_flag(pbp, team)
     alive = flagged.filter(
         (F.col("game_over") == 0) & (F.col("down") <= 2)
-    )
-    wfirst = (
-        Window.partitionBy("game_id")
-        .orderBy("play_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     )
     # :35 if_else(home_team == team, 1, 0): a NULL home_team is NA in
     # R (NA == "SEA" is NA), not 0 — keep the NULL so the label leg
@@ -84,30 +80,21 @@ def per_game_summary(
         F.col("home_team").isNotNull(), 0
     )
     wilson_epa = F.when(F.col("name") == qb_name, F.col("qb_epa"))
-    return (
-        alive.select(
-            "game_id",
-            "pass",
-            wilson_epa.alias("_wilson_epa"),
-            F.first("season").over(wfirst).alias("_season"),
-            F.first("week").over(wfirst).alias("_week"),
-            F.first("defteam").over(wfirst).alias("_defteam"),
-            F.first(home_flag).over(wfirst).alias("_home"),
-        )
-        .groupBy("game_id")
-        .agg(
-            # :40 mean(pass) — R's STRICT default (no na.rm): one NA
-            # pass indicator NAs the game's rate (r9 fix: F.avg skips)
-            r_mean("pass").alias("pass"),
-            F.first("_season").alias("season"),
-            F.first("_week").alias("week"),
-            # R mean(x, na.rm=T) of an ALL-NA vector is NaN, not NA —
-            # a game the named QB never played in yields NaN exactly
-            # as the reference frame does (SQL AVG alone gives NULL)
-            r_mean_nan("_wilson_epa").alias("wilson_epa"),
-            F.first("_defteam").alias("defteam"),
-            F.first("_home").alias("home"),
-        )
+    first = r_first(
+        ["play_id"], "season", "week", "defteam", home_flag.alias("home")
+    )
+    return alive.groupBy("game_id").agg(
+        # :40 mean(pass) — R's STRICT default (no na.rm): one NA
+        # pass indicator NAs the game's rate (r9 fix: F.avg skips)
+        r_mean("pass").alias("pass"),
+        first["season"].alias("season"),
+        first["week"].alias("week"),
+        # R mean(x, na.rm=T) of an ALL-NA vector is NaN, not NA —
+        # a game the named QB never played in yields NaN exactly
+        # as the reference frame does (SQL AVG alone gives NULL)
+        r_mean_nan(wilson_epa).alias("wilson_epa"),
+        first["defteam"].alias("defteam"),
+        first["home"].alias("home"),
     )
 
 

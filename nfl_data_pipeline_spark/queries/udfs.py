@@ -2,9 +2,11 @@
 
 - ``udf_model_score``: the xpass/dakota shape (U1/U2): an
   Arrow-vectorized pandas_udf applying a fixed logistic model, plus
-  the over-expected delta column. (Production swaps coefficients for
-  a persisted sklearn artifact; the engine contract — batched
-  Series→Series scoring — is identical.)
+  the over-expected delta column. It stays the pandas-UDF scorer that
+  covers SURVEY U1/U2; ``plans.pass_rate_oe`` scores its own
+  fixed-coefficient xpass as a native expression. (Production swaps
+  coefficients for a persisted sklearn artifact; the engine contract —
+  batched Series→Series scoring — is identical.)
 - ``vig_removal``: the 10-iteration power-method fixed point of
   R/nfl_draft_espn_dk.R:28-40, as a driver-side loop of narrow
   transforms (U6); oracle = the same 10 stages unrolled as CTEs.

@@ -16,6 +16,7 @@ from nfl_data_pipeline_spark.functions import (
     logit,
     r_cor,
     r_cumsum,
+    r_first,
     r_ifelse_na,
     r_mean,
     r_round,
@@ -567,3 +568,59 @@ def test_grouped_irls_exact_degenerate_and_quoted_groups(spark):
     )
     with _pt.raises(ValueError, match="NULL g group"):
         grouped_logistic_irls_exact(with_null, "g", "y", "x1", "x2")
+
+
+def test_r_first_matches_ordered_window_first(spark):
+    """``r_first`` (min of an ordered struct) picks the same row as the
+    ``first(x).over(ordered window)`` form it replaces: rows stored out
+    of play order, a NULL value on the first play (returned as is), a
+    NaN play_id (sorts last) and a NULL game_id / play_id (sort
+    first). The pick must not depend on the shuffle partition count."""
+    from pyspark.sql.window import Window
+
+    nan = float("nan")
+    rows = [
+        # stored out of order; the first play's name is NULL
+        ("a", "g2", 5.0, "late", "X"),
+        ("a", "g1", 30.0, "mid", "Y"),
+        ("a", "g1", 10.0, None, "Z"),
+        # NaN sorts after every number, NULL before
+        ("b", "g1", nan, "nan", "N"),
+        ("b", "g1", 1.0, "one", "O"),
+        ("b", "g1", None, "null", "U"),
+        ("c", "g1", nan, "nan", "N"),
+        ("c", "g1", 2.0, "two", "T"),
+        # a NULL leading key sorts first
+        ("d", "g0", 1.0, "g0", "G"),
+        ("d", None, 99.0, "nogame", None),
+    ]
+    want = {
+        "a": (None, "Z"),
+        "b": ("null", "U"),
+        "c": ("two", "T"),
+        "d": ("nogame", None),
+    }
+    df = spark.createDataFrame(
+        rows, "g string, game_id string, play_id double, name string, team string"
+    ).repartition(3)
+    order = ["game_id", "play_id"]
+    w = Window.partitionBy("g").orderBy(*order)
+    windowed = (
+        df.withColumn("_n", F.first("name").over(w))
+        .withColumn("_t", F.first("team").over(w))
+        .groupBy("g")
+        .agg(F.first("_n").alias("name"), F.first("_t").alias("team"))
+    )
+    first = r_first(order, "name", "team")
+    aggregated = df.groupBy("g").agg(
+        first["name"].alias("name"), first["team"].alias("team")
+    )
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for n in (1, 7):
+            spark.conf.set("spark.sql.shuffle.partitions", str(n))
+            old = {r["g"]: (r["name"], r["team"]) for r in windowed.collect()}
+            new = {r["g"]: (r["name"], r["team"]) for r in aggregated.collect()}
+            assert old == want and new == want, n
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)

@@ -845,7 +845,7 @@ def test_sis_known_entity_spot_check(nfl):
 
 
 # ---------------------------------------------------------------------------
-# pass_rate_oe — pandas_udf scorer
+# pass_rate_oe — native logistic scorer
 # ---------------------------------------------------------------------------
 
 
@@ -880,6 +880,64 @@ def test_pass_rate_oe(nfl, nfl_pd):
     want_def = sel.groupby("defteam")["pass"].mean()
     for _, r in dout.iterrows():
         assert r["pass_rate"] == pytest.approx(want_def[r["defteam"]])
+
+
+def test_xpass_null_and_nan_features_score_null(spark):
+    """A NULL or NaN ``wp`` and a NULL ``ydstogo`` give NULL xpass and
+    NULL pass_oe (never NaN), so team_pass_oe's ``!is.na(pass_oe)``
+    filter drops them."""
+    rows = [
+        (1, 1.0, "SEA", 0.1, 1, 0, 10, 900.0, 0.5),
+        (2, 1.0, "SEA", 0.1, 1, 0, 10, 900.0, None),
+        (3, 1.0, "SEA", 0.1, 1, 0, 10, 900.0, float("nan")),
+        (4, 1.0, "SEA", 0.1, 0, 1, None, 900.0, 0.5),
+    ]
+    pbp = spark.createDataFrame(
+        rows,
+        "k int, down double, posteam string, epa double, pass int,"
+        " rush int, ydstogo int, half_seconds_remaining double, wp double",
+    )
+    got = {
+        r["k"]: (r["xpass"], r["pass_oe"])
+        for r in pass_rate_oe.add_xpass(pbp).collect()
+    }
+    assert got[1][0] is not None and 0 < got[1][0] < 1
+    assert got[2] == got[3] == got[4] == (None, None)
+
+
+def test_xpass_matches_numpy_model(nfl, nfl_pd):
+    """xpass is the fixed-coefficient logistic of ``_COEF``: equal to a
+    numpy evaluation of the same terms to within 1 ulp (Spark's exp is
+    fdlibm, numpy's depends on the CPU), and scored without a Python
+    eval node in the plan."""
+    scored = pass_rate_oe.add_xpass(nfl["cleaned_pbp"])
+    plan = scored._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
+    got = {
+        (r["game_id"], r["play_id"]): r["xpass"]
+        for r in scored.select("game_id", "play_id", "xpass").collect()
+    }
+    pbp = nfl_pd["cleaned_pbp"]
+    pbp = pbp[
+        pbp["down"].notna()
+        & pbp["posteam"].notna()
+        & pbp["epa"].notna()
+        & ((pbp["pass"] == 1) | (pbp["rush"] == 1))
+    ]
+    c = pass_rate_oe._COEF
+    z = (
+        c["b0"]
+        + c["down2"] * (pbp["down"] == 2)
+        + c["down3"] * (pbp["down"] == 3)
+        + c["down4"] * (pbp["down"] == 4)
+        + c["ydstogo"] * pbp["ydstogo"]
+        + c["half_seconds"] * pbp["half_seconds_remaining"]
+        + c["wp_dist"] * (pbp["wp"] - 0.5).abs()
+    )
+    want = 1.0 / (1.0 + np.exp(-z.to_numpy()))
+    keys = list(zip(pbp["game_id"], pbp["play_id"]))
+    assert len(got) == len(keys) > 0
+    assert [got[k] for k in keys] == pytest.approx(list(want), rel=1e-15)
 
 
 # ---------------------------------------------------------------------------

@@ -261,3 +261,41 @@ def test_profile_table_approx_no_expand(spark):
     # distinct aggregate (the r10 split)
     exact = plan_of(spark, "profile_table")
     assert "Expand" in exact
+
+
+def test_play_order_first_is_one_aggregate(spark):
+    """``dplyr::first`` in play order (A5) is a min of an ordered
+    struct, not a sorted window plus a second aggregate: the three
+    plans that take it carry no ``first`` window, and passing_stats
+    aggregates map-side before its one Exchange instead of shuffling
+    every pass attempt. per_game_summary keeps exactly one Window —
+    the game-over cumsum of ``with_game_over_flag``."""
+    from nfl_data_pipeline_spark.plans import epa_panel, wilson
+
+    play = {
+        "game_id": "2020_01_SEA_ATL", "play_id": 10.0, "season": 2020,
+        "week": 1, "season_type": "REG", "posteam": "SEA",
+        "home_team": "SEA", "defteam": "ATL", "down": 1, "ydstogo": 10,
+        "play_type": "pass", "rush": 0, "pass": 1, "epa": 0.1, "wp": 0.5,
+        "qb_epa": 0.1, "cpoe": 1.0, "success": 1.0, "yards_gained": 5.0,
+        "complete_pass": 1, "incomplete_pass": 0, "interception": 0,
+        "pass_touchdown": 0, "name": "R.Wilson", "id": "00-1",
+    }
+    pbp = spark.createDataFrame([tuple(play.values())], list(play))
+    plans = {
+        "passing_stats": epa_panel.passing_stats(pbp),
+        "qb_seasons": epa_panel.qb_seasons(pbp),
+        "per_game_summary": wilson.per_game_summary(pbp, "SEA"),
+    }
+    plans = {
+        k: df._jdf.queryExecution().executedPlan().toString()
+        for k, df in plans.items()
+    }
+    assert "Window" not in plans["passing_stats"]
+    assert "Window" not in plans["qb_seasons"]
+    assert plans["per_game_summary"].count("Window [") == 1
+    lines = plans["passing_stats"].splitlines()
+    exchanges = [i for i, l in enumerate(lines) if "Exchange" in l]
+    partial = [i for i, l in enumerate(lines) if "partial_min(struct" in l]
+    # tree order: the partial aggregate prints below (after) its Exchange
+    assert len(exchanges) == 1 and partial and partial[0] > exchanges[0]
