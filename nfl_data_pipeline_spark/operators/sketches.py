@@ -225,9 +225,11 @@ def misra_gries_sketches(
 
     Guarantee (the reason the two-pass heavy-hitter below is exact):
     a key with partition count c > n_p/(capacity+1) survives that
-    partition's sketch. Batches fold in via the mergeable-MG rule
-    (add value_counts, then subtract the (capacity+1)-th largest
-    count and drop non-positive — Agarwal et al., PODS'12)."""
+    partition's sketch. Arrow batches fold in via the mergeable-MG
+    rule (add value_counts, then subtract the (capacity+1)-th largest
+    count and drop non-positive — Agarwal et al., PODS'12). The one
+    caller is ``heavy_hitters``; the streaming frequent-items state
+    folds exact batch counts natively instead."""
     import pandas as pd
 
     from pyspark.sql import types as T

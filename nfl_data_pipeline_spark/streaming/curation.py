@@ -141,14 +141,14 @@ def process_curation_batch(
     # replay markers; each is internally atomic, and a crash leaving
     # any subset committed replays to convergence because every
     # commit carries the batch id. The frequent fold (the heaviest:
-    # a sketch pass over kept text) overlaps the count/histogram
-    # accounting, which since r13 is ONE bounded collect: the
-    # per-(source, bucket) histogram delta determines the per-source
-    # near-dup survivor count too (every kept doc falls in exactly
-    # one bucket; NULL-length docs ride a NULL-bucket row that the
-    # histogram merge excludes), so both tables merge from the same
-    # driver rows with zero further Spark jobs on the
-    # metadata-sized path.
+    # an exact n-gram count over kept text, one native aggregate)
+    # overlaps the count/histogram accounting, which since r13 is
+    # ONE bounded collect: the per-(source, bucket) histogram delta
+    # determines the per-source near-dup survivor count too (every
+    # kept doc falls in exactly one bucket; NULL-length docs ride a
+    # NULL-bucket row that the histogram merge excludes), so both
+    # tables merge from the same driver rows with zero further Spark
+    # jobs on the metadata-sized path.
     with ThreadPoolExecutor(max_workers=1) as pool:
         fut = (
             pool.submit(
@@ -293,15 +293,15 @@ def _kept_ngrams(kept: DataFrame, n: int) -> DataFrame:
 def read_frequent_ngrams(
     spark: SparkSession, state: CurationState, phi_inv: int | None = None
 ):
-    """Heavy-hitter report over everything KEPT so far (None when the
-    stage is off or nothing has committed): ``(key, count_lower,
-    count_upper, certain)`` per streaming/frequent.read_frequent_state."""
+    """Heavy-hitter report over everything KEPT so far: ``(key,
+    count_lower, count_upper, certain)`` per
+    streaming/frequent.read_frequent_state — None until the stage has
+    committed a batch (always None with the stage off), an empty
+    report once it has but no key clears the threshold."""
     from nfl_data_pipeline_spark.streaming.frequent import (
         read_frequent_state,
     )
 
-    if state.frequent.latest_version() is None:
-        return None
     return read_frequent_state(
         spark,
         state.frequent,

@@ -3,14 +3,13 @@ of ``heavy_hitter_ngrams`` (operators/sketches.heavy_hitters).
 
 The one-shot operator re-scans the corpus for exact candidate counts;
 a stream cannot (past batches are gone). What CAN be maintained with
-bounded state is a merged Misra-Gries sketch: per batch, the
-executors produce per-partition MG sketches (one Arrow pass, the same
-primitive the batch operator uses), the bounded sketch rows merge
-into the state table by summed counts, and the state is re-truncated
-to ``capacity`` by the mergeable-MG rule (subtract the
-(capacity+1)-th largest count, drop non-positive — Agarwal et al.,
-PODS'12). The merged sketch keeps the MG guarantee across any batch
-arrival order:
+bounded state is a merged Misra-Gries summary: per batch, the
+batch's EXACT key counts (a zero-error mergeable summary) add into
+the state table by summed counts, and the state is re-truncated to
+``capacity`` by the mergeable-MG rule (subtract the (capacity+1)-th
+largest count, drop non-positive — Agarwal et al., PODS'12). The
+merged summary keeps the MG guarantee across any batch arrival
+order:
 
 - every key with true count ≥ N/(capacity+1) is IN the state;
 - per key, ``mg_count ≤ true ≤ mg_count + err`` with
@@ -20,20 +19,19 @@ arrival order:
 So a ``phi_inv``-heavy query reports two tiers: ``certain`` keys
 (lower bound alone clears the threshold) and candidates whose upper
 bound clears it — and NEVER misses a truly heavy key when
-``capacity ≥ phi_inv``.
+``capacity ≥ phi_inv``. Exact batch counts make the state a function
+of the batch sequence alone: the input partitioning cannot change it.
 
-State shape: one bounded partition (≤ capacity rows — sketch, not
-corpus) in a tx table; the stream length and capacity ride the
-manifest ``meta`` so they publish atomically with the rows; batch ids
-give replay idempotence like every other gate. The sketch merge is
-DISTRIBUTED: state rows union with the batch's per-partition sketch
-rows, ``groupBy(key).sum`` merges them executor-side (map-side
-combine), and the (capacity+1)-th-largest subtraction resolves via a
-bounded top-k (TakeOrderedAndProject on the count column only). The
-driver sees O(capacity) values per batch — capacity+1 longs for the
-truncation threshold plus two 1-row aggregates — never the
-partitions × capacity candidate set, so the merge holds at any
-partition count.
+State shape: one bounded partition (≤ capacity rows) in a tx table;
+the stream length and capacity ride the manifest ``meta`` so they
+publish atomically with the rows; batch ids give replay idempotence
+like every other gate. The fold is ONE native aggregate with one
+exchange: batch rows ``(key, 1, _nb=1)`` union state rows ``(key,
+mg_count, _nb=0)`` under ``rollup(key)``, whose grand-total row
+carries ``n_batch`` in its ``_nb`` sum. Map-side combine bounds the
+shuffle by the batch's distinct keys (per map task, plus the state
+keys and one total row each) — never its row count — and no Python
+worker runs. The driver sees O(capacity) rows per batch.
 """
 
 from __future__ import annotations
@@ -41,7 +39,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from nfl_data_pipeline_spark.jobs.txlog import TxTable
-from nfl_data_pipeline_spark.operators.sketches import misra_gries_sketches
 
 _PART = "hh"  # the whole sketch lives in one bounded partition
 
@@ -68,32 +65,28 @@ def update_frequent_state(
             f"state built at capacity {prev_cap}, batch offered "
             f"{capacity} — one capacity per state table"
         )
-    # one Arrow pass over the batch (misra_gries_sketches), merged
-    # with the stored state executor-side; NULL-key rows carry each
-    # partition's total offered count, so their merged group IS
-    # n_batch. The whole fold is ONE bounded action (r13 — it was
-    # three: a checkpoint, an n_batch aggregate, a threshold top-k,
-    # then a second full collect): order the merged rows by count
-    # DESC (nulls first — the null group's count is the batch total,
-    # ≥ any single key's count, so the tie-safe sort keeps it on
-    # board) and take capacity + 2 rows. That bounded prefix contains
-    # (1) the null n_batch row (sorted first UNCONDITIONALLY — a
-    # long-lived state key's count can exceed one batch's total, so
-    # sorting nulls by count would evict it), (2) every possible
-    # survivor of the MG truncation — a survivor needs count > the
-    # (capacity+1)-th largest keyed count, and keyed rows beyond the
-    # prefix are ≤ it by construction — and (3) the truncation
-    # threshold itself. O(capacity) rows to the driver, exactly the
-    # contract the two-action form had.
-    sketches = misra_gries_sketches(
-        df.select(key_col).withColumnRenamed(key_col, "k"), "k", capacity
-    )
-    merged = sketches.select("key", "mg_count")
+    # exact batch counts and n_batch in one aggregate: NULL keys are
+    # not items, so the rollup's only NULL-key row is the grand
+    # total, whose _nb sum is the batch's keyed row count. The whole
+    # fold is ONE bounded action: order by count DESC with that row
+    # first (its mg_count also sums the state, so it must not compete
+    # on count) and take capacity + 2 rows — the n_batch row, every
+    # possible survivor of the MG truncation (a survivor needs count >
+    # the (capacity+1)-th largest keyed count, and keyed rows beyond
+    # the prefix are ≤ it), and the truncation threshold itself.
+    one = F.lit(1).cast("long")
+    merged = df.select(
+        F.col(key_col).cast("string").alias("key"),
+        one.alias("mg_count"),
+        one.alias("_nb"),
+    ).filter(F.col("key").isNotNull())
     existing = table.read(spark, version=base_v)
     if existing is not None:
-        merged = merged.unionByName(existing.select("key", "mg_count"))
-    merged = merged.groupBy("key").agg(
-        F.sum("mg_count").alias("mg_count")
+        merged = merged.unionByName(
+            existing.select("key", "mg_count", F.lit(0).alias("_nb"))
+        )
+    merged = merged.rollup("key").agg(
+        F.sum("mg_count").alias("mg_count"), F.sum("_nb").alias("_nb")
     )
     if capacity <= 20_000:
         top = (
@@ -109,7 +102,7 @@ def update_frequent_state(
         keyed = []
         for r in top:
             if r["key"] is None:
-                n_batch = int(r["mg_count"])
+                n_batch = int(r["_nb"])
             else:
                 keyed.append(r)
         if len(keyed) > capacity:
@@ -133,7 +126,7 @@ def update_frequent_state(
             for r in keyed
         ]
         schema = T.StructType(
-            list(merged.schema)
+            [merged.schema["key"], merged.schema["mg_count"]]
             + [T.StructField("_part", T.StringType(), False)]
         )
         adds = table.stage_rows_local(rows, schema, "_part")
@@ -141,13 +134,9 @@ def update_frequent_state(
         # large-capacity path: the driver only sees the n_batch row
         # and the threshold values, the state stays distributed
         merged = merged.localCheckpoint(eager=True)
-        n_batch = int(
-            merged.filter(F.col("key").isNull())
-            .agg(F.sum("mg_count"))
-            .first()[0]
-            or 0
-        )
-        merged = merged.filter(F.col("key").isNotNull())
+        total = merged.filter(F.col("key").isNull()).first()
+        n_batch = int(total["_nb"]) if total is not None else 0
+        merged = merged.filter(F.col("key").isNotNull()).drop("_nb")
         top = merged.select("mg_count").orderBy(
             F.desc("mg_count")
         ).limit(capacity + 1).collect()
@@ -181,16 +170,20 @@ def read_frequent_state(
     """Current heavy-hitter report: ``(key, count_lower, count_upper,
     certain)`` for every key whose UPPER bound clears N/phi_inv —
     ``certain`` marks keys whose lower bound alone clears it. Superset
-    guarantee per the module docstring; None for an empty state."""
+    guarantee per the module docstring; None when nothing has been
+    committed (a committed state the truncation emptied still
+    answers, with an empty report)."""
     from pyspark.sql import functions as F
 
     # pin ONE version for rows and meta — resolving them separately
     # lets a commit land in between and pair mismatched n_total with
     # stale rows, breaking the bracketing bound
     v = table.latest_version()
-    state = table.read(spark, version=v)
-    if state is None:
+    if v is None:
         return None
+    state = table.read(spark, version=v)
+    if state is None:  # committed, but the truncation emptied it
+        state = spark.createDataFrame([], "key string, mg_count bigint")
     meta = table.meta(v)
     n_total = int(meta.get("hh_n_total", 0))
     capacity = int(meta.get("hh_capacity", phi_inv))

@@ -106,12 +106,12 @@ def test_arrival_order_invariant_guarantees(spark, tmp_path):
             assert r["count_lower"] <= true[k] <= r["count_upper"]
 
 
-def _driver_reference_merge(sketch_batches, capacity):
-    """The pre-distribution driver-side merge, kept as the oracle:
-    fold each batch's (key, count) sketch rows into a dict, then
-    apply the mergeable-MG truncation."""
+def _driver_reference_merge(batch_summaries, capacity):
+    """The driver-side merge, kept as the oracle: fold each batch's
+    (key, count) summary rows into a dict, then apply the
+    mergeable-MG truncation."""
     counters: dict[str, int] = {}
-    for rows in sketch_batches:
+    for rows in batch_summaries:
         for k, c in rows:
             counters[k] = counters.get(k, 0) + c
         if len(counters) > capacity:
@@ -124,37 +124,117 @@ def _driver_reference_merge(sketch_batches, capacity):
 
 
 def test_distributed_merge_equals_driver_merge(spark, tmp_path):
-    """The executor-side groupBy-sum + top-k truncation must produce
-    exactly the state the old driver-side dict merge produced, given
-    the same per-batch sketches."""
-    from pyspark.sql import functions as F
-
-    from nfl_data_pipeline_spark.operators.sketches import (
-        misra_gries_sketches,
-    )
-
+    """The executor-side rollup-sum + top-k truncation must produce
+    exactly the state the driver dict merge produces from the same
+    per-batch summaries — the batches' exact key counts, which is
+    what the fold merges."""
     batches, _ = _batches(7)
     t = TxTable(str(tmp_path / "hh_eq"))
-    sketch_batches = []
     for i, b in enumerate(batches):
-        # capture this batch's sketch with the SAME partitioning the
-        # gate will see (createDataFrame layout is deterministic)
-        rows = (
-            misra_gries_sketches(_df(spark, b), "k", CAP)
-            .filter(F.col("key").isNotNull())
-            .collect()
-        )
-        sketch_batches.append(
-            [(r["key"], int(r["mg_count"])) for r in rows]
-        )
         update_frequent_state(
             spark, _df(spark, b), "k", t, f"b{i}", capacity=CAP
         )
-    want = _driver_reference_merge(sketch_batches, CAP)
+    want = _driver_reference_merge(
+        [Counter(b).items() for b in batches], CAP
+    )
     got = {
         r["key"]: int(r["mg_count"]) for r in t.read(spark).collect()
     }
     assert got == want
+
+
+def _skewed(spark, n_parts):
+    """20k rows, key = 20000 // (id + 1): one key holds half the rows,
+    ~280 distinct keys; range partitions are contiguous, so each
+    partition sees a different slice of the skew."""
+    return spark.range(20_000, numPartitions=n_parts).selectExpr(
+        "concat('k', CAST(20000 DIV (id + 1) AS STRING)) AS k"
+    )
+
+
+@pytest.mark.smoke
+def test_state_invariant_to_input_partitioning(spark, tmp_path):
+    """Exact batch counts make the folded state a function of the
+    rows alone: 1 and 7 input partitions commit the same state."""
+    states = []
+    for n_parts in (1, 7):
+        t = TxTable(str(tmp_path / f"hh_p{n_parts}"))
+        for i in range(2):
+            update_frequent_state(
+                spark, _skewed(spark, n_parts), "k", t, f"b{i}",
+                capacity=CAP,
+            )
+        rows = sorted(map(tuple, t.read(spark).collect()))
+        states.append((rows, t.meta()["hh_n_total"]))
+    assert states[0][0] and states[0][1] == 40_000
+    assert states[0] == states[1]
+
+
+@pytest.mark.smoke
+def test_fold_plan_has_no_python_stage(spark, tmp_path, monkeypatch):
+    """The fold is one native aggregate with one exchange: no plan it
+    runs holds a Python-runner node, so a batch starts no Python
+    worker."""
+    DataFrame = type(spark.range(1))  # the session's concrete class
+    plans = []
+    real_collect = DataFrame.collect
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return real_collect(self)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    batches, _ = _batches(8)
+    t = TxTable(str(tmp_path / "hh_plan"))
+    for i, b in enumerate(batches[:2]):  # the 2nd merges stored state
+        update_frequent_state(
+            spark, _df(spark, b), "k", t, f"b{i}", capacity=CAP
+        )
+    assert len(plans) == 2
+    for plan in plans:
+        for node in (
+            "MapInPandas",
+            "PythonMapInArrow",
+            "ArrowEvalPython",
+            "BatchEvalPython",
+        ):
+            assert node not in plan, (node, plan)
+        assert plan.count("Exchange") == 1, plan
+    assert "Union" in plans[1]
+
+
+def test_emptied_state_reports_empty_not_none(spark, tmp_path):
+    """400 distinct keys at capacity 300 truncate to an EMPTY
+    committed state: the report is empty, not None (None means
+    nothing was ever committed). NULL keys are not items."""
+    t = TxTable(str(tmp_path / "hh_empty"))
+    keys = [f"k{i}" for i in range(400)] + [None] * 5
+    assert update_frequent_state(
+        spark, _df(spark, keys), "k", t, "b0", capacity=300
+    )
+    assert t.latest_version() == 0
+    assert t.meta()["hh_n_total"] == 400
+    report = read_frequent_state(spark, t, phi_inv=300)
+    assert report is not None and report.collect() == []
+    never = TxTable(str(tmp_path / "hh_never"))
+    assert read_frequent_state(spark, never, phi_inv=300) is None
+
+
+def test_large_capacity_path_keeps_exact_counts(spark, tmp_path):
+    """Past capacity 20k the fold stays distributed (checkpoint +
+    stage_files). With fewer distinct keys than the capacity nothing
+    truncates: the state IS the exact counts and n_total the rows."""
+    batches, all_keys = _batches(9)
+    t = TxTable(str(tmp_path / "hh_large"))
+    for i, b in enumerate(batches):
+        assert update_frequent_state(
+            spark, _df(spark, b), "k", t, f"b{i}", capacity=20_001
+        )
+    got = {
+        r["key"]: int(r["mg_count"]) for r in t.read(spark).collect()
+    }
+    assert got == Counter(all_keys)
+    assert t.meta()["hh_n_total"] == len(all_keys)
 
 
 def test_phi_inv_above_capacity_rejected(spark, tmp_path):

@@ -1,18 +1,17 @@
-"""Incremental frequent-items gate scale study: driver-row bound at
-high partition counts.
+"""Incremental frequent-items gate scale study: fold wall and driver
+rows at a chosen partition count.
 
-The r4 gate collected partitions × capacity sketch rows to merge
-driver-side; the r5 gate merges executor-side (union + groupBy-sum)
-and only a bounded top-(capacity+1) of count VALUES plus two 1-row
-aggregates ever reach the driver. This tool runs N batches at a
-chosen partition count and reports, per batch:
+The fold (streaming/frequent.py) merges each batch's EXACT key counts
+with the stored state in one native ``rollup(key)`` aggregate: after
+map-side combine its exchange carries at most one row per distinct
+key per map task, and the driver collects at most capacity + 2 rows
+(the bounded top-k plus the n_batch total row). This tool runs N
+batches and reports, per batch:
 
-- merged key cardinality (what the OLD gate collected, lower bound —
-  it also re-collected the prior state every batch);
-- driver rows actually collected by the NEW gate
-  (min(capacity+1, merged keys) + 2);
-- wall time, final state size, and the no-miss check on planted hot
-  keys.
+- distinct keys in the batch (what bounds the exchange width);
+- driver rows the fold collects (min(capacity + 2, merged keys + 1));
+- wall time of the fold (the first batch's is the session's first
+  fold), final state size, and the no-miss check on planted hot keys.
 
 Usage: python tools/frequent_scale.py [N_ROWS_PER_BATCH] [N_BATCHES]
        [CAPACITY] [N_PARTS]
@@ -29,8 +28,6 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import functions as F
-
 from nfl_data_pipeline_spark.jobs.txlog import TxTable
 from nfl_data_pipeline_spark.session import get_spark
 from nfl_data_pipeline_spark.streaming.frequent import (
@@ -44,48 +41,36 @@ def main(n_rows: int, n_batches: int, capacity: int, n_parts: int) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     root = tempfile.mkdtemp(prefix="freq_scale_")
     t = TxTable(os.path.join(root, "hh"))
-    walls, merged_keys, driver_rows = [], [], []
+    walls, batch_keys, driver_rows = [], [], []
     for b in range(n_batches):
-        # 10 hot keys at ~the φ threshold + a uniform churning tail
-        # tail keys repeat on ADJACENT rows under contiguous range
-        # partitioning, so per-partition counters survive truncation
-        # and every sketch fills to ~capacity — the worst case for
-        # the merge width (a uniform shuffled tail cancels to almost
-        # nothing per partition and understates it)
+        # 10 hot keys at ~the φ threshold + a tail whose keys each
+        # appear on two adjacent rows: ~n_rows/2 distinct keys per
+        # batch, the worst case for the exchange width
         df = spark.range(n_rows, numPartitions=n_parts).selectExpr(
             "CASE WHEN id % 1000 = 0 "
             "THEN concat('hot_', CAST((id DIV 1000) % 10 AS STRING)) "
             f"ELSE substring(md5(CAST(id DIV 2 + {b} * {n_rows} "
             "AS STRING)), 1, 12) END AS k"
         ).localCheckpoint(eager=True)
-        # what the old driver-side merge would have collected this
-        # batch: every distinct surviving sketch key (+ prior state)
-        from nfl_data_pipeline_spark.operators.sketches import (
-            misra_gries_sketches,
-        )
-
-        mk = (
-            misra_gries_sketches(df, "k", capacity)
-            .filter(F.col("key").isNotNull())
-            .select("key")
-            .distinct()
-            .count()
-        )
-        merged_keys.append(mk)
+        batch_keys.append(df.select("k").distinct().count())
+        merged, state = df.select("k"), t.read(spark)
+        if state is not None:  # None while the state holds no rows
+            merged = merged.union(state.select("key"))
+        driver_rows.append(min(capacity + 2, merged.distinct().count() + 1))
         t0 = time.perf_counter()
         update_frequent_state(spark, df, "k", t, f"b{b}", capacity=capacity)
         walls.append(round(time.perf_counter() - t0, 2))
-        driver_rows.append(min(capacity + 1, mk) + 2)
     report = read_frequent_state(spark, t, phi_inv=capacity)
     reported = {r["key"] for r in report.collect()}
-    state_rows = t.read(spark).count()
+    state = t.read(spark)
+    state_rows = state.count() if state is not None else 0
     res = {
         "rows_per_batch": n_rows,
         "batches": n_batches,
         "capacity": capacity,
         "partitions": n_parts,
-        "old_collect_rows_per_batch": merged_keys,
-        "new_driver_rows_per_batch": driver_rows,
+        "distinct_keys_per_batch": batch_keys,
+        "driver_rows_per_batch": driver_rows,
         "state_rows": state_rows,
         "hot_keys_reported": sum(
             1 for i in range(10) if f"hot_{i}" in reported
