@@ -1,37 +1,34 @@
-"""Exact-order Arrow kernels for the engine's interpreted folds.
+"""Exact-order Arrow kernels for the text-hash folds.
 
-Spark evaluates higher-order functions (``aggregate``/``transform``
-lambdas) in the interpreted expression evaluator — no whole-stage
-codegen — so each array element costs an interpreter dispatch. The
-kernels here compute THE SAME left-to-right folds, vectorized ACROSS
-ROWS in numpy: the Python loop runs over fold STEPS (array positions /
-permutations), and each step applies one scalar op to every row's
-accumulator at once.
+Two kernels back the ``SPARK_GRAFT_TEXTHASH_ENGINE=arrow`` setting
+(operators/dedup._texthash_engine): ``shingle_sids_udf`` (text →
+distinct shingle ids) and ``minhash_signature_arrow`` (shingle ids →
+MinHash signature). Spark evaluates the SQL forms of these folds
+(``aggregate``/``transform`` lambdas) in the interpreted expression
+evaluator — no whole-stage codegen — so each array element costs an
+interpreter dispatch. The kernels compute THE SAME folds, vectorized
+ACROSS ROWS in numpy: the Python loop runs over fold STEPS
+(characters / permutations), and each step applies one integer op to
+every row's accumulator at once.
 
-Bit-identity argument (what lets ORACLE-GATED queries use these):
+Bit-identity argument (why the dial cannot change a registry or an
+oracle hash):
 
-- per row, the op sequence is exactly the SQL fold's — step ``j``
-  performs the same multiply/add on the same operands in the same
-  order;
-- float64 add/mul/sub are single correctly-rounded IEEE-754 ops on
-  both the JVM and numpy (SSE2 doubles, no x87 extended precision),
-  so identical operand sequences give identical bits;
-- int64 ops wrap identically, and every integer fold here stays in
-  range anyway (operands < P² + P < 2⁶³ for the MinHash fold).
+- per row, the op sequence is exactly the SQL fold's;
+- int64 ops wrap identically on the JVM and in numpy, and every fold
+  here stays in range anyway (operands < A·P + P < 2⁶³ for the
+  Horner shingle compose and < P² + P for the MinHash fold);
+- the MinHash step is a min over a set, so its order is irrelevant.
 
-np.dot / einsum / matmul are deliberately NOT used: BLAS reorders
-summation (pairwise, SIMD lanes), which drifts from the sequential
-fold at the last ulp — the measured reason cosine_topk's fast path is
-documented as set-identical, not bit-identical. These kernels are
-bit-identical, which is a stronger contract than that fast path's.
-
-NULL semantics mirror the SQL expressions they replace; each kernel's
-docstring states the mapping it reproduces.
+tests/test_pair_kernel.py::test_texthash_engine_dial_is_bit_identical
+pins both kernels against the SQL forms over the documents corpus and
+NULL/empty edges. NULL semantics mirror the SQL expressions they
+replace; each kernel's docstring states the mapping.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from nfl_data_pipeline_spark.operators.hashing import P
@@ -108,8 +105,8 @@ def shingle_sids_udf(n: int = 3):
     cost of the near-dup gate's signature block (per-CHARACTER
     interpreted fold steps; see OPTIMIZATION_r13.md).
 
-    Replicates the SQL pipeline exactly (semantics pinned empirically,
-    tools/arrowfold_equiv.py):
+    Replicates the SQL pipeline exactly (semantics pinned by
+    tests/test_pair_kernel.py::test_texthash_engine_dial_is_bit_identical):
 
     - ``split(text, ' ')`` keeps interior AND trailing empty tokens —
       Python ``str.split(' ')`` matches;
@@ -188,110 +185,3 @@ def shingle_sids_udf(n: int = 3):
         return pd.Series(out)
 
     return _sids
-
-
-def exact_fold_dot(a_col: str, b_col: str) -> Column:
-    """``sp_dot(a, b)`` (the lambda fold — ``aggregate(zip_with(a, b,
-    (x, y) -> x*y), 0.0, (s, v) -> s + v)``) as an Arrow kernel: the
-    per-dimension loop adds ``A[:, j] * B[:, j]`` into the accumulator
-    column, which is per row exactly ``((0.0 + a0*b0) + a1*b1) + ...``
-    — the same left-associated IEEE sequence, so bit-identical.
-
-    NULL mapping: NULL on either side, or length mismatch (zip_with
-    pads with NULL → NULL product → NULL sum), makes the SQL fold
-    NULL; those rows return NULL here too.
-    """
-    np = _np()
-
-    @F.pandas_udf("double")
-    def _dot(av, bv):
-        import pandas as pd
-
-        n = len(av)
-        if n == 0:
-            return pd.Series([], dtype="float64")
-        out = np.full(n, np.nan)
-        key = {}
-        for idx in range(n):
-            x, y = av.iloc[idx], bv.iloc[idx]
-            if x is None or y is None or len(x) != len(y):
-                continue
-            key.setdefault(len(x), []).append(idx)
-        for d, idxs in key.items():
-            ii = np.asarray(idxs)
-            if d == 0:
-                out[ii] = 0.0
-                continue
-            A = np.stack([np.asarray(av.iloc[i], dtype=np.float64) for i in idxs])
-            B = np.stack([np.asarray(bv.iloc[i], dtype=np.float64) for i in idxs])
-            acc = np.zeros(len(idxs))
-            for j in range(d):
-                acc += A[:, j] * B[:, j]
-            out[ii] = acc
-        # NaN → NULL through the Arrow mask, matching the SQL NULLs;
-        # finite inputs cannot produce a genuine NaN dot.
-        return pd.Series(out)
-
-    return _dot(F.col(a_col), F.col(b_col))
-
-
-def exact_band_vals_udf(spark, band_bits: int, n_bands: int, dim: int):
-    """The hyperplane band projector as an exact-order Arrow kernel:
-    returns a pandas_udf computing ``_hbs`` (array of ``n_bands`` band
-    values) bit-identically to the SQL ``_hyperplane_proj`` path —
-    unlike the matmul engine, whose BLAS summation can flip a
-    near-zero projection's sign.
-
-    Projection fold per plane ``p``: ``s_j = s_{j-1} + vec[j] *
-    w(p, j)`` — reproduced by the per-dimension loop
-    ``acc[:, p] += V[:, j] * W[j, p]`` (one IEEE multiply-add pair per
-    step per row, same order). Weights come from
-    :func:`plane_matrix`, i.e. Spark's own ``hash`` — identical bits
-    by construction.
-
-    NULL mapping: a NULL or wrong-length vector makes every
-    projection NULL in SQL (``element_at`` past the end), and
-    ``CASE WHEN NULL > 0`` takes the ELSE branch — every band value
-    0. Those rows get all-zero band values here too.
-    """
-    np = _np()
-    from nfl_data_pipeline_spark.operators.similarity import plane_matrix
-
-    mat = plane_matrix(spark, n_bands * band_bits, dim)
-    bc = spark.sparkContext.broadcast(mat)
-    n_planes = n_bands * band_bits
-
-    @F.pandas_udf("array<long>")
-    def _band_vals(vecs):
-        import pandas as pd
-
-        n = len(vecs)
-        if n == 0:
-            return pd.Series([], dtype=object)
-        W = bc.value
-        good_idx = [
-            i
-            for i in range(n)
-            if vecs.iloc[i] is not None and len(vecs.iloc[i]) == dim
-        ]
-        vals = np.zeros((n, n_bands), dtype=np.int64)
-        if good_idx:
-            V = np.stack(
-                [np.asarray(vecs.iloc[i], dtype=np.float64) for i in good_idx]
-            )
-            acc = np.zeros((len(good_idx), n_planes))
-            for j in range(dim):
-                acc += V[:, j : j + 1] * W[j : j + 1, :]
-            bits = acc > 0
-            weights = 1 << np.arange(band_bits, dtype=np.int64)
-            gv = np.stack(
-                [
-                    bits[:, b * band_bits : (b + 1) * band_bits] @ weights
-                    for b in range(n_bands)
-                ],
-                axis=1,
-            )
-            vals[np.asarray(good_idx)] = gv
-        return pd.Series(list(vals))
-
-    return _band_vals

@@ -47,13 +47,13 @@ def _texthash_engine() -> str:
     """Engine for the per-character text-hash folds: ``sql``
     (interpreted HOFs, the local default) or ``arrow`` (the
     exact-order numpy kernels in operators/arrowfold — bit-identical,
-    proven by tools/arrowfold_equiv.py).
+    pinned by tests/test_pair_kernel.py).
 
     Scale dial, not a correctness dial: at sf0.1 the SQL fold wins
     wall (the corpus is KB-per-task, so the ~0.2 s/task Python-runner
     cost exceeds the entire fold; measured 0.23 vs 0.43 s) while at
     corpus scale the per-character interpreter cost dominates and the
-    kernel is the right engine (~25× per-row, arrowfold_micro) —
+    kernel is the right engine (~25× per row, OPTIMIZATION_r13.md) —
     export SPARK_GRAFT_TEXTHASH_ENGINE=arrow there. Results are
     bit-identical either way, so registries and oracle hashes do not
     depend on the setting."""

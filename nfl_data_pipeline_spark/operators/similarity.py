@@ -71,64 +71,50 @@ def cosine_topk(
     so adjacent ranks may swap on near-ties: the retrieved id-SET is
     the contract.
 
-    ``engine="exact"`` (r13) scores the dots with the exact-order
-    Arrow kernel (operators/arrowfold.exact_fold_dot): vectorized like
-    ``arrow`` but BIT-IDENTICAL to the SQL fold — same ranks, same
-    cosines — so oracle-gated callers can use it.
+    NULL cosines follow the SQL engine on both engines: a NULL
+    vector, a vector shorter than ``dim``, or (without ``dim``) a pair
+    of unequal widths scores NULL; with ``dim`` only ``vec[:dim]`` is
+    scored.
     """
-    if engine not in ("sql", "arrow", "exact"):
+    if engine not in ("sql", "arrow"):
         raise ValueError(
-            f"unknown engine {engine!r}: expected 'sql', 'arrow' or "
-            "'exact'"
+            f"unknown engine {engine!r}: expected 'sql' or 'arrow'"
         )
     q = F.broadcast(_prep(queries, id_col, vec_col, "q", dim))
     c = _spread(_prep(candidates, id_col, vec_col, "c", dim))
-    if engine == "exact":
-        from nfl_data_pipeline_spark.operators.arrowfold import (
-            exact_fold_dot,
-        )
-
-        cos = exact_fold_dot("q_vec", "c_vec") / (
-            F.col("q_norm") * F.col("c_norm")
-        )
-    elif engine == "arrow":
+    if engine == "arrow":
         import numpy as np
 
         @F.pandas_udf("double")
         def _dot(av, bv):
             import pandas as pd
 
-            if len(av) == 0:
-                return pd.Series([], dtype=float)
-            # NULL vectors: substitute a zero vector so np.stack
-            # can't crash — the division by the (NULL) norm below
-            # nulls the cosine out anyway, matching the SQL fold
-            d = next(
-                (len(v) for v in av if v is not None),
-                next((len(v) for v in bv if v is not None), 0),
+            n = len(av)
+            av, bv = av.to_numpy(), bv.to_numpy()
+            la = np.fromiter(
+                (-1 if v is None else len(v) for v in av), np.int64, count=n
             )
-            z = np.zeros(d)
-            A = np.stack(
-                [
-                    z if v is None else np.asarray(v, dtype=np.float64)
-                    for v in av
-                ]
+            lb = np.fromiter(
+                (-1 if v is None else len(v) for v in bv), np.int64, count=n
             )
-            B = np.stack(
-                [
-                    z if v is None else np.asarray(v, dtype=np.float64)
-                    for v in bv
-                ]
-            )
-            return pd.Series(np.einsum("ij,ij->i", A, B))
+            width = la if dim is None else np.full(n, dim)
+            ok = (la >= 0) & (lb >= 0) & (la >= width) & (lb >= width)
+            if dim is None:
+                ok &= la == lb
+            # NaN leaves through the Arrow mask as NULL — the SQL
+            # fold's NULL for the rows scored nothing here
+            out = np.full(n, np.nan)
+            for d in np.unique(width[ok]):
+                idx = np.flatnonzero(ok & (width == d))
+                A = np.stack([v[:d] for v in av[idx]])
+                B = np.stack([v[:d] for v in bv[idx]])
+                out[idx] = np.einsum("ij,ij->i", A, B)
+            return pd.Series(out)
 
-        cos = _dot(F.col("q_vec"), F.col("c_vec")) / (
-            F.col("q_norm") * F.col("c_norm")
-        )
+        dot = _dot(F.col("q_vec"), F.col("c_vec"))
     else:
-        cos = F.expr(sp_dot("q_vec", "c_vec", dim)) / (
-            F.col("q_norm") * F.col("c_norm")
-        )
+        dot = F.expr(sp_dot("q_vec", "c_vec", dim))
+    cos = dot / (F.col("q_norm") * F.col("c_norm"))
     scored = q.join(c, F.col("q_id") != F.col("c_id")).withColumn(
         "cosine", cos
     )
@@ -686,9 +672,21 @@ def _assign_nearest(
 TARGET_CLUSTER_SIZE = 512
 
 
-def _auto_k(df: DataFrame, id_col: str) -> int:
-    n = df.select(id_col).count()
-    return max(8, n // TARGET_CLUSTER_SIZE)
+def _count_and_width(df: DataFrame, vec_col: str) -> tuple[int, int]:
+    """The semantic-dedup input contract, checked once at the operator
+    boundary in ONE aggregate: returns ``(n, dim)`` — the row count
+    (the adaptive-k input) and the one width every non-NULL vector
+    shares (0 when there is none). Mixed widths raise ``ValueError``:
+    a cosine between vectors of different widths has no meaning, and
+    the pair kernel would otherwise score only ``vec[:dim]``."""
+    size = F.when(F.col(vec_col).isNotNull(), F.size(vec_col))
+    n, lo, hi = df.agg(F.count("*"), F.min(size), F.max(size)).first()
+    if lo != hi:
+        raise ValueError(
+            f"{vec_col} vectors must share one width, got widths "
+            f"{lo} to {hi}"
+        )
+    return n, hi or 0
 
 
 def semantic_dedup(
@@ -724,28 +722,35 @@ def semantic_dedup(
 
     Scale posture: two broadcast-join assignment passes (centroids are
     k rows), one explode+hash-agg for the update (map-side combine on
-    (cid, pos)), and an intra-cluster self-join whose fan-in is the
-    cluster size, never the corpus.
+    (cid, pos)), and one grouped pair-kernel pass over the cells
+    (_grouped_pair_scores) whose per-group work is the cluster size,
+    never the corpus.
 
     ``k=None`` (the default) derives k = max(8, n // 512) from the
     corpus size, so intra-cluster pairwise work grows linearly with
     the corpus instead of quadratically — a fixed k is a footgun the
     moment the corpus is 10× the one it was tuned on. Pass an
-    explicit k to pin a configuration (the oracle query does).
+    explicit k to pin a configuration.
+
+    Input contract: every non-NULL vector has the same width
+    (``ValueError`` otherwise; NULL vectors are never a duplicate), and
+    ``id_col`` is integral (the pair kernel raises ``TypeError`` for
+    any other id type).
     """
+    n, dim = _count_and_width(df, vec_col)
     if k is None:
-        k = _auto_k(df, id_col)
+        k = max(8, n // TARGET_CLUSTER_SIZE)
     v = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
     )
     cents1 = fit_centroids(v, k)
-    # the probed assignment feeds four consumers (both pair legs, the
-    # drop set, the output projection); materialize it once — without
-    # this the crossJoin+window assignment subtree replays per
-    # consumer (ReuseExchange reuses only identical shuffle subtrees)
+    # the probed assignment feeds two consumers (the pair kernel and
+    # the output projection); materialize it once — without this the
+    # crossJoin+window assignment subtree replays per consumer
+    # (ReuseExchange reuses only identical shuffle subtrees)
     probed = _assign_nearest(v, cents1, probes=n_probe).localCheckpoint()
-    return _dedup_from_assignments(probed, id_col, threshold)
+    return _dedup_from_assignments(probed, id_col, threshold, dim)
 
 
 def fit_centroids(v: DataFrame, k: int) -> DataFrame:
@@ -781,99 +786,35 @@ def fit_centroids(v: DataFrame, k: int) -> DataFrame:
 
 
 def _dedup_from_assignments(
-    probed: DataFrame, id_col: str, threshold: float
+    probed: DataFrame, id_col: str, threshold: float, dim: int
 ) -> DataFrame:
     """Pair/drop/report stage shared by every clustering backend:
     ``probed`` is a materialized (vid, vec, cid, rn) table (rn = 1 is
-    the primary cell; rn > 1 are probe cells)."""
-    # (r12's re-spread guard is gone with the pair join it served:
-    # the grouped kernel below shuffles by cid itself, and its
-    # per-cluster numpy cost is microseconds — the single-task
-    # straggler the guard fixed cannot recur.)
-    a2 = probed.filter(F.col("rn") == 1).select("vid", "vec", "cid")
-
-    # Pair scoring (r13, guide §8 / §4.2): the r12 shape joined the
-    # two vector-carrying legs and evaluated the interpreted cosine
-    # fold once per PAIR — per-pair interpreter cost, and any Arrow
-    # rewrite of that expression ships every vector once per pair
-    # through the Python boundary (measured 0.35-0.61x at sf0.1).
-    # Instead, group by cid and score each cluster's pairs in ONE
-    # numpy kernel: every vector crosses the boundary once per
-    # cluster it probes (bytes ~ corpus, not ~ pairs), and only the
-    # narrow (vid, cosine) pair rows come back. Cosines are
-    # bit-identical to the SQL fold (exact-order per-dimension
-    # accumulation — see operators/arrowfold.py for the argument;
-    # equality asserted by tools/arrowfold_equiv.py and the oracle
-    # suite), and the threshold filter stays in Spark, so the
-    # decision semantics are unchanged. Per-group state is O(c²) for
-    # cluster size c — bounded by the auto-k ~512 target, the same
-    # bound the old join's per-cid fan-in lived under.
-    import pyspark.sql.types as T
-
-    vid_field = next(f for f in probed.schema.fields if f.name == "vid")
-    pair_schema = T.StructType(
-        [
-            T.StructField("vid", vid_field.dataType),
-            T.StructField("cosine", T.DoubleType()),
-        ]
+    the primary cell; rn > 1 are probe cells) whose vectors are
+    ``dim`` wide."""
+    # Pair scoring runs in the grouped pair kernel, grouped by cid:
+    # every vector crosses the Python boundary once per cell it sits
+    # in, and only narrow (a_id, b_id, cosine) rows come back.
+    # Primary rows are side 0 and probe rows side 1, so the kernel's
+    # "never side 1 x side 1" rule is exactly "at least one side is
+    # in its primary cell". Cosines equal the SQL fold's bit for bit
+    # (see _grouped_pair_scores), and the threshold filter stays in
+    # Spark. Per-group pair state is O(c²) for cluster size c —
+    # bounded by the auto-k ~512 target.
+    members = with_norm(probed, "vec").select(
+        F.col("vid").alias("c_id"),
+        F.col("vec").alias("c_vec"),
+        F.col("norm").alias("c_norm"),
+        "cid",
+        (F.col("rn") > 1).cast("int").alias("c_side"),
     )
-
-    def _score_cluster(pdf):
-        import numpy as np
-        import pandas as pd
-
-        vids = pdf["vid"].to_numpy()
-        order = np.argsort(vids, kind="stable")
-        pdf = pdf.iloc[order]
-        vids = pdf["vid"].to_numpy()
-        rn = pdf["rn"].to_numpy()
-        vecs = pdf["vec"].tolist()
-        d = next((len(v) for v in vecs if v is not None), 0)
-        ok = np.fromiter(
-            (v is not None and len(v) == d for v in vecs),
-            bool,
-            count=len(vecs),
-        )
-        m = int(ok.sum())
-        if m < 2 or d == 0:
-            return pd.DataFrame(
-                {"vid": vids[:0], "cosine": np.zeros(0)}
-            )
-        V = np.stack(
-            [np.asarray(v, dtype=np.float64) for v, g in zip(vecs, ok) if g]
-        )
-        svids = vids[ok]
-        srn = rn[ok]
-        # exact-order folds, vectorized across rows/pairs: step j
-        # adds one product into each accumulator — the SQL fold's op
-        # sequence per row/pair (NOT a BLAS matmul, which reorders)
-        nrm = np.zeros(m)
-        dots = np.zeros((m, m))
-        for j in range(d):
-            cj = V[:, j]
-            nrm += cj * cj
-            dots += np.outer(cj, cj)
-        nrm = np.sqrt(nrm)
-        nprod = np.outer(nrm, nrm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cosm = dots / nprod
-        iu, il = np.triu_indices(m, k=1)
-        # zero-norm pairs: Spark's divide yields NULL (dropped by the
-        # threshold filter), not IEEE NaN — match it (see
-        # _grouped_pair_scores)
-        keep = ((srn[iu] == 1) | (srn[il] == 1)) & (nprod[iu, il] != 0.0)
-        return pd.DataFrame(
-            {"vid": svids[il][keep], "cosine": cosm[iu, il][keep]}
-        )
-
     dropped = (
-        probed.select("vid", "vec", "cid", "rn")
-        .groupBy("cid")
-        .applyInPandas(lambda _, pdf: _score_cluster(pdf), pair_schema)
+        _grouped_pair_scores(members, ["cid"], dim, side_col="c_side")
         .filter(F.col("cosine") >= F.lit(threshold))
-        .select("vid")
+        .select(F.greatest("a_id", "b_id").alias("vid"))
         .distinct()
     )
+    a2 = probed.filter(F.col("rn") == 1).select("vid", "cid")
     wsz = Window.partitionBy("cid")
     return (
         a2.join(dropped.withColumn("is_dup", F.lit(1)), "vid", "left")
@@ -908,8 +849,9 @@ def semantic_dedup_ml(
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
+    n, dim = _count_and_width(df, vec_col)
     if k is None:
-        k = _auto_k(df, id_col)
+        k = max(8, n // TARGET_CLUSTER_SIZE)
     v = df.select(
         F.col(id_col).alias("vid"),
         F.col(vec_col).cast("array<double>").alias("vec"),
@@ -927,7 +869,7 @@ def semantic_dedup_ml(
         "cid int, cvec array<double>",
     )
     probed = _assign_nearest(v, cents, probes=n_probe).localCheckpoint()
-    return _dedup_from_assignments(probed, id_col, threshold)
+    return _dedup_from_assignments(probed, id_col, threshold, dim)
 
 
 def _hyperplane_proj(vec_col: str, plane_id: int, dim: int) -> str:
@@ -950,11 +892,11 @@ def plane_matrix(spark, n_planes: int, dim: int):
     """(dim, n_planes) numpy weight matrix with EXACTLY the weights
     ``_hyperplane_proj`` derives — computed on the DRIVER through the
     Python murmur3 mirror (hashing.plane_weight, the same mirror the
-    oracle inlines), so building it costs zero Spark jobs (r13; the
-    previous spark.range + collect ran one job per operator
-    invocation). Mirror fidelity is pinned end-to-end: the arrow_exact
-    engine's band values must equal the SQL path's, which folds over
-    Spark's own ``hash`` (tools/arrowfold_equiv.py, tests)."""
+    oracle inlines), so building it costs zero Spark jobs. Mirror
+    fidelity is pinned by tests/test_functions.py (``plane_weight``
+    against Spark's own ``hash``) and by
+    tests/test_embedding_lsh.py::test_arrow_engine_matches_sql_band_values
+    (matmul band values equal the SQL fold's)."""
     import numpy as np
 
     from nfl_data_pipeline_spark.operators.hashing import plane_weight
@@ -981,21 +923,13 @@ def hyperplane_band_struct(
     the two can never drift). The incremental gate checkpoints THIS
     frame (the vector is pinned once, not ``n_bands`` times) and
     derives narrow band-probe rows and the vector side table from it
-    (r13 — guide §2.3: shuffle keys, not payloads)."""
-    c = _prep(df, id_col, vec_col, "c", dim)
-    if engine == "arrow_exact":
-        # exact-order Arrow kernel: BIT-IDENTICAL to the SQL path
-        # (per-dimension accumulation preserves the projection fold's
-        # IEEE op order — operators/arrowfold.py; asserted by
-        # tools/arrowfold_equiv.py incl. NULL/short-vector edges), so
-        # oracle-gated callers can use it, unlike the matmul engine
-        # below whose summation order can flip a near-zero sign.
-        from nfl_data_pipeline_spark.operators.arrowfold import (
-            exact_band_vals_udf,
+    (guide §2.3: shuffle keys, not payloads). ``engine`` is ``"sql"``
+    or ``"arrow"`` (see ``hyperplane_band_rows``)."""
+    if engine not in ("sql", "arrow"):
+        raise ValueError(
+            f"unknown engine {engine!r}: expected 'sql' or 'arrow'"
         )
-
-        bv = exact_band_vals_udf(df.sparkSession, band_bits, n_bands, dim)
-        return c.withColumn("_hbs", bv(F.col("c_vec")))
+    c = _prep(df, id_col, vec_col, "c", dim)
     if engine == "arrow":
         import numpy as np
 
@@ -1007,16 +941,20 @@ def hyperplane_band_struct(
         def band_vals(vecs):
             import pandas as pd
 
-            if len(vecs) == 0:
-                return pd.Series([], dtype=object)
-            V = np.stack([np.asarray(v, dtype=np.float64) for v in vecs])
+            # the SQL width rule: project vec[:dim]; a NULL or shorter
+            # vector projects to NULL, which signs as bit 0 — the
+            # zero row's projections do too
+            V = np.zeros((len(vecs), dim))
+            for i, v in enumerate(vecs):
+                if v is not None and len(v) >= dim:
+                    V[i] = v[:dim]
             bits = (V @ bc.value) > 0  # (n, planes)
             vals = [
                 (bits[:, b * band_bits : (b + 1) * band_bits] @ weights)
                 for b in range(n_bands)
             ]
             out = np.stack(vals, axis=1)  # (n, n_bands)
-            return pd.Series(list(out))
+            return pd.Series(list(out), dtype=object)
 
         return c.withColumn("_hbs", band_vals(F.col("c_vec")))
     for b in range(n_bands):
@@ -1058,7 +996,9 @@ def hyperplane_band_rows(
     different float orders, so a projection within float noise of
     zero could sign differently: use ONE engine per registry (the
     equality test measures zero flips on real data, but the contract
-    is per-registry consistency, not cross-engine bit-equality)."""
+    is per-registry consistency, not cross-engine bit-equality).
+    Both engines project ``vec[:dim]``; a NULL or shorter vector gets
+    all-zero band values."""
     return hyperplane_band_struct(
         df, id_col, vec_col, band_bits, n_bands, dim, engine
     ).select(
@@ -1111,14 +1051,12 @@ def embedding_near_dups_banded(
                 df.sparkSession, "vec_a long, vec_b long, cosine double"
             )
         dim = int(probe[0])
-    # Projections stay the SQL engine: the arrow_exact kernel is
-    # bit-identical and ~2.7x on the projection stage in isolation,
-    # but end-to-end the Python-stage fixed cost showed up as ~+0.5 s
-    # in the controlled bench while the 10x-tier win proved to live
-    # almost entirely in the PAIR stage below (SCALING.md r13) —
-    # interpreted projections are ~0.2 s of well-parallelized wall
-    # even at 10x. arrow_exact remains an available engine for
-    # registries that want it (hyperplane_band_struct).
+    # Projections stay the SQL engine: an exact-order Arrow projector
+    # was ~2.7x faster on the projection stage in isolation, but its
+    # Python-stage fixed cost came to ~+0.5 s end to end, while the
+    # 10x-tier win lives almost entirely in the PAIR stage below
+    # (SCALING.md r13) — interpreted projections are ~0.2 s of
+    # well-parallelized wall even at 10x.
     bands = hyperplane_band_rows(
         df, id_col, vec_col, band_bits, n_bands, dim
     )
@@ -1134,7 +1072,8 @@ def embedding_near_dups_banded(
             F.col("_bn") <= max_bucket
         ).drop("_bn")
     # Pair-stage engine, gated on the (already materialized) band-row
-    # count — both forms are bit-identical (tools/arrowfold_equiv.py):
+    # count — both forms give the same pairs and bit-identical
+    # cosines (tests/test_pair_kernel.py runs both sides of the gate):
     #
     # - SMALL inputs: the band self-join with the dim-unrolled dot.
     #   Its per-pair cost only hurts when pair volume is large; below
@@ -1154,7 +1093,7 @@ def embedding_near_dups_banded(
     # per bucket), kernel cost is ~fixed (one boundary crossing +
     # one exchange). 20k rows (~5k vectors at 4 bands) sits well
     # inside the measured win region of each side.
-    if n_band_rows > _pair_kernel_min_rows():
+    if n_band_rows > PAIR_KERNEL_MIN_ROWS:
         return (
             _grouped_pair_scores(
                 bands.select(
@@ -1204,11 +1143,8 @@ def embedding_near_dups_banded(
 
 # Band-row count above which embedding_near_dups_banded's pair stage
 # switches from the self-join to the grouped kernel (see the gate
-# comment in the operator). Env-overridable for scale studies.
-def _pair_kernel_min_rows() -> int:
-    import os
-
-    return int(os.environ.get("SPARK_GRAFT_PAIR_KERNEL_MIN_ROWS", 20_000))
+# comment in the operator).
+PAIR_KERNEL_MIN_ROWS = 20_000
 
 
 def _grouped_pair_scores(
@@ -1220,18 +1156,25 @@ def _grouped_pair_scores(
     """Within-group pairs ``(a_id, b_id, cosine)`` scored by a
     segment-vectorized exact-order kernel.
 
-    Without ``side_col``: all unordered pairs, a_id < b_id. With
-    ``side_col`` (0 = probe/batch row, 1 = registry row): probe-probe
-    pairs once with a_id < b_id, plus every (probe, registry) pair
-    with a_id != b_id — and NEVER registry-registry, whose edges would
-    merge components across already-registered winners. This is the
-    incremental-gate candidate shape (streaming/embdedup.py).
+    The one grouped pair-scoring host, with three callers: the banded
+    near-dup pair stage (groups = LSH buckets, unsided), the
+    incremental embedding gate (streaming/embdedup.py) and semantic
+    dedup (groups = k-means cells; sides below).
 
-    Bit-identity contract (tools/arrowfold_equiv.py): the dot is the
-    per-dimension accumulation over ``vec[:dim]`` — the same IEEE op
-    sequence as the dim-unrolled ``sp_dot`` — and the cosine divides
-    by the CARRIED ``c_norm`` product, so the values equal the join
-    form's bit for bit. Rows whose vector is NULL or shorter than
+    Without ``side_col``: all unordered pairs, a_id < b_id. With
+    ``side_col``: side-0 pairs once with a_id < b_id, plus every
+    (side 0, side 1) pair with a_id != b_id — and NEVER side 1 x
+    side 1. In the gate, side 0 is the batch and side 1 the registry,
+    whose pairs would merge components across already-registered
+    winners; in semantic dedup, side 0 is a vector's primary cell and
+    side 1 a probe cell, so every pair has a primary member.
+
+    Bit-identity contract (tests/test_pair_kernel.py compares both
+    sides of the banded operator's gate hex-exactly): the dot is a
+    left-to-right sum of the products over ``vec[:dim]`` — the same
+    IEEE op sequence as the dim-unrolled ``sp_dot`` — and the cosine
+    divides by the CARRIED ``c_norm`` product, so the values equal the
+    join form's bit for bit. Rows whose vector is NULL or shorter than
     ``dim`` produced a NULL cosine in the join form (``element_at``
     past the end), as did zero-norm-product pairs (Spark's divide
     yields NULL on a zero divisor, NOT IEEE inf/NaN), and every NULL
@@ -1241,8 +1184,8 @@ def _grouped_pair_scores(
     Execution shape: hash-repartition on the group key, sort within
     partitions by (group, side, id), then ONE ``mapInArrow`` pass that
     detects group segments and scores every partition's pairs in a
-    handful of numpy calls — groupBy().applyInPandas here cost ~3 ms
-    of Python round-trip PER GROUP (1024 LSH buckets → ~3 s, measured
+    handful of numpy calls — a grouped-map UDF here cost ~3 ms of
+    Python round-trip PER GROUP (1024 LSH buckets → ~3 s, measured
     r13). Incomplete trailing groups are carried across Arrow batches,
     so batch boundaries never split a group's pair set. Each vector
     crosses the boundary once per group membership instead of once
@@ -1315,10 +1258,19 @@ def _grouped_pair_scores(
                 - np.repeat(off, counts)
                 + np.repeat(np.asarray(seg_starts)[seg_of], counts)
             )
-            acc = np.zeros(total)
-            for j in range(dim):
-                cj = V[:, j]
-                acc += cj[a_idx] * cj[b_idx]
+            # exact-order dot per pair: cumsum adds the row
+            # [0.0, a0*b0, a1*b1, ...] strictly left to right (unlike
+            # np.sum or BLAS), the SQL fold's op sequence; chunks of
+            # 2048 pairs bound the gathered rows' memory
+            acc = np.empty(total)
+            buf = np.zeros((2048, dim + 1))
+            for c0 in range(0, total, len(buf)):
+                a = a_idx[c0 : c0 + len(buf)]
+                b = b_idx[c0 : c0 + len(buf)]
+                np.multiply(V[a], V[b], out=buf[: len(a), 1:])
+                acc[c0 : c0 + len(a)] = np.cumsum(buf[: len(a)], axis=1)[
+                    :, -1
+                ]
             nprod = norms[a_idx] * norms[b_idx]
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = acc / nprod

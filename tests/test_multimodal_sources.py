@@ -558,5 +558,41 @@ def test_cosine_topk_arrow_null_vectors_and_engine_guard(spark):
     }
     assert got_ar == got_sql
     assert not any(c == 17 for _, c in got_ar)  # null vec never ranks
-    with pytest.raises(ValueError, match="engine"):
-        cosine_topk(q, emb, k=5, engine="Arrow")
+    for bad in ("Arrow", "exact"):
+        with pytest.raises(ValueError, match="engine"):
+            cosine_topk(q, emb, k=5, engine=bad)
+
+
+def test_cosine_topk_arrow_follows_width_contract(spark):
+    """Mixed vector widths: the arrow engine scores ``vec[:dim]`` when
+    ``dim`` is given and gives NULL (never a crash) for a vector
+    shorter than ``dim``, or for unequal widths without ``dim`` —
+    the same id-set and the same NULL cosines as the SQL engine."""
+    from nfl_data_pipeline_spark.operators.similarity import cosine_topk
+
+    emb = load(spark, SF_SMOKE, "embeddings")
+    dim = emb.select(F.size("embedding")).first()[0]
+    tail = F.array(*[F.lit(x).cast("float") for x in (0.5, -0.25, 0.125)])
+    vid = F.col("vec_id")
+    mixed = emb.withColumn(
+        "embedding",
+        F.when(vid.isin(1, 5), F.concat("embedding", tail))
+        .when(vid == 7, F.slice("embedding", 1, dim - 1))
+        .otherwise(F.col("embedding")),
+    )
+    q = mixed.filter("vec_id < 3")
+    for d in (dim, None):
+        got = {
+            engine: {
+                (r["q_id"], r["c_id"]): r["cosine"] is None
+                for r in cosine_topk(
+                    q, mixed, k=5, dim=d, engine=engine
+                ).collect()
+            }
+            for engine in ("sql", "arrow")
+        }
+        assert got["arrow"] == got["sql"], d
+    # without dim, query 1 shares its width with vector 5 only: one
+    # scored neighbour, the rest of its top 5 are NULL cosines
+    assert got["sql"][(1, 5)] is False
+    assert sum(v for (qid, _), v in got["sql"].items() if qid == 1) == 4

@@ -203,6 +203,10 @@ def test_semantic_dedup_bounded_plan(spark):
     plan = plan_of(spark, "semantic_dedup")
     assert "CartesianProduct" not in plan
     assert plan.count("Window") <= 1
+    # pairs are scored by the one grouped pair kernel (a mapInArrow
+    # pass), not a per-group pandas UDF
+    assert "FlatMapGroupsInPandas" not in plan
+    assert plan.count("MapInArrow") == 1
 
 
 def test_domain_mixture_aggregates_before_single_partition(spark):
