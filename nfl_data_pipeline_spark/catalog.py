@@ -31,10 +31,6 @@ FIXTURE_TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Small dimension tables that should always broadcast in joins
-# (the reference's 32-row ``teams_colors_logos`` pattern, SURVEY §2.3 J5).
-BROADCAST_TABLES = frozenset({"region", "nation", "supplier"})
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -155,19 +151,3 @@ def register_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
         if os.path.exists(path):
             load(spark, sf_dir, name).createOrReplaceTempView(name)
 
-
-class Catalog:
-    """Bound catalog: remembers (spark, sf_dir) so call sites read like
-    the reference's ``tbl(con, name)``."""
-
-    def __init__(self, spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR):
-        self.spark = spark
-        self.sf_dir = sf_dir
-
-    def table(self, name: str) -> DataFrame:
-        return load(self.spark, self.sf_dir, name)
-
-    def __getattr__(self, name: str) -> DataFrame:
-        if name in FIXTURE_TABLES:
-            return self.table(name)
-        raise AttributeError(name)

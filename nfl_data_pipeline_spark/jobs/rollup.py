@@ -26,11 +26,6 @@ from pyspark.sql import functions as F
 
 HOUR_NS = 3_600_000_000_000
 
-# Mergeable state columns: n (count) and decimal exact-sum of value —
-# the same DECIMAL(30,6) accumulator the oracle queries use
-# (queries/exact.py) so merged state is order-independent.
-_STATE_COLS = ("n", "sum_value")
-
 
 def aggregate_bucketed(
     events: DataFrame, bucket_ns: int = HOUR_NS

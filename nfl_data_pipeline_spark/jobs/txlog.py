@@ -288,9 +288,9 @@ class TxTable:
         self._schema_cache: dict = {}  # anchor footer schema → StructType
         # applied-batch-id ring size: the set is rewritten into every
         # manifest, so at high commit rates it is the one metadata
-        # piece that grows without bound (measured: tools/
-        # txlog_scale.py). The ring keeps the newest N in arrival
-        # order; older ids are dropped under a recorded truncation
+        # piece that grows without bound (measured: SCALING.md
+        # §"Tx-log metadata overhead"). The ring keeps the newest N in
+        # arrival order; older ids are dropped under a recorded truncation
         # counter (the Kafka-offsets compaction shape) and asking
         # about one raises TruncatedBatchHistory.
         self.max_batch_ids = max_batch_ids

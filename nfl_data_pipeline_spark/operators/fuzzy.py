@@ -6,7 +6,8 @@ strings within Levenshtein distance ``k`` WITHOUT the O(n²) cross
 join, and without the quadratic candidate blowups naive blocking
 hides.
 
-Design — three measured iterations deep (tools/fuzzy_scale.py):
+Design — three measured iterations deep (SCALING.md §"Fuzzy-join
+blocking"):
 
 1. **q-gram count bound** (Gravano et al., VLDB'01): an edit destroys
    ≤ q positional q-grams, so ed(s,t) ≤ k ⇒ the occurrence-indexed
@@ -36,11 +37,11 @@ Design — three measured iterations deep (tools/fuzzy_scale.py):
 Every candidate is verified with the built-in JVM ``levenshtein``;
 blocking affects cost only, never the answer (brute-force equality in
 tests/test_fuzzy.py; planted recall 1.0 at 110k strings in
-tools/fuzzy_scale.py). The optional ``max_df`` cap drops ultra-hot
-grams from candidate generation — same contract as jaccard_pairs'
-hot-shingle cap: bounded buckets, documented recall loss (a pair
-found ONLY via capped grams is missed); default None keeps the join
-exact.
+SCALING.md §"Fuzzy-join blocking"). The optional ``max_df`` cap
+drops ultra-hot grams from candidate generation — same contract as
+jaccard_pairs' hot-shingle cap: bounded buckets, documented recall
+loss (a pair found ONLY via capped grams is missed); default None
+keeps the join exact.
 """
 
 from __future__ import annotations

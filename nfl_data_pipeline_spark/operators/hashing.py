@@ -176,28 +176,6 @@ def duck_shingle_ids(th: str, n: int = 3) -> str:
     )
 
 
-def sp_shingles(tokens: str, n: int = 3) -> str:
-    """Spark SQL: word n-gram shingle strings from a token array.
-
-    Guarded: Spark's sequence(0, k) with k<0 DESCENDS, so short docs
-    must short-circuit to an empty array.
-    """
-    grams = " , ' ', ".join(f"{tokens}[i + {k}]" for k in range(n)).join(
-        ["concat(", ")"]
-    )
-    return (
-        f"CASE WHEN size({tokens}) < {n} THEN array() "
-        f"ELSE transform(sequence(0, size({tokens}) - {n}), i -> {grams}) END"
-    )
-
-
-def duck_shingles(tokens: str, n: int = 3) -> str:
-    """DuckDB: same shingles (1-indexed lists; range upper bound is
-    exclusive and empty when len < n)."""
-    grams = " || ' ' || ".join(f"{tokens}[i + {k}]" for k in range(n))
-    return f"list_transform(range(1, len({tokens}) - {n - 2}), i -> {grams})"
-
-
 def sp_dot(a: str, b: str, dim: int | None = None) -> str:
     """Spark SQL: sequential left-fold dot product of two double arrays
     (bit-identical to the DuckDB fold below).

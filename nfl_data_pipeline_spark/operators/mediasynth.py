@@ -14,9 +14,10 @@ The rich generators fix both while staying fingerprint-APPROPRIATE
 
 - ``rich_image``: per-channel sum of random low-frequency 2D cosine
   fields plus soft gaussian blobs, contrast-normalized. Measured
-  (tools/media_entropy.py): distinct pHashes == n at 50k samples,
-  mean per-bit entropy ≈ 0.98, σ=3 pixel noise moves the pHash ≤ 8
-  bits (p95 = 6) while distinct images sit ≥ 18 bits apart.
+  (SCALING.md §"media fixture generators"): distinct pHashes == n at
+  50k samples, mean per-bit entropy ≈ 0.98, σ=3 pixel noise moves
+  the pHash ≤ 8 bits (p95 = 6) while distinct images sit ≥ 18 bits
+  apart.
 - ``rich_clip``: a note sequence (random 80-200 ms notes, 150-3200 Hz
   fundamentals with two harmonics, attack/decay envelopes), so the
   spectral peak set CHANGES across frames. Measured: ~134 distinct

@@ -31,16 +31,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_META = T.StructType(
-    [
-        T.StructField("mime", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("duration_ms", T.IntegerType()),
-        T.StructField("n_frames", T.IntegerType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -859,10 +849,10 @@ def audio_near_dups(
     co-occurrences: stationary content (held tones, silence) repeats
     each landmark hash at every anchor frame, so a single shared
     value would otherwise yield n_frames offset-consistent raw votes
-    and chain-merge unrelated clips (measured:
-    tools/mediadedup_scale.py). A true copy shares MANY distinct
-    landmarks at its offset; a coincidental collision shares one or
-    two. ``max_df_hash`` additionally drops hashes shared by more
+    and chain-merge unrelated clips (measured: SCALING.md §"media
+    gates at 2,000 images / 400 clips"). A true copy shares MANY
+    distinct landmarks at its offset; a coincidental collision shares
+    one or two. ``max_df_hash`` additionally drops hashes shared by more
     than that many clips (boilerplate) from candidate generation —
     the hot-shingle cap contract."""
     fp = capped_fingerprints(audio_fingerprints(df), max_df_hash)

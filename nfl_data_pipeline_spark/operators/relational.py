@@ -43,19 +43,6 @@ def top1_per_group(
     )
 
 
-def slice_rows(
-    df: DataFrame, order: Sequence[Column], lo: int, hi: int
-) -> DataFrame:
-    """``dplyr::slice(lo:hi)`` over an explicit total order —
-    darko/2_ourlads_projections.R:157-162."""
-    w = Window.orderBy(*order)
-    return (
-        df.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn").between(lo, hi))
-        .drop("__rn")
-    )
-
-
 def bind_cols_by_rownum(
     left: DataFrame,
     right: DataFrame,

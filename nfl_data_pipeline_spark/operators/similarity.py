@@ -663,9 +663,9 @@ def _assign_nearest(
 
 
 # Default average cluster size for the adaptive k rule. From the
-# tools/semdedup_scale.py measurements (SCALING.md): 50k/64 (avg 781)
-# and 100k/256 (avg 390) both keep the pairwise stage ~20M pairs;
-# 512 sits between them. With k = n / 512 the intra-cluster pair
+# SCALING.md §"Semantic-dedup pair bound" measurements: 50k/64
+# (avg 781) and 100k/256 (avg 390) both keep the pairwise stage ~20M
+# pairs; 512 sits between them. With k = n / 512 the intra-cluster pair
 # count grows LINEARLY in n (≈ n·512/2) instead of quadratically
 # (n²/2k with a fixed k) — the safe behavior is the default, the
 # explicit-k knob stays for oracle-pinned configs.
@@ -714,11 +714,11 @@ def semantic_dedup(
 
     ``n_probe > 1`` mitigates the method's boundary-miss recall gap
     (a copy and its original split across adjacent cells — measured
-    1-2% of planted dups in tools/semdedup_scale.py): pairs are also
-    considered when one side's PRIMARY cell is among the other side's
-    ``n_probe`` nearest, inflating the pair fan-in by ≤ n_probe while
-    the reported clustering stays the primary assignment. The default
-    (1) is the oracle-checked configuration.
+    1-2% of planted dups, SCALING.md §"Semantic-dedup pair bound"):
+    pairs are also considered when one side's PRIMARY cell is among
+    the other side's ``n_probe`` nearest, inflating the pair fan-in by
+    ≤ n_probe while the reported clustering stays the primary
+    assignment. The default (1) is the oracle-checked configuration.
 
     Scale posture: two broadcast-join assignment passes (centroids are
     k rows), one explode+hash-agg for the update (map-side combine on
@@ -843,8 +843,8 @@ def semantic_dedup_ml(
     the deterministic variant — swap the clustering, keep the dedup
     semantics. Not oracle-checkable (ml KMeans is seed-stable within
     Spark but not reproducible in SQL); equivalence-of-shape is
-    asserted in tests and recall is measured against planted dups in
-    tools/semdedup_scale.py.
+    asserted in tests and recall against planted dups is recorded in
+    SCALING.md §"Semantic-dedup pair bound".
     """
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector

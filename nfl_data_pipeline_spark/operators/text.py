@@ -24,28 +24,6 @@ def with_tokens(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("tokens", F.split(F.col(text_col), " "))
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Token counts + mean token length.
-
-    Mean token length uses the exact identity for single-space text:
-    sum(len(tok)) == len(text) - (n_tokens - 1) — integer math, no
-    per-token pass.
-    """
-    t = with_tokens(df, text_col)
-    n = F.size("tokens")
-    return t.select(
-        "doc_id",
-        n.alias("n_tokens"),
-        F.size(F.array_distinct("tokens")).alias("n_distinct_tokens"),
-        (F.size(F.array_distinct("tokens")) / n.cast("double")).alias(
-            "distinct_ratio"
-        ),
-        (
-            (F.length(text_col) - (n - 1)).cast("double") / n.cast("double")
-        ).alias("mean_token_len"),
-    )
-
-
 def stopword_count(tokens: Column | str, stopwords=STOPWORDS) -> Column:
     toks = F.col(tokens) if isinstance(tokens, str) else tokens
     stop_arr = F.array(*[F.lit(s) for s in stopwords])

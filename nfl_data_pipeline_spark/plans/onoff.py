@@ -153,18 +153,3 @@ def on_off_table(
         .select("split", "rowname", "epa", "success", "p", "play", "fd")
     )
 
-
-def on_off_overall(
-    participation: DataFrame, gsis_id: str, team: str,
-    side: str = "posteam",
-) -> DataFrame:
-    """Overall on/off split incl. pass rate (the `mean(pass)` rows of
-    the reference's blocks), with display rounding à la `:92`
-    (bround = R's round)."""
-    tagged = split_on_off(participation, gsis_id, team, side=side)
-    return tagged.groupBy("on_field").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.bround(F.avg("epa"), 2).alias("epa_play"),
-        F.avg("pass").alias("pass_rate"),
-        F.avg("success").alias("success_rate"),
-    )

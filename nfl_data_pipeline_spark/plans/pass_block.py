@@ -99,14 +99,6 @@ def pbwr_vs_grade(espn: DataFrame, pff: DataFrame) -> DataFrame:
     )
 
 
-def join_grade_panels(a: DataFrame, b: DataFrame) -> DataFrame:
-    """full_join(pff, by=c('season','posteam')) — J4 (:71). dplyr
-    full_join matches NA keys (na_matches="na" default) and emits ONE
-    key column — r_join reproduces both (a plain Spark full_outer
-    would keep two NA-keyed rows where R merges them)."""
-    return r_join(a, b, ["season", "team_abbr"], "full_outer")
-
-
 def top_snap_players(player_grades: DataFrame, min_snaps: int = 400) -> DataFrame:
     """Snap filter + one row per player-season (top snaps)
     (pff/99_passblock_piece.R:220-226)."""

@@ -1109,7 +1109,8 @@ def profile_hist_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
     "Spark's HLL estimate has no cross-engine oracle; the EXACT twin "
     "(profile_table, same operator with exact=True) carries the "
     "value-hash gate for the shared plumbing, and "
-    "tools/distinct_accuracy.py pins the estimate's error envelope.",
+    "SCALING.md §\"Exact vs approximate COUNT DISTINCT\" records the "
+    "estimate's error envelope.",
 )
 def profile_table_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem")

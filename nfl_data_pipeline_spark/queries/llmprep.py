@@ -414,8 +414,9 @@ def domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # nats/token; docs above this are "surprising" outliers. Sits at the
 # fixture corpus's ~97th xent percentile (range 3.38-3.70, median
-# 3.40; 3.446 observed at p97 — tools/xent_cut_derivation.py,
-# SCALING.md round 12) so the outlier flag and the funnel's
+# 3.40; 3.446 observed at p97 — SCALING.md §"perplexity-gate cut
+# provenance"; tests/test_streaming_funnel.py pins the count of docs
+# at or under each cut) so the outlier flag and the funnel's
 # perplexity gate actually discriminate — a cut outside the observed
 # range would make both vacuous.
 _XENT_CUT = 3.45
@@ -502,8 +503,8 @@ _BIGRAM_K = 0.5  # add-k smoothing, shared with oracle + streaming twin
 # Bigram-gate outlier threshold for the incremental funnel's optional
 # order-2 perplexity stage (streaming/funnel.py use_bigram): ~p95 of
 # the fixture corpus's bigram cross-entropy (the unigram _XENT_CUT
-# convention; 3.4405 observed — regenerate the percentile ladder with
-# tools/xent_cut_derivation.py, recorded in SCALING.md round 12).
+# convention; 3.4405 observed — SCALING.md §"perplexity-gate cut
+# provenance", pinned by tests/test_streaming_funnel.py).
 # One definition so the gate and any batch re-derivation cannot
 # drift.
 _BIGRAM_XENT_CUT = 3.44
@@ -586,7 +587,8 @@ def bigram_pairs(docs: DataFrame) -> DataFrame:
     "deliberate trade against the r10 window form's three "
     "no-combine corpus-sized exchanges and against checkpointing a "
     "(doc,prev,term) pre-fold that real positional text barely "
-    "compresses (tools/bigram_skew_scale.py measures all three). "
+    "compresses (SCALING.md §\"bigram_logprob off skewed windows\" "
+    "measures all three). "
     "Docs under 2 tokens score no bigrams and drop, same rule both "
     "engines. The smoothing term matters when this LM scores NEW "
     "text (unseen bigrams get k/(c+kV) instead of -inf); on the "
@@ -604,7 +606,7 @@ def bigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact join share one materialization (unlike unigram's dt, a
     # (doc,prev,term) pre-fold would NOT compress positional text
     # and would cost a corpus-sized checkpoint — measured in
-    # tools/bigram_skew_scale.py)
+    # SCALING.md §"bigram_logprob off skewed windows")
     bg = pairs.groupBy("prev", "term").agg(
         F.count("*").cast("long").alias("bc")
     )

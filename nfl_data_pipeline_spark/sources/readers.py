@@ -36,18 +36,6 @@ def read_csv(
     )
 
 
-def read_json(
-    spark: SparkSession, path: str, schema: T.StructType, multiline: bool = True
-) -> DataFrame:
-    """JSON documents with explicit schema — S8 (`fromJSON` payloads,
-    R/espn_wp.R:41-44)."""
-    return (
-        spark.read.schema(schema)
-        .option("multiLine", multiline)
-        .json(path)
-    )
-
-
 def parse_json_column(
     df: DataFrame, col: str, schema: T.DataType, out: str = "parsed"
 ) -> DataFrame:

@@ -52,7 +52,7 @@ precisely: the per-batch registry SHUFFLE drops from O(registry) to
 O(dups + fpp·batch); the registry SCAN is only pruned bucket-wise
 and stays O(registry) when the maybe-set covers all buckets (uniform
 hashes do, for any batch larger than a few × _NB). Measured consequence
-(tools/funnel_bloom_scale.py, SCALING.md): on local[32] with a warm
+(SCALING.md §"Funnel registry probe"): on local[32] with a warm
 page cache the scan dominates and the plain broadcast/shuffle join
 wins to ≥32M registry fps, so the bloom engages only past
 ``bloom_engage_bytes`` (default sized from that measurement); on a
@@ -105,8 +105,8 @@ class FunnelState:
     registry has reached that size: below it, commits carry a null
     sidecar pointer and write no bitmap, and the first maintaining
     commit bootstraps the bloom from the registry in one pass. The
-    default is the measured LOCAL crossover (~4 GiB:
-    tools/funnel_bloom_scale.py shows the plain join winning to
+    default is the measured LOCAL crossover (~4 GiB: SCALING.md
+    §"Funnel registry probe" shows the plain join winning to
     ≥32M fps / 1.2 GB on local[32], both paths scan-bound); deploys
     where shuffle bandwidth, not scan, is the scarce resource should
     lower it toward the broadcast-join threshold."""

@@ -24,10 +24,11 @@ registries stay probe-compatible) banded 16×2 → candidate recall
 1-(1-J²)^16 ≈ 0.99 at J=0.5, and VERIFIES candidates exactly on the
 shingle sets (|∩|/|∪| via array_intersect/union — integer-exact, no
 estimator softness). Net: recall at the threshold itself ≈ banding
-recall ≈ 0.99, precision 1.0 among candidates (measured:
-tools/neardup_gate_recall.py). ``exact_verify=False`` falls back to
-the 32-perm estimate (1/32 steps) for deployments that can't afford
-the sids registry.
+recall ≈ 0.99, precision 1.0 among candidates (SCALING.md §"Near-dup
+gate recall"; guarded by tests/test_streaming_neardup.py::
+test_gate_recall_steps_at_threshold). ``exact_verify=False`` falls
+back to the 32-perm estimate (1/32 steps) for deployments that can't
+afford the sids registry.
 
 Per batch:
 

@@ -124,6 +124,8 @@ _SMOKE_MODULES = {
     "test_profile_hist",
     # r13: the segment-vectorized pair kernels' semantic contracts
     "test_pair_kernel",
+    # static: every cited tool exists and every tool's imports resolve
+    "test_tools_inventory",
 }
 
 

@@ -352,10 +352,11 @@ def test_opq_rotation_versions_with_codes(spark, tmp_path):
 
 
 def test_pq_recall_curve_floor(spark, tmp_path):
-    """The rerank-depth dial (tools/annindex_scale.py pq_tier, the r8
-    VERDICT item): at a fixed seed and an ADC-RESOLVABLE geometry,
-    recall@5 vs the exact path rises monotonically with shortlist
-    and clears a pinned floor at each depth. 64-dim / pq_m=8 so each
+    """The rerank-depth dial (SCALING.md §"PQ/ADC recall vs rerank
+    depth", the r8 VERDICT item): at a fixed seed and an
+    ADC-RESOLVABLE geometry, recall@5 vs the exact path rises
+    monotonically with shortlist and clears a pinned floor at each
+    depth. 64-dim / pq_m=8 so each
     subspace quantizes 8 dims into 16 codes — the module's 8-dim
     fixtures would make PQ scalar quantization (16 levels per single
     dimension, near-lossless: recall 1.0 at every depth, a vacuous

@@ -108,7 +108,7 @@ def test_planted_duplicate_chains_cluster_fully(spark):
 
 def _synth_vectors(spark, n: int, dim: int = 8):
     """Deterministic pseudo-random unit-scale vectors (hash-phase noise,
-    same idiom as tools/semdedup_scale.py)."""
+    same idiom as SCALING.md §"Semantic-dedup pair bound")."""
     cols = [
         F.expr(
             f"cast(hash(id, {d}) % 1000 as double) / 1000.0"

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from nfl_data_pipeline_spark.catalog import load
 from nfl_data_pipeline_spark.queries import all_queries
+from nfl_data_pipeline_spark.queries.llmprep import _BIGRAM_XENT_CUT, _XENT_CUT
 from nfl_data_pipeline_spark.streaming.funnel import (
     FunnelState,
     funnel_maintenance_stream,
@@ -386,3 +387,31 @@ def test_fps_append_takes_driver_path_when_small(spark, tmp_path):
         if e["site"].endswith("-append")
     }
     assert evs["funnel.py:fps-append"]["path"] == "driver"
+
+
+@pytest.mark.parametrize(
+    "query, cut, n_at_or_below",
+    [
+        ("unigram_logprob", _XENT_CUT, 485),
+        ("bigram_logprob", _BIGRAM_XENT_CUT, 473),
+    ],
+    ids=["unigram", "bigram"],
+)
+def test_lm_gate_cut_sits_at_recorded_fixture_percentile(
+    spark, query, cut, n_at_or_below
+):
+    """The perplexity gates' cuts are pinned constants placed at a
+    percentile of the fixture corpus (unigram ~p97, bigram ~p95), so
+    the gates discriminate and their verdicts stay replay-stable. A
+    regenerated documents fixture or a moved cut changes how many
+    docs score at or under the cut."""
+    xs = [
+        r["xent_nats"]
+        for r in all_queries()[query].spark(spark, SF_SMOKE).collect()
+    ]
+    got = (len(xs), sum(x <= cut for x in xs))
+    assert got == (500, n_at_or_below), (
+        f"{query}: {got[1]} of {got[0]} docs score <= {cut}, recorded "
+        f"{n_at_or_below} of 500. Re-derive the percentile ladder and "
+        're-pin consciously: SCALING.md §"perplexity-gate cut provenance".'
+    )
