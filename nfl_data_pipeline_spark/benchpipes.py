@@ -146,7 +146,7 @@ def incremental_funnel(spark: SparkSession, out_dir: str) -> None:
 def incremental_curation(spark: SparkSession, out_dir: str) -> None:
     """Composed incremental curation (streaming/curation.py): two
     half-corpus micro-batches through the FULL chain — funnel gates +
-    bloom-guarded exact dedup + MinHash near-dup gate + mergeable
+    registry exact dedup + MinHash near-dup gate + mergeable
     counts + kept-length histogram. Separate bench key from the
     funnel-only pipeline so each path keeps its own baseline."""
     import os

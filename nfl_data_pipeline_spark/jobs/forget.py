@@ -21,13 +21,6 @@ Two layers:
    the next arrival register fresh, exactly as if the deleted doc had
    never been seen.
 
-Bloom-sidecar honesty (funnel): blooms cannot delete, so after a
-purge the fingerprint bloom still answers "maybe" for forgotten fps.
-That is SAFE — the bloom is a probe prefilter whose false positives
-only cost a join that then finds nothing (the no-false-negative
-contract is untouched). The bitmap tightens again at the next
-maintenance rebuild.
-
 Gate-config stamps survive purges: ``TxTable.commit`` carries meta
 keys forward, so a purge commit keeps the registry probe-compatible.
 """
@@ -321,10 +314,7 @@ def forget_docs_funnel(
     spark: SparkSession, state, doc_ids, batch_id: str | None = None
 ) -> dict:
     """Purge doc ids from the funnel's exact-fingerprint registry
-    (streaming/funnel.FunnelState). The bloom sidecar is left as-is —
-    stale "maybe" answers are safe (prefilter false positives only;
-    see module docstring) and the bitmap tightens at the next
-    maintenance rebuild. Vocab/count tables are AGGREGATES, not
+    (streaming/funnel.FunnelState). Vocab/count tables are AGGREGATES, not
     per-doc records: they hold no row attributable to a document, so
     nothing to purge there."""
     return {

@@ -535,23 +535,6 @@ class TxTable:
                 maxs[c] = hi if c not in maxs else max(maxs[c], hi)
         return mins, maxs
 
-    def live_bytes(self, version: int | None = None) -> int:
-        """Total data bytes in a snapshot, from the manifest alone
-        (entries written before the ``bytes`` field fall back to one
-        stat call each). The size dial other components use to pick a
-        strategy — e.g. streaming/funnel.py engages its bloom
-        prefilter only once the registry outgrows broadcastability."""
-        total = 0
-        for f in self.manifest(version)["files"]:
-            b = f.get("bytes")
-            if b is None:
-                try:
-                    b = os.path.getsize(f["path"])
-                except OSError:
-                    b = 0
-            total += b
-        return total
-
     # ---- read -----------------------------------------------------------
 
     def read(
@@ -932,7 +915,7 @@ class TxTable:
 
     def meta(self, version: int | None = None) -> dict:
         """Free-form sidecar metadata carried by the snapshot (e.g.
-        the bloom-filter sidecar path streaming/funnel.py maintains).
+        the ANN codebook sidecar path streaming/annindex.py maintains).
         Keys persist across commits until overridden."""
         return self.manifest(version).get("meta", {})
 
@@ -1126,11 +1109,11 @@ class TxTable:
                     )
                     os.unlink(os.path.join(self.log_dir, f))
         deleted = 0
-        # sidecars (e.g. bloom bitmaps) referenced by retained
+        # sidecars (e.g. ANN codebooks) referenced by retained
         # manifests; compare by realpath so a table rooted at a
         # relative or non-canonical path still protects its live
         # sidecar (exact-string/isabs matching would delete it and
-        # silently degrade every batch to the O(registry) bootstrap)
+        # leave the manifest pointing at a missing file)
         keep_sidecars = {
             os.path.realpath(v2)
             for v in keep_versions

@@ -1039,10 +1039,14 @@ def embedding_near_dups_banded(
     ``max_bucket`` drops hot band buckets from candidate generation
     (boilerplate/zero-vector floods), same contract as
     simhash_near_pairs.
+
+    Without ``dim``, the width comes from the ``_count_and_width``
+    contract: mixed widths raise ``ValueError`` and NULL vectors are
+    skipped (never a pair).
     """
     if dim is None:
-        probe = df.select(F.size(vec_col)).first()
-        if probe is None:  # empty frame: no pairs
+        _, dim = _count_and_width(df, vec_col)
+        if not dim:  # no non-NULL vector: no pairs
             from nfl_data_pipeline_spark.operators.localframe import (
                 empty_frame,
             )
@@ -1050,7 +1054,6 @@ def embedding_near_dups_banded(
             return empty_frame(
                 df.sparkSession, "vec_a long, vec_b long, cosine double"
             )
-        dim = int(probe[0])
     # Projections stay the SQL engine: an exact-order Arrow projector
     # was ~2.7x faster on the projection stage in isolation, but its
     # Python-stage fixed cost came to ~+0.5 s end to end, while the

@@ -8,8 +8,9 @@ refit their coarse quantizer per call — fine for one-shot analytics,
 wrong for a standing index: queries must route against the SAME
 centroids the stored vectors were assigned under, and a new batch of
 vectors must not silently retrain the router. Here the trained state
-is a JSON sidecar referenced from the commit meta (the funnel bloom
-sidecar pattern, streaming/funnel.py FunnelState.save_fp_bloom), so:
+is a JSON sidecar referenced from the commit meta (jobs/txlog.py
+``TxTable.meta``; vacuum keeps a sidecar while a retained manifest
+names it), so:
 
 - codebook and vector assignments move ATOMICALLY (one manifest
   swap); a crash between sidecar write and commit leaves an orphan
@@ -18,9 +19,9 @@ sidecar pattern, streaming/funnel.py FunnelState.save_fp_bloom), so:
   pointer in ``meta(v)`` reproduce the exact index state at v;
 - replay is idempotent: batch ids ride every commit, an applied
   batch re-run changes nothing;
-- rebuilds are PINNED (``expected_version`` + bounded retry, the
-  bloom-rebuild protocol): a vector batch landing mid-rebuild forces
-  a refit from the new snapshot instead of silently dropping rows;
+- rebuilds are PINNED (``expected_version`` + bounded retry): a
+  vector batch landing mid-rebuild forces a refit from the new
+  snapshot instead of silently dropping rows;
 - forget purges (right-to-be-forgotten) rewrite ONLY the cell
   partitions holding the purged ids and record those cells as
   ``stale_cells`` in the meta — the centroids were trained on data
@@ -471,9 +472,9 @@ def rebuild_ann_index(
     spark: SparkSession, state: AnnIndexState, max_retries: int = 3
 ) -> dict:
     """Refit the centroids on the CURRENT vector set and re-assign
-    every row, swapping rows + codebook in ONE pinned commit (the
-    bloom-rebuild protocol, streaming/funnel.py): ``expected_version``
-    makes the swap conditional on the snapshot the fit read, so a
+    every row, swapping rows + codebook in ONE pinned commit:
+    ``expected_version`` makes the swap conditional on the snapshot
+    the fit read, so a
     vector batch landing mid-rebuild forces a refit from the new
     snapshot rather than silently dropping its rows. Clears
     ``stale_cells`` (the forget marker) — the new centroids are

@@ -76,7 +76,7 @@ def funnel_survivors(
     originals (r7 code review: the previous inlined copy had to be
     edited in lockstep with process_funnel_batch or the kept corpus
     desynched from the counts)."""
-    flagged, _ = gate_flags(spark, docs, state)
+    flagged = gate_flags(spark, docs, state)
     return _surviving_docs(docs, flagged)
 
 
@@ -366,16 +366,16 @@ def maintain_curation_state(
     grace_s: float = 300.0,
 ) -> dict:
     """One maintenance pass over EVERY table the composed step
-    touches: the funnel's three tables (+ bloom sidecar collection
-    and rebuild), the near-dup gate's signature/sids registries, and
-    the two local merge tables. Between-batches safe for the same
+    touches: the funnel's three tables, the near-dup gate's
+    signature/sids registries, and the two local merge tables.
+    Between-batches safe for the same
     reason each underlying compact is: identical rows, new layout,
     markers and meta carried forward.
 
     ``forget_queue`` (a jobs/forget.ForgetQueue) drains FIRST, so
     queued right-to-be-forgotten ids purge on the maintenance cadence
-    and the subsequent compaction + bloom rebuild immediately reclaim
-    the space and tighten the prefilter over the purged rows."""
+    and the subsequent compaction immediately reclaims the space
+    over the purged rows."""
     from nfl_data_pipeline_spark.streaming.funnel import (
         maintain_funnel_state,
     )

@@ -36,7 +36,10 @@ from pyspark.sql import functions as F
 
 from nfl_data_pipeline_spark.jobs.txlog import TxTable
 from nfl_data_pipeline_spark.operators.dedup import registry_winner_verdicts
-from nfl_data_pipeline_spark.operators.similarity import hyperplane_band_rows
+from nfl_data_pipeline_spark.operators.similarity import (
+    _count_and_width,
+    hyperplane_band_rows,
+)
 
 _NB = 16  # registry hash buckets
 
@@ -75,18 +78,17 @@ def process_embdedup_batch(
 
     ``engine="arrow"`` switches the projection to the numpy matmul
     fast path (same hash-derived planes; ~100x per-vector — see
-    hyperplane_band_rows). Use ONE engine per registry."""
-    if dim is None:
-        probe = vectors.select(F.size(vec_col)).first()
-        if probe is None:  # empty micro-batch: nothing to gate
-            from nfl_data_pipeline_spark.operators.localframe import (
-                empty_frame,
-            )
+    hyperplane_band_rows). Use ONE engine per registry.
 
-            return empty_frame(
-                spark, f"{id_col} long, dup_of long, keep int"
+    Without ``dim``, the width comes from the ``_count_and_width``
+    contract: mixed widths raise ``ValueError`` and NULL vectors are
+    skipped (never a duplicate)."""
+    if dim is None:
+        _, dim = _count_and_width(vectors, vec_col)
+        if not dim:  # empty batch or NULL vectors only: all kept
+            return vectors.select(
+                id_col, F.col(id_col).alias("dup_of"), F.lit(1).alias("keep")
             )
-        dim = int(probe[0])
     cfg = {
         "fp": "hyperplane_lsh",
         "threshold": threshold,

@@ -43,26 +43,9 @@ Scale: per batch the vocab rewrite is O(|vocab|) across _NB buckets
 (independent of corpus size; raise _NB or adopt an LSM-style partial
 merge when the vocabulary itself is huge), fingerprints grow
 append-only, and counts stay at #sources rows. The dedup gate's
-registry probe is bloom-prefiltered (operators/bloom.py): the bitmap
-sidecar moves atomically with the fps commit it covers, so a
-bloom-negative fp is PROVABLY new and skips the registry entirely,
-and the bloom-positive remainder (true dups + ~fpp false positives)
-joins only the registry buckets it hashes into. What that buys,
-precisely: the per-batch registry SHUFFLE drops from O(registry) to
-O(dups + fpp·batch); the registry SCAN is only pruned bucket-wise
-and stays O(registry) when the maybe-set covers all buckets (uniform
-hashes do, for any batch larger than a few × _NB). Measured consequence
-(SCALING.md §"Funnel registry probe"): on local[32] with a warm
-page cache the scan dominates and the plain broadcast/shuffle join
-wins to ≥32M registry fps, so the bloom engages only past
-``bloom_engage_bytes`` (default sized from that measurement); on a
-multi-executor cluster the scan parallelizes while shuffle bandwidth
-is the scarce resource, which moves the engage point down toward the
-broadcast-join limit — it is a deploy dial, not a constant. Below
-that size no probe reads the bitmap, so those commits carry a null
-sidecar pointer and pay no bloom upkeep; the first commit at or past
-it bootstraps the bitmap from the registry in one pass (sound: it
-covers every committed fp).
+registry probe is one plain left join: it was measured faster than a
+prefiltered probe at every registry size tried, 1M-32M fps
+(SCALING.md §"Funnel registry probe").
 """
 
 from __future__ import annotations
@@ -79,45 +62,19 @@ from nfl_data_pipeline_spark.jobs.txlog import (
     merge_grouped_sums,
     prepare_grouped_sums,
 )
-from nfl_data_pipeline_spark.operators.bloom import (
-    Bloom,
-    bloom_from_df,
-    update_bloom,
-    with_might_contain,
-)
 
 _NB = 16  # state hash buckets (vocab + fingerprints)
 
 
 class FunnelState:
-    """The three state tables of one incremental funnel, plus the
-    bloom sidecar over the fingerprint registry.
-
-    ``bloom_capacity``/``bloom_fpp`` size the registry prefilter (see
-    operators/bloom.py); ``use_bloom=False`` falls back to the plain
-    full-registry join — kept as the equivalence baseline for tests
-    and for registries whose key distribution defeats a bloom (none
-    known).
-
-    The bloom is ENGAGED on the probe side once the registry exceeds
-    ``bloom_engage_bytes`` — below that the plain join is strictly
-    cheaper — and MAINTAINED (O(batch) per commit) only once the
-    registry has reached that size: below it, commits carry a null
-    sidecar pointer and write no bitmap, and the first maintaining
-    commit bootstraps the bloom from the registry in one pass. The
-    default is the measured LOCAL crossover (~4 GiB: SCALING.md
-    §"Funnel registry probe" shows the plain join winning to
-    ≥32M fps / 1.2 GB on local[32], both paths scan-bound); deploys
-    where shuffle bandwidth, not scan, is the scarce resource should
-    lower it toward the broadcast-join threshold."""
+    """The three state tables of one incremental funnel (plus the
+    optional bigram LM tables). The fingerprint registry is probed with
+    a plain left join (``registry_probe``; SCALING.md §"Funnel registry
+    probe" is why there is no prefilter)."""
 
     def __init__(
         self,
         root: str,
-        bloom_capacity: int = 2_000_000,
-        bloom_fpp: float = 0.01,
-        use_bloom: bool = True,
-        bloom_engage_bytes: int = 4 * 1024 * 1024 * 1024,
         use_repetition: bool = False,
         use_bigram: bool = False,
     ):
@@ -136,10 +93,6 @@ class FunnelState:
         if use_bigram:
             self.bigrams = TxTable(os.path.join(root, "bigrams"))
             self.contexts = TxTable(os.path.join(root, "contexts"))
-        self.bloom_capacity = bloom_capacity
-        self.bloom_fpp = bloom_fpp
-        self.use_bloom = use_bloom
-        self.bloom_engage_bytes = bloom_engage_bytes
         # optional Gopher-rule repetition stage (queries/llmprep.py
         # repetition_stats), OFF by default — it is stateless, so the
         # only cost is one extra posting-list pass per batch. Pick at
@@ -147,35 +100,6 @@ class FunnelState:
         # the counts table with mixed-meaning n_final history (and a
         # pre-repetition table has no n_rep column to merge into).
         self.use_repetition = use_repetition
-
-    def fp_bloom(self, spark: SparkSession) -> Bloom | None:
-        """Current registry bloom: the manifest-referenced sidecar,
-        bootstrapped in one distributed pass for a pre-bloom registry
-        (legacy state), None for an empty registry."""
-        if not self.use_bloom:
-            return None
-        path = self.fps.meta().get("bloom")
-        if path and os.path.exists(path):
-            return Bloom.load(path)
-        stored = self.fps.read(spark)
-        if stored is None:
-            return None
-        return bloom_from_df(
-            stored, "fp", self.bloom_capacity, self.bloom_fpp
-        )
-
-    def save_fp_bloom(self, bloom: Bloom) -> str:
-        """Write the bloom sidecar; the caller references the returned
-        path in the SAME fps commit (meta={"bloom": path}) so bitmap
-        and registry move atomically — a crash in between leaves an
-        orphan sidecar, cleaned by vacuum."""
-        import uuid
-
-        side_dir = os.path.join(self.fps.root, "sidecar")
-        os.makedirs(side_dir, exist_ok=True)
-        path = os.path.join(side_dir, f"{uuid.uuid4().hex}.blm")
-        bloom.save(path)
-        return path
 
 
 def _bucket(col: str):
@@ -237,58 +161,12 @@ def _xent_vs_vocab(
 
 def registry_probe(
     spark: SparkSession, state: FunnelState, batch: DataFrame
-) -> tuple[DataFrame, Bloom | None]:
+) -> DataFrame:
     """Left-join ``batch`` (columns incl. ``fp``) against the
     fingerprint registry, adding ``first_doc`` (the stored winner's
-    doc_id, null if the fp is new). The heart of the dedup gate, and
-    the piece whose cost scales with the REGISTRY, so it carries the
-    strategy switch:
-
-    - registry below ``bloom_engage_bytes``: one plain left join —
-      AQE broadcasts the registry, nothing beats that.
-    - above: a batch fp the bloom rejects is DEFINITELY new (no false
-      negatives — every committed fp entered the bloom in the same
-      atomic manifest swap) and skips the registry entirely; only
-      bloom-positive rows (true dups + ~fpp false positives) probe
-      it, reading only the registry BUCKETS they hash to (manifest
-      partition pruning). This shrinks the per-batch registry
-      SHUFFLE to O(dups + fpp·batch); the pruned SCAN remains
-      O(registry) for batches whose maybe-set covers all buckets —
-      see the module docstring for the measured consequences.
-
-    Returns (joined batch, loaded bloom or None) so a caller that is
-    about to commit can reuse the loaded bitmap.
-    """
-    bloom = None
-    engaged = (
-        state.use_bloom
-        and state.fps.live_bytes() > state.bloom_engage_bytes
-    )
-    if engaged:
-        bloom = state.fp_bloom(spark)
-        engaged = bloom is not None
-    if engaged:
-        batch = with_might_contain(spark, batch, "fp", bloom)
-        batch = batch.localCheckpoint(eager=True)  # gates computed once
-        probe = batch.filter(F.col("_maybe"))
-        rest = batch.filter(~F.col("_maybe")).withColumn(
-            "first_doc", F.lit(None).cast("long")
-        )
-        buckets = {
-            r[0] for r in probe.select(_bucket("fp")).distinct().collect()
-        }
-        stored = (
-            state.fps.read(spark, partitions=buckets) if buckets else None
-        )
-        if stored is None:
-            probe = probe.withColumn("first_doc", F.lit(None).cast("long"))
-        else:
-            # no broadcast hint: the pruned registry side can still
-            # exceed the probe side (AQE broadcasts whichever is small)
-            stored = stored.select("fp", F.col("doc_id").alias("first_doc"))
-            probe = probe.join(stored, "fp", "left")
-        return probe.unionByName(rest), bloom
-    # small registry: one plain left join (AQE broadcast)
+    doc_id, null if the fp is new) — the heart of the dedup gate. AQE
+    broadcasts the registry while it is small and shuffles it past
+    that."""
     stored = state.fps.read(spark)
     if stored is None:
         from nfl_data_pipeline_spark.operators.localframe import (
@@ -298,7 +176,7 @@ def registry_probe(
         stored = empty_frame(spark, "fp string, first_doc long")
     else:
         stored = stored.select("fp", F.col("doc_id").alias("first_doc"))
-    return batch.join(stored, "fp", "left"), bloom
+    return batch.join(stored, "fp", "left")
 
 
 def _read_vocab(spark: SparkSession, state: "FunnelState") -> DataFrame:
@@ -317,7 +195,7 @@ def _read_vocab(spark: SparkSession, state: "FunnelState") -> DataFrame:
 
 def gate_flags(
     spark: SparkSession, docs: DataFrame, state: "FunnelState"
-) -> tuple[DataFrame, "object | None"]:
+) -> DataFrame:
     """Every per-doc gate flag for ``docs`` against the CURRENT state
     — THE single definition of the gate frame, shared by the batch
     path (``process_funnel_batch``, which merges the vocab delta
@@ -326,8 +204,7 @@ def gate_flags(
     compute bit-identical verdicts, so neither may carry its own
     copy: a gate added to one and not the other silently desynchs the
     kept corpus from the counts table (the r7 repetition-stage bug
-    class). Returns ``(flagged, bloom)`` — bloom is registry_probe's
-    prefilter handle for callers that maintain it."""
+    class)."""
     from pyspark.sql import Window
 
     from nfl_data_pipeline_spark.queries.llmprep import (
@@ -410,11 +287,10 @@ def gate_flags(
                 .drop("_bx")
             )
 
-    # exact-dedup gate against the fingerprint registry, behind the
-    # bloom prefilter (see registry_probe)
+    # exact-dedup gate against the fingerprint registry
     wdup = Window.partitionBy("fp").orderBy("doc_id")
     flagged = flagged.withColumn("_rn", F.row_number().over(wdup))
-    flagged, bloom = registry_probe(spark, state, flagged)
+    flagged = registry_probe(spark, state, flagged)
     flagged = flagged.withColumn(
         "pass_dedup",
         F.when(
@@ -423,7 +299,7 @@ def gate_flags(
             F.when(F.col("first_doc") == F.col("doc_id"), 1).otherwise(0),
         ).otherwise(F.when(F.col("_rn") == 1, 1).otherwise(0)),
     )
-    return flagged, bloom
+    return flagged
 
 
 def process_funnel_batch(
@@ -474,7 +350,7 @@ def process_funnel_batch(
 
     # 2+3. the shared gate frame (stateless + ppl + optional
     # repetition + registry dedup), pinned before state mutates
-    flagged, bloom = gate_flags(spark, docs, state)
+    flagged = gate_flags(spark, docs, state)
     flagged = flagged.localCheckpoint(eager=True)
 
     # 4+5. register this batch's new fingerprints, then merge the
@@ -486,7 +362,6 @@ def process_funnel_batch(
     from concurrent.futures import ThreadPoolExecutor
 
     fps_adds = None
-    meta = None
     do_fps = not state.fps.is_applied(batch_id)
     delta = funnel_counts_agg(
         flagged,
@@ -527,26 +402,7 @@ def process_funnel_batch(
             batch_id,
         )
     if do_fps:
-        # meta keys persist across commits (txlog carries them
-        # forward), so a use_bloom=False commit must NULL the pointer:
-        # otherwise fps committed without bloom maintenance stay
-        # invisible to a stale sidecar, and re-enabling use_bloom
-        # later yields bloom FALSE NEGATIVES (dups pass the dedup
-        # gate). A null pointer makes fp_bloom fall back to the
-        # one-pass bloom_from_df bootstrap, which is always sound.
-        # Below the engage size no probe reads the bloom, so it is not
-        # maintained either; the first batch at or past it bootstraps.
-        meta = {"bloom": None}
-        if (
-            state.use_bloom
-            and state.fps.live_bytes() >= state.bloom_engage_bytes
-        ):
-            nb = bloom or state.fp_bloom(spark) or Bloom.empty(
-                state.bloom_capacity, state.bloom_fpp
-            )
-            update_bloom(new_fps, "fp", nb)  # O(batch), never O(registry)
-            meta = {"bloom": state.save_fp_bloom(nb)}
-        state.fps.commit(fps_adds.result(), batch_id=batch_id, meta=meta)
+        state.fps.commit(fps_adds.result(), batch_id=batch_id)
     prep = counts_prep.result()
     if prep not in (True, False):
         commit_grouped_sums(state.counts, prep, batch_id)
@@ -586,19 +442,12 @@ def maintain_funnel_state(
     source (counts), so file counts grow linearly with batch count —
     the classic streaming small-file problem. Compact each state
     table back toward one file per partition once ``min_files``
-    accumulate, then vacuum versions beyond ``retain_versions``
-    (which also collects superseded bloom sidecars).
+    accumulate, then vacuum versions beyond ``retain_versions``.
 
     Safe at any point between batches: compaction is a pure metadata
-    transaction (identical rows, new layout), carries the bloom
-    sidecar pointer forward, and replay markers survive — asserted by
-    the maintenance test. When the registry carries a bloom sidecar,
-    maintenance also REBUILDS it from the live fingerprint rows
-    (one registry pass) — the incremental bloom can only grow, so
-    after forget purges (jobs/forget.py) it keeps answering "maybe"
-    for deleted fps; the rebuild tightens it back to the surviving
-    set. Returns per-table compacted-partition and deleted-file
-    counts plus the rebuild flag."""
+    transaction (identical rows, new layout) and replay markers
+    survive — asserted by the maintenance test. Returns per-table
+    compacted-partition and deleted-file counts."""
     out = {}
     tables = [
         ("vocab", state.vocab, "bucket"),
@@ -618,37 +467,6 @@ def maintain_funnel_state(
             retain_versions=retain_versions, grace_s=grace_s
         )
         out[name] = {"compacted": compacted, "deleted_files": deleted}
-    rebuilt = False
-    if state.use_bloom and state.fps.meta().get("bloom"):
-        # The rebuild must be PINNED: a funnel batch committing
-        # between the registry read and the sidecar commit would have
-        # its fps missing from the rebuilt bitmap — a false-NEGATIVE
-        # window (duplicates silently pass the dedup gate).
-        # expected_version makes the swap conditional on the snapshot
-        # the bitmap was built from; on CommitConflict retry from the
-        # new snapshot (bounded), else keep the incrementally-grown
-        # bloom, which is over-approximate but always SOUND.
-        from nfl_data_pipeline_spark.jobs.txlog import CommitConflict
-
-        for _ in range(3):
-            v = state.fps.latest_version()
-            stored = state.fps.read(spark, version=v)
-            if stored is None:
-                break
-            fresh = bloom_from_df(
-                stored, "fp", state.bloom_capacity, state.bloom_fpp
-            )
-            path = state.save_fp_bloom(fresh)
-            try:
-                # metadata-only commit: same live set, new pointer
-                state.fps.commit(
-                    [], expected_version=v, meta={"bloom": path}
-                )
-                rebuilt = True
-                break
-            except CommitConflict:
-                continue
-    out["bloom_rebuilt"] = rebuilt
     return out
 
 

@@ -29,15 +29,14 @@ pinned down:
   deduplicated corpus, not the stream;
 - winner per connected component is its REGISTRY member when one
   exists (first-arrival-wins across batches), else the min batch id;
-- the registry probe is partition-scoped (funnel registry_probe
-  precedent): every row of one probe key (chunk value / landmark
-  hash) lives in one of ``_NB`` hash buckets, so each batch reads
-  only its touched buckets — O(touched buckets), not O(registry) —
-  and the per-key hot caps stay exact over the pruned slice; the
-  caps apply to BOTH sides of the candidate join (batch rows at
-  generation, stored rows at probe), so a key that goes hot across
-  batches stops generating candidates instead of eroding the
-  defense as the registry grows;
+- the registry probe is partition-scoped: every row of one probe
+  key (chunk value / landmark hash) lives in one of ``_NB`` hash
+  buckets, so each batch reads only its touched buckets —
+  O(touched buckets), not O(registry) — and the per-key hot caps
+  stay exact over the pruned slice; the caps apply to BOTH sides of
+  the candidate join (batch rows at generation, stored rows at
+  probe), so a key that goes hot across batches stops generating
+  candidates instead of eroding the defense as the registry grows;
 - batch ids ride every commit → replay idempotence: a replay probes
   the snapshot BEFORE its own commit (``TxTable.read_before_batch``),
   so verdicts reproduce exactly even under the registry-side caps
@@ -82,9 +81,9 @@ from nfl_data_pipeline_spark.operators.multimodal import (
 )
 
 # Registry hash buckets — the manifest-pruning granularity of the
-# partition-scoped probe (funnel registry_probe precedent). All rows
-# of one probe key (chunk value / landmark hash) land in ONE bucket,
-# so a probe that reads only the batch's touched buckets sees every
+# partition-scoped probe. All rows of one probe key (chunk value /
+# landmark hash) land in ONE bucket, so a probe that reads only the
+# batch's touched buckets sees every
 # possible match AND the exact per-key frequencies (the hot caps stay
 # exact over the pruned slice). Stamped into the gate config — and
 # DERIVED from the stamp for existing registries: the probe's bucket

@@ -328,9 +328,8 @@ def test_forget_queue_batched_drain(spark, tmp_path):
 def test_forget_queue_drains_on_maintenance(spark, tmp_path):
     """maintain_curation_state(forget_queue=...) drains queued
     tombstones BEFORE compacting, so purges ride the maintenance
-    cadence and the rebuilt bloom no longer maybes the purged fp."""
+    cadence."""
     from nfl_data_pipeline_spark.jobs.forget import ForgetQueue
-    from nfl_data_pipeline_spark.operators.bloom import with_might_contain
     from nfl_data_pipeline_spark.streaming.curation import (
         CurationState,
         maintain_curation_state,
@@ -338,14 +337,9 @@ def test_forget_queue_drains_on_maintenance(spark, tmp_path):
     )
 
     docs = load(spark, SF_SMOKE, "documents").filter(F.col("doc_id") < 120)
-    state = CurationState(str(tmp_path / "c"), bloom_engage_bytes=0)
+    state = CurationState(str(tmp_path / "c"))
     kept = process_curation_batch(spark, docs, state, "b0")
     target = min(r["doc_id"] for r in kept.select("doc_id").collect())
-    target_fp = (
-        state.funnel.fps.read(spark)
-        .filter(F.col("doc_id") == target)
-        .first()["fp"]
-    )
 
     q = ForgetQueue(str(tmp_path / "q"))
     q.enqueue(spark, [target], batch_id="e0")
@@ -354,18 +348,14 @@ def test_forget_queue_drains_on_maintenance(spark, tmp_path):
     )
     assert stats["forget"]["drained"] == 1
     assert stats["forget"]["queue_cleared"]
-    assert stats["funnel"]["bloom_rebuilt"]
     assert q.pending(spark) == 0
-    # the purge landed and the rebuilt bloom is tight over it
+    # the purge landed
     assert (
         state.funnel.fps.read(spark)
         .filter(F.col("doc_id") == target)
         .count()
         == 0
     )
-    fp_df = spark.createDataFrame([(target_fp,)], "fp string")
-    fresh = state.funnel.fp_bloom(spark)
-    assert not with_might_contain(spark, fp_df, "fp", fresh).first()["_maybe"]
 
 
 def test_forget_queue_drain_vacuums_tombstone_files(spark, tmp_path):

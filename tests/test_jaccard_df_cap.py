@@ -54,3 +54,16 @@ def test_df_cap_keeps_near_dup_scores(spark):
     # lower bound of the exact score
     assert set(capped) == {(0, 1)} and (0, 1) in exact
     assert capped[(0, 1)] <= exact[(0, 1)]
+
+
+def test_scratch_persist_is_bounded(spark):
+    from nfl_data_pipeline_spark.operators.dedup import (
+        _SCRATCH_MAX,
+        _SCRATCH_PERSISTS,
+        scratch_persist,
+    )
+
+    start = len(_SCRATCH_PERSISTS)
+    for i in range(_SCRATCH_MAX + 4):
+        scratch_persist(spark.range(i + 1))
+    assert len(_SCRATCH_PERSISTS) <= _SCRATCH_MAX

@@ -422,20 +422,61 @@ def test_semantic_dedup_probes_match_join_form(spark, n_probe):
     assert sum(1 for _, _, kept in want.values() if not kept) > 0
 
 
-def test_semantic_dedup_input_contract(spark):
-    """Mixed vector widths raise ValueError at the operator boundary;
-    a non-integral id raises TypeError naming the integral-id rule."""
+def _semantic_dups(df, root):
     from nfl_data_pipeline_spark.operators.similarity import semantic_dedup
 
+    out = semantic_dedup(df, k=2).filter(F.col("is_kept") == 0)
+    return {r["vec_id"] for r in out.collect()}
+
+
+def _banded_dups(df, root):
+    from nfl_data_pipeline_spark.operators.similarity import (
+        embedding_near_dups_banded,
+    )
+
+    out = embedding_near_dups_banded(df, threshold=0.95)
+    return {r["vec_b"] for r in out.collect()}
+
+
+def _gate_dups(df, root):
+    from nfl_data_pipeline_spark.streaming.embdedup import (
+        EmbDedupState,
+        process_embdedup_batch,
+    )
+
+    out = process_embdedup_batch(
+        df.sparkSession, df, EmbDedupState(root), "b0", threshold=0.95
+    )
+    return {r["vec_id"] for r in out.filter(F.col("keep") == 0).collect()}
+
+
+@pytest.mark.parametrize(
+    "dups",
+    [_semantic_dups, _banded_dups, _gate_dups],
+    ids=["semantic_dedup", "banded", "embdedup"],
+)
+def test_semantic_dedup_input_contract(spark, tmp_path, dups):
+    """Every embedding operator that infers the vector width checks it
+    once at its boundary: mixed widths raise ValueError (a 2-wide
+    first row must not score only ``vec[:2]``), and a NULL vector —
+    first row included — is skipped, never a duplicate. Semantic
+    dedup also rejects a non-integral id with TypeError naming the
+    integral-id rule."""
     mixed = spark.createDataFrame(
-        [(1, [1.0, 0.0]), (2, [0.0, 1.0, 0.0]), (3, None)],
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0, 5.0, 5.0]), (3, None)],
         "vec_id long, embedding array<double>",
     )
     with pytest.raises(ValueError, match="width"):
-        semantic_dedup(mixed, k=2)
-    named = spark.createDataFrame(
-        [("a", [1.0, 0.0]), ("b", [1.0, 0.1]), ("c", [0.0, 1.0])],
-        "vec_id string, embedding array<double>",
-    )
-    with pytest.raises(TypeError, match="integral"):
-        semantic_dedup(named, k=2)
+        dups(mixed, str(tmp_path / "mixed"))
+    null_first = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0]), (3, [1.0, 0.0]), (4, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    ).coalesce(1)
+    assert dups(null_first, str(tmp_path / "null_first")) == {3}
+    if dups is _semantic_dups:
+        named = spark.createDataFrame(
+            [("a", [1.0, 0.0]), ("b", [1.0, 0.1]), ("c", [0.0, 1.0])],
+            "vec_id string, embedding array<double>",
+        )
+        with pytest.raises(TypeError, match="integral"):
+            _semantic_dups(named, None)

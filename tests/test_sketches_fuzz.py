@@ -385,38 +385,3 @@ def test_len_bucket_properties_fuzz(spark):
             assert mid == float(x)
         else:
             assert abs(mid - x) / x <= 0.055, (x, mid)
-
-
-def test_bloom_roundtrip_fuzz(spark):
-    """Random key sets at random sizes: zero false negatives always,
-    and the measured fpp stays within 5x of the design point (a loose
-    bound — the estimator variance at small n is real)."""
-    from nfl_data_pipeline_spark.operators.bloom import (
-        bloom_from_df,
-        with_might_contain,
-    )
-
-    rng = random.Random(7)
-    for trial in range(3):
-        n = rng.choice([200, 2_000, 20_000])
-        fpp = rng.choice([0.01, 0.05])
-        keys = spark.range(n).select(
-            F.md5(F.concat(F.lit(f"t{trial}-"), F.col("id"))).alias("k")
-        )
-        others = spark.range(n, 2 * n).select(
-            F.md5(F.concat(F.lit(f"t{trial}-"), F.col("id"))).alias("k")
-        )
-        bloom = bloom_from_df(keys, "k", capacity=n, fpp=fpp)
-        assert (
-            with_might_contain(spark, keys, "k", bloom)
-            .filter(~F.col("_maybe"))
-            .count()
-            == 0
-        )
-        measured = (
-            with_might_contain(spark, others, "k", bloom)
-            .filter(F.col("_maybe"))
-            .count()
-            / n
-        )
-        assert measured <= fpp * 5 + 0.01, (n, fpp, measured)

@@ -4,7 +4,6 @@ and crash/replay idempotence through the tx state tables."""
 
 from __future__ import annotations
 
-import os
 import shutil
 
 import pytest
@@ -172,91 +171,46 @@ def test_streaming_wiring_checkpoint_rollback(spark, tmp_path, batch_twin):
     assert _counts_map(read_funnel_counts(spark, state)) == batch_twin
 
 
-def _doc_halves(spark):
-    docs = load(spark, SF_SMOKE, "documents")
-    ids = sorted(r[0] for r in docs.select("doc_id").collect())
-    cut = ids[len(ids) // 2]
-    return docs.filter(F.col("doc_id") < cut), docs.filter(
-        F.col("doc_id") >= cut
+def test_maintenance_preserves_funnel_state(spark, tmp_path):
+    """Compaction+vacuum between batches must not change any gate
+    outcome: counts, registry and replay markers all survive, and the
+    next batch behaves identically to an unmaintained twin."""
+    from nfl_data_pipeline_spark.streaming.funnel import (
+        maintain_funnel_state,
     )
 
+    def _counts(state):
+        return sorted(
+            tuple(r) for r in read_funnel_counts(spark, state).collect()
+        )
 
-def test_bloom_toggle_has_no_false_negatives(spark, tmp_path):
-    """fps committed while use_bloom=False must NOT stay invisible to
-    a stale bloom sidecar after use_bloom is re-enabled (ADVICE r3:
-    the commit used to carry the OLD meta['bloom'] pointer forward,
-    so later batches saw bloom false negatives and dups passed the
-    dedup gate). The fix nulls the pointer, forcing the one-pass
-    bootstrap."""
-    a, b = _doc_halves(spark)
+    def _registry(state):
+        df = state.fps.read(spark).select("fp", "doc_id")
+        return sorted((r["fp"], r["doc_id"]) for r in df.collect())
 
-    root = str(tmp_path / "state")
-    on = FunnelState(root, bloom_engage_bytes=0)  # engage immediately
-    process_funnel_batch(spark, a, on, "b0")
-    assert on.fps.meta().get("bloom")  # sidecar referenced
+    docs = load(spark, SF_SMOKE, "documents")
+    ref = FunnelState(str(tmp_path / "ref"))
+    mnt = FunnelState(str(tmp_path / "mnt"))
+    for i in range(3):
+        batch = docs.filter(F.col("doc_id") % 4 == i)
+        process_funnel_batch(spark, batch, ref, f"b{i}")
+        process_funnel_batch(spark, batch, mnt, f"b{i}")
+        if i == 1:
+            stats = maintain_funnel_state(spark, mnt, min_files=2)
+            assert stats["fingerprints"]["compacted"] > 0
 
-    off = FunnelState(root, use_bloom=False)
-    process_funnel_batch(spark, b, off, "b1")
-    # the pointer must be nulled, not carried forward stale
-    assert off.fps.meta().get("bloom") is None
-
-    # re-enable: re-feed batch-b texts under fresh doc_ids — every
-    # one is a registry dup and must be flagged as such
-    redo = b.withColumn("doc_id", F.col("doc_id") + 10_000_000)
-    flagged = process_funnel_batch(spark, redo, FunnelState(
-        root, bloom_engage_bytes=0
-    ), "b2")
-    n_redo = redo.count()
-    dup = flagged.filter(
-        F.col("first_doc").isNotNull() & (F.col("pass_dedup") == 0)
-    ).count()
-    assert dup == n_redo, f"{n_redo - dup} dups slipped the gate"
-
-
-def _sidecars(state):
-    side = os.path.join(state.fps.root, "sidecar")
-    if not os.path.isdir(side):
-        return []
-    return [f for f in os.listdir(side) if f.endswith(".blm")]
-
-
-def test_bloom_not_maintained_below_engage_size(spark, tmp_path):
-    """Below ``bloom_engage_bytes`` no probe reads the bloom, so no
-    batch pays for it: a default state runs two batches without
-    writing a sidecar, and the registry carries a null pointer."""
-    a, b = _doc_halves(spark)
-    state = FunnelState(str(tmp_path / "state"))
-    process_funnel_batch(spark, a, state, "b0")
-    process_funnel_batch(spark, b, state, "b1")
-    assert _sidecars(state) == []
-    assert state.fps.meta()["bloom"] is None
-
-
-def test_bloom_bootstraps_when_registry_reaches_engage_size(
-    spark, tmp_path
-):
-    """The engage size sits between the registry batch 1 sees (empty)
-    and the one batch 2 sees. Batch 1 keeps no bloom; batch 2
-    bootstraps it from the registry and writes a sidecar; a third
-    batch, probing through that bloom, flags every batch-1 text
-    re-fed under a fresh doc_id as a dup (no false negatives)."""
-    a, b = _doc_halves(spark)
-    root = str(tmp_path / "state")
-    first = FunnelState(root)
-    process_funnel_batch(spark, a, first, "b0")
-    assert first.fps.meta()["bloom"] is None
-    state = FunnelState(root, bloom_engage_bytes=first.fps.live_bytes())
-    process_funnel_batch(spark, b, state, "b1")
-    assert len(_sidecars(state)) == 1
-    assert state.fps.meta()["bloom"]
-
-    redo = a.withColumn("doc_id", F.col("doc_id") + 10_000_000)
-    flagged = process_funnel_batch(spark, redo, state, "b2")
-    n_redo = redo.count()
-    dup = flagged.filter(
-        F.col("first_doc").isNotNull() & (F.col("pass_dedup") == 0)
-    ).count()
-    assert dup == n_redo, f"{n_redo - dup} dups slipped the gate"
+    # maintenance shrank the file count
+    assert len(mnt.fps.live_files()) <= len(ref.fps.live_files())
+    assert _counts(mnt) == _counts(ref)
+    assert _registry(mnt) == _registry(ref)
+    # replay markers survived compaction/vacuum
+    assert mnt.counts.is_applied("b2") and mnt.fps.is_applied("b2")
+    # a replayed batch after maintenance is still a no-op
+    before = _counts(mnt)
+    process_funnel_batch(
+        spark, docs.filter(F.col("doc_id") % 4 == 1), mnt, "b1"
+    )
+    assert _counts(mnt) == before
 
 
 # ---- optional repetition stage (judge r6 item 5) --------------------------

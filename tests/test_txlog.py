@@ -751,23 +751,23 @@ def test_concurrent_appenders_all_land_exactly_once(spark, txroot):
 def test_vacuum_keeps_live_sidecar_under_noncanonical_paths(spark, tmp_path):
     """ADVICE r3: vacuum compared sidecar paths by exact string and
     required isabs — a manifest meta value spelled non-canonically
-    (or a relative table root) had its LIVE bloom sidecar deleted,
-    silently degrading every batch to the O(registry) bloom
-    bootstrap. Paths are now compared by realpath."""
+    (or a relative table root) had its LIVE sidecar (e.g. an ANN
+    codebook) deleted, leaving the manifest pointing at a missing
+    file. Paths are now compared by realpath."""
     t = TxTable(str(tmp_path / "table"))
     df = spark.createDataFrame([(1, "x")], "k long, v string")
     t.commit(t.stage_files(df), batch_id="b0")
     side_dir = os.path.join(t.root, "sidecar")
     os.makedirs(side_dir, exist_ok=True)
-    live = os.path.join(side_dir, "live.blm")
-    orphan = os.path.join(side_dir, "orphan.blm")
+    live = os.path.join(side_dir, "live.json")
+    orphan = os.path.join(side_dir, "orphan.json")
     for p in (live, orphan):
         with open(p, "wb") as f:
             f.write(b"\x00")
     # reference the sidecar by an equivalent-but-different spelling
-    noncanon = os.path.join(t.root, "data", "..", "sidecar", "live.blm")
+    noncanon = os.path.join(t.root, "data", "..", "sidecar", "live.json")
     assert noncanon != live and os.path.realpath(noncanon) == os.path.realpath(live)
-    t.commit(t.stage_files(df), batch_id="b1", meta={"bloom": noncanon})
+    t.commit(t.stage_files(df), batch_id="b1", meta={"codebook": noncanon})
     t.vacuum(retain_versions=1)
     assert os.path.exists(live), "live sidecar was vacuumed"
     assert not os.path.exists(orphan), "orphan sidecar survived"

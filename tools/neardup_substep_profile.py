@@ -63,7 +63,7 @@ def main() -> None:
             "bench-0",
         )
         docs = docs_all.filter(F.col("doc_id") % 2 == 1)
-        flagged, _ = gate_flags(spark, docs, state.funnel)
+        flagged = gate_flags(spark, docs, state.funnel)
         flagged = flagged.localCheckpoint(eager=True)
         survivors = _surviving_docs(docs, flagged).localCheckpoint(
             eager=True
