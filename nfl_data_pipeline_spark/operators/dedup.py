@@ -620,11 +620,18 @@ def registry_winner_verdicts(
     over the verified ``(doc_a, doc_b)`` edges, winner = the
     component's REGISTRY member when one exists (first-arrival-wins
     across batches, ``reg_nodes`` columns ``(doc_id, _reg)``; only
-    ``_reg == 1`` rows are members), else
-    the min batch id; returns one ``(id_col, dup_of, keep)`` verdict
-    row per ``base_ids`` row, checkpointed so the caller can mutate
-    the registry afterwards. One definition so a change to winner
-    selection can never diverge across the four gates."""
+    ``_reg == 1`` rows are members), else the min batch id; returns
+    one ``(id_col, dup_of, keep)`` verdict row per ``base_ids`` row.
+    The winner rule itself lives in :func:`component_losers` and the
+    distributed fallback below — one definition, so a change to winner
+    selection can never diverge across the four gates.
+
+    When the edges fit the driver, registry membership of the
+    component nodes (the only fact Spark must supply) comes from ONE
+    bounded semi-join: |comp nodes| ≤ 2·|edges|, broadcast against the
+    registry with NO exchange of the registry side. The MinHash gate
+    already knows its members from its candidates and calls the two
+    driver halves directly."""
     from pyspark.sql import types as T
 
     from nfl_data_pipeline_spark.operators.localframe import local_frame
@@ -632,98 +639,119 @@ def registry_winner_verdicts(
     dedup_edges = edges.distinct()
     uf = _union_find_rows(dedup_edges)
     if uf is not None:
-        # Driver path (r13): the union-find already holds every
-        # (node, component) on the driver, so winner resolution is
-        # Python arithmetic — the old plan re-entered Spark for a
-        # registry-wide left join + a per-component groupBy + two more
-        # joins inside the checkpoint job. Registry membership of the
-        # component nodes (the only fact Spark must supply) comes from
-        # ONE bounded semi-join: |comp nodes| ≤ 2·|edges|, broadcast
-        # against the registry with NO exchange of the registry side.
-        # Membership is ``_reg == 1``, the fallback's contract.
         comp_rows, node_t = uf
-        reg_hits: set = set()
+        members: set = set()
         if reg_nodes is not None and comp_rows:
             nodes_f = local_frame(
                 spark,
                 [(n,) for n, _ in comp_rows],
                 T.StructType([T.StructField("doc_id", node_t)]),
             )
-            reg_hits = {
+            members = {
                 r[0]
                 for r in reg_nodes.filter(F.col("_reg") == 1)
                 .join(F.broadcast(nodes_f), "doc_id")
                 .select("doc_id")
                 .collect()
             }
-        by_comp: dict = {}
-        for n, c in comp_rows:
-            cur = by_comp.setdefault(c, [None, c])
-            if n in reg_hits and (cur[0] is None or n < cur[0]):
-                cur[0] = n
-        vrows = [
-            (n, by_comp[c][0] if by_comp[c][0] is not None else c)
-            for n, c in comp_rows
-            if n not in reg_hits
-        ]
-        vmap = local_frame(
+        return verdict_frame(
             spark,
-            vrows,
-            T.StructType(
-                [
-                    T.StructField(id_col, node_t),
-                    T.StructField("dup_of", node_t),
-                ]
-            ),
-        )
-        out = base_ids.join(F.broadcast(vmap), id_col, "left")
-    else:
-        # the bounded collect above already found the edge set too
-        # large for the driver: go straight to the distributed path
-        comps = _distributed_components(dedup_edges)
-        if reg_nodes is None:
-            from nfl_data_pipeline_spark.operators.localframe import (
-                empty_frame,
-            )
-
-            reg_nodes = empty_frame(spark, "doc_id long, _reg int")
-        labeled = comps.join(
-            reg_nodes, comps["node"] == reg_nodes["doc_id"], "left"
-        ).select(
-            "node", "component", F.coalesce("_reg", F.lit(0)).alias("_reg")
-        )
-        winners = labeled.groupBy("component").agg(
-            F.coalesce(
-                F.min(F.when(F.col("_reg") == 1, F.col("node"))),
-                F.min("node"),
-            ).alias("winner")
-        )
-        verdict_in_comp = (
-            labeled.join(winners, "component")
-            .filter(F.col("_reg") == 0)  # verdicts: batch docs only
-            .select(
-                F.col("node").alias(id_col),
-                F.col("winner").alias("dup_of"),
-            )
-        )
-        out = base_ids.join(verdict_in_comp, id_col, "left")
-    return (
-        out.select(
+            base_ids,
+            component_losers(comp_rows, members),
+            node_t,
             id_col,
-            F.coalesce("dup_of", F.col(id_col)).alias("dup_of"),
         )
-        .withColumn(
-            "keep", (F.col("dup_of") == F.col(id_col)).cast("int")
-        )
-        .localCheckpoint(eager=True)  # pin before the registry mutates
+    # the bounded collect above already found the edge set too large
+    # for the driver: go straight to the distributed path
+    comps = _distributed_components(dedup_edges)
+    if reg_nodes is None:
+        from nfl_data_pipeline_spark.operators.localframe import empty_frame
+
+        reg_nodes = empty_frame(spark, "doc_id long, _reg int")
+    labeled = comps.join(
+        reg_nodes, comps["node"] == reg_nodes["doc_id"], "left"
+    ).select(
+        "node", "component", F.coalesce("_reg", F.lit(0)).alias("_reg")
     )
+    winners = labeled.groupBy("component").agg(
+        F.coalesce(
+            F.min(F.when(F.col("_reg") == 1, F.col("node"))),
+            F.min("node"),
+        ).alias("winner")
+    )
+    verdict_in_comp = (
+        labeled.join(winners, "component")
+        .filter(F.col("_reg") == 0)  # verdicts: batch docs only
+        .select(
+            F.col("node").alias(id_col),
+            F.col("winner").alias("dup_of"),
+        )
+    )
+    # this frame still reads the registry: pin it before the caller
+    # mutates the registry
+    return _verdict_cols(
+        base_ids.join(verdict_in_comp, id_col, "left"), id_col
+    ).localCheckpoint(eager=True)
+
+
+def component_losers(comp_rows: list, members: set) -> dict:
+    """Driver half of :func:`registry_winner_verdicts`: ``{node:
+    winner}`` for every batch node that loses its component, from the
+    union-find's ``(node, component)`` rows and the registry
+    ``members`` among the nodes. The winner is the component's min
+    member, else the component id (its min node); members and winners
+    get no entry — their verdict is "keep"."""
+    best: dict = {}
+    for n, c in comp_rows:
+        if n in members and (c not in best or n < best[c]):
+            best[c] = n
+    out = {}
+    for n, c in comp_rows:
+        w = best.get(c, c)
+        if n not in members and n != w:
+            out[n] = w
+    return out
+
+
+def verdict_frame(
+    spark, base_ids: DataFrame, losers: dict, node_t, id_col: str = "doc_id"
+) -> DataFrame:
+    """``(id_col, dup_of, keep)`` per ``base_ids`` row from the
+    driver-side ``losers`` map. The frame reads only ``base_ids`` and
+    driver data, so it needs no pin against a later registry commit;
+    with no losers the lookup join folds away."""
+    from pyspark.sql import types as T
+
+    from nfl_data_pipeline_spark.operators.localframe import local_frame
+
+    vmap = local_frame(
+        spark,
+        list(losers.items()),
+        T.StructType(
+            [T.StructField(id_col, node_t), T.StructField("dup_of", node_t)]
+        ),
+    )
+    return _verdict_cols(
+        base_ids.join(F.broadcast(vmap), id_col, "left"), id_col
+    )
+
+
+def _verdict_cols(out: DataFrame, id_col: str) -> DataFrame:
+    return out.select(
+        id_col, F.coalesce("dup_of", F.col(id_col)).alias("dup_of")
+    ).withColumn("keep", (F.col("dup_of") == F.col(id_col)).cast("int"))
+
+
+# edge (or candidate) rows a driver-side union-find takes; past it the
+# distributed paths run
+DRIVER_MAX_PAIRS = 1_000_000
 
 
 def _union_find_rows(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    driver_max_pairs: int = 1_000_000,
+    driver_max_pairs: int = DRIVER_MAX_PAIRS,
 ):
     """Driver-side union-find over the edge frame when it fits
     (``connected_components``' fast path, shared with the gate tail so
@@ -740,7 +768,12 @@ def _union_find_rows(
     rows = pairs.select(a_col, b_col).limit(driver_max_pairs + 1).collect()
     if len(rows) > driver_max_pairs:
         return None
-    node_t = pairs.schema[a_col].dataType
+    return union_find(rows), pairs.schema[a_col].dataType
+
+
+def union_find(pairs) -> list:
+    """``[(node, component)]`` over driver-side ``(a, b)`` pairs,
+    component = min reachable id. Duplicate pairs are harmless."""
     parent: dict = {}
 
     def find(x):
@@ -751,8 +784,7 @@ def _union_find_rows(
             parent[x], x = r, parent[x]
         return r
 
-    for r in rows:
-        a, b = r[0], r[1]
+    for a, b in pairs:
         parent.setdefault(a, a)
         parent.setdefault(b, b)
         ra, rb = find(a), find(b)
@@ -760,14 +792,14 @@ def _union_find_rows(
             # min id becomes the root → root == component id
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
-    return [(n, find(n)) for n in parent], node_t
+    return [(n, find(n)) for n in parent]
 
 
 def connected_components(
     pairs: DataFrame,
     a_col: str = "doc_a",
     b_col: str = "doc_b",
-    driver_max_pairs: int = 1_000_000,
+    driver_max_pairs: int = DRIVER_MAX_PAIRS,
 ) -> DataFrame:
     """Collapse a pair graph into components: (node, component) where
     component = min node id reachable — the step that turns near-dup

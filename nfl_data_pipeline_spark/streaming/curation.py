@@ -317,10 +317,14 @@ def read_curation_counts(spark: SparkSession, state: CurationState):
     base = read_funnel_counts(spark, state.funnel)
     nd = state.near_counts.read(spark)
     if nd is None:
-        return base.withColumn("n_neardup", F.lit(0).cast("long"))
-    return base.join(
-        nd.select("source", "n_neardup"), "source", "left"
-    ).fillna(0, subset=["n_neardup"]).orderBy("source")
+        out = base.withColumn("n_neardup", F.lit(0).cast("long"))
+    else:
+        out = base.join(
+            nd.select("source", "n_neardup"), "source", "left"
+        ).fillna(0, subset=["n_neardup"])
+    # one row per source: sort the report in one partition — a global
+    # orderBy pays a range-sampling job and an exchange for ~20 rows
+    return out.coalesce(1).sortWithinPartitions("source")
 
 
 def read_kept_length_quantiles(

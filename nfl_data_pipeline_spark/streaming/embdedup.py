@@ -98,8 +98,16 @@ def process_embdedup_batch(
         "engine": engine,
     }
     _check_gate_config(state, cfg)
+    # a NULL vector has no bands: it can match nothing, keeps its
+    # verdict row (keep = 1) and never registers
     bands = hyperplane_band_rows(
-        vectors, id_col, vec_col, band_bits, n_bands, dim, engine=engine
+        vectors.filter(F.col(vec_col).isNotNull()),
+        id_col,
+        vec_col,
+        band_bits,
+        n_bands,
+        dim,
+        engine=engine,
     ).localCheckpoint(eager=True)
 
     # Candidate verify (r13, guide §8): the band self-join + cross

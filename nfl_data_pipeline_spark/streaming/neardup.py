@@ -22,8 +22,8 @@ AT the gate threshold (SCALING.md). The gate therefore uses its own
 32-perm signature (hashing.gate_minhash_perms — fixed constants, so
 registries stay probe-compatible) banded 16×2 → candidate recall
 1-(1-J²)^16 ≈ 0.99 at J=0.5, and VERIFIES candidates exactly on the
-shingle sets (|∩|/|∪| via array_intersect/union — integer-exact, no
-estimator softness). Net: recall at the threshold itself ≈ banding
+shingle sets (|∩|/|∪| of the id sets — integer-exact, no estimator
+softness). Net: recall at the threshold itself ≈ banding
 recall ≈ 0.99, precision 1.0 among candidates (SCALING.md §"Near-dup
 gate recall"; guarded by tests/test_streaming_neardup.py::
 test_gate_recall_steps_at_threshold). ``exact_verify=False`` falls
@@ -33,24 +33,41 @@ afford the sids registry.
 Per batch:
 
 1. sids + signatures + band rows for the batch;
-2. candidate pairs = batch bands ⋈ registry bands on the band value
-   (bucketed, never all-pairs) ∪ the batch's internal band self-join.
-   Cost honesty (same shape as the funnel's registry study in
-   SCALING.md): the probe SHUFFLES only the band-matched candidates,
-   but the registry SCAN is O(registry) per batch — band values are
-   uniform hashes, so any real batch touches every one of the _NB
-   buckets and manifest pruning cannot bite. The scan parallelizes
-   across executors; the shuffle is what the banding bounds;
-3. exact verify: candidates join their shingle sets (batch side from
-   the materialized sids, registry side from the sids table) and keep
-   edges with true Jaccard ≥ ``threshold``;
-4. connected components over the surviving edges
-   (operators/dedup.connected_components — driver union-find on the
-   post-threshold edge set, distributed fallback): a component's
-   winner is its REGISTRY member if one exists (first-arrival-wins
-   across batches), else the min batch doc_id;
+2. candidates (one query, one bounded collect): the batch bands
+   join the union of the batch bands and the registry band rows on
+   the band value — the batch self-join and the batch × registry
+   probe as one join, deduped by one aggregate. Each pair carries
+   ``b_reg`` (its second doc came from the registry) and that doc's
+   sids bucket. Only the batch bands are a broadcast candidate;
+   the registry streams. Past ``DRIVER_MAX_PAIRS`` candidates the
+   distributed path below takes over;
+3. exact verify on narrow rows: the sids registry is read only for
+   the candidate buckets (manifest pruning), both sides keep only
+   the candidate ids, and the ``(doc_id, sids)`` rows come back in
+   one collect; edges with true Jaccard ≥ ``threshold`` survive;
+4. winners on the driver: union-find over the verified edges
+   (operators/dedup.union_find), registry membership from the
+   candidates' ``b_reg`` side — a registered doc joins a component
+   only through a batch × registry band match, on replay too (the
+   winner's own rows are excluded by ``doc_a != doc_b``, its batch
+   partners still match them). A component's winner is its
+   registry member if one exists (first-arrival-wins across
+   batches), else the min batch doc_id
+   (operators/dedup.component_losers). The verdict frame reads only
+   batch rows and driver data, so it needs no pin;
 5. winners' sids rows, then band rows, append to the registry — each
    an atomic manifest swap carrying the batch id.
+
+Cost honesty: a batch reads the registry twice and touches it
+nowhere else. The signature scan is still O(registry) per batch —
+band values are uniform hashes, so a real batch touches every one
+of the _NB buckets and manifest pruning cannot bite — but it
+streams (it is never broadcast) and only the band-matched pairs are
+shuffled. The sids read is O(candidate buckets) and narrows to the
+candidate ids before anything leaves the executors. Past
+``DRIVER_MAX_PAIRS`` candidates the distributed fallback joins them
+against the whole sids registry and takes membership from the same
+candidate frame (operators/dedup.registry_winner_verdicts).
 
 Replay (same batch id): winners are already registered; their
 registry rows are excluded as self-matches, losers re-match the same
@@ -64,14 +81,20 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from nfl_data_pipeline_spark.jobs.txlog import TxTable
 from nfl_data_pipeline_spark.operators.dedup import (
+    DRIVER_MAX_PAIRS,
     _materialized_sids,
+    component_losers,
     registry_winner_verdicts,
+    union_find,
+    verdict_frame,
     with_minhash_signature,
 )
 from nfl_data_pipeline_spark.operators.hashing import gate_minhash_perms
+from nfl_data_pipeline_spark.operators.localframe import local_frame
 
 _NB = 16  # registry hash buckets
 GATE_PERMS = gate_minhash_perms(32)
@@ -137,10 +160,112 @@ def _est_jaccard(a_prefix: str, b_prefix: str):
     return agree / float(len(_SIG))
 
 
-def _exact_jaccard():
-    return F.size(F.array_intersect("a_sids", "b_sids")) / F.size(
-        F.array_union("a_sids", "b_sids")
+def _candidates(
+    bands: DataFrame, stored: DataFrame | None, keep=None
+) -> DataFrame:
+    """Pass 1: the batch band self-join and the batch × registry band
+    join as ONE join — the batch bands against the union of the batch
+    bands and the registry rows — deduped by one aggregate. A batch
+    pair keeps ``doc_a < doc_b``; a registry pair keeps ``doc_a !=
+    doc_b``, so a replayed winner never matches its own rows.
+    ``b_reg`` is 1 when ``doc_b`` came from the registry and
+    ``bucket`` is ``doc_b``'s sids-registry bucket. Only the batch
+    bands are ever a broadcast candidate: the registry streams.
+    ``keep`` (the estimator fallback's similarity test) filters pairs
+    in the join."""
+    other = bands.withColumn("b_reg", F.lit(0))
+    if stored is not None:
+        other = other.unionByName(
+            stored.select(*bands.columns).withColumn("b_reg", F.lit(1))
+        )
+    a, b = F.col("a.doc_id"), F.col("b.doc_id")
+    cond = F.when(F.col("b.b_reg") == 1, a != b).otherwise(a < b)
+    return (
+        bands.alias("a")
+        .join(other.alias("b"), ["band_id", "h_lo", "h_hi"])
+        .filter(cond if keep is None else cond & keep)
+        .select(a.alias("doc_a"), b.alias("doc_b"), "b.b_reg")
+        .distinct()
+        .withColumn(
+            "bucket", F.pmod(F.xxhash64("doc_b"), F.lit(_NB)).cast("long")
+        )
     )
+
+
+def _exact_edges(
+    pairs: DataFrame, side: DataFrame, threshold: float
+) -> DataFrame:
+    """Candidate pairs whose exact shingle Jaccard is ≥ ``threshold``
+    (the distributed path); ``side`` holds the ``(doc_id, sids)`` rows
+    of both ends."""
+    a, b = side.alias("sa"), side.alias("sb")
+    inter = F.size(F.array_intersect("sa.sids", "sb.sids"))
+    union = F.size(F.array_union("sa.sids", "sb.sids"))
+    return (
+        pairs.join(a, F.col("doc_a") == F.col("sa.doc_id"))
+        .join(b, F.col("doc_b") == F.col("sb.doc_id"))
+        .filter(inter / union >= threshold)
+        .select("doc_a", "doc_b")
+    )
+
+
+def _verified_pairs(
+    spark: SparkSession,
+    rows: list,
+    batch_sids: DataFrame,
+    sids: TxTable,
+    threshold: float,
+) -> list:
+    """Pass 2: exact verify of the collected candidates on narrow
+    rows. The sids registry is read only for the candidate buckets,
+    both sides keep only the candidate ids, and the one ``(doc_id,
+    sids)`` frame comes back in one collect — the footprint a
+    broadcast of it would put on the driver anyway, without a second
+    lookup join. Jaccard is |∩| / |∪| of the id sets, the same double
+    the SQL form computes; an empty union is never an edge."""
+    if not rows:
+        return []
+    batch_ids = {r.doc_a for r in rows}
+    batch_ids |= {r.doc_b for r in rows if not r.b_reg}
+    # a replayed winner is a batch doc AND a registry doc: its batch
+    # partners reach it through both joins, so its sids come from the
+    # batch and it needs no registry read
+    reg_ids = {
+        r.doc_b: r.bucket
+        for r in rows
+        if r.b_reg and r.doc_b not in batch_ids
+    }
+    side = batch_sids.select("doc_id", "sids", F.lit(0).alias("_src"))
+    reg = None
+    if reg_ids:
+        reg = sids.read(spark, partitions=set(reg_ids.values()))
+    if reg is not None:
+        side = side.unionByName(
+            reg.select("doc_id", "sids", F.lit(1).alias("_src"))
+        )
+    want = local_frame(
+        spark,
+        [(i,) for i in batch_ids | set(reg_ids)],
+        T.StructType(
+            [T.StructField("doc_id", batch_sids.schema["doc_id"].dataType)]
+        ),
+    )
+    sets: dict = {}
+    # batch rows first: a registry row never replaces a batch doc's sids
+    for i, v, _ in sorted(
+        side.join(F.broadcast(want), "doc_id", "left_semi").collect(),
+        key=lambda r: r[2],
+    ):
+        sets.setdefault(i, frozenset(v))
+    out = []
+    for a, b in {(r.doc_a, r.doc_b) for r in rows}:
+        sa, sb = sets.get(a), sets.get(b)
+        if sa is None or sb is None:
+            continue
+        union = len(sa | sb)
+        if union and len(sa & sb) / union >= threshold:
+            out.append((a, b))
+    return out
 
 
 def process_neardup_batch(
@@ -171,94 +296,60 @@ def process_neardup_batch(
         # the exact gate therefore can't serve the estimator
         # fallback: one configuration per registry.)
         bands = bands.select("doc_id", "band_id", "h_lo", "h_hi")
-    # lazy: the first consumer (the candidate-edge materialization
-    # inside the verdict tail) runs strictly before the concurrent
-    # staging threads, so the pin is in place by the time it is
-    # shared — one fewer standalone job per batch (r13)
+    # lazy: the first consumer (the candidate collect below) runs
+    # strictly before the concurrent staging threads, so the pin is
+    # in place by the time it is shared — one fewer standalone job
+    # per batch (r13)
     bands = bands.localCheckpoint(eager=False)
 
-    band_key = ["band_id", "h_lo", "h_hi"]
-    stored = state.sigs.read(spark)
-
-    # candidate pairs: doc_a = batch doc, doc_b = counterpart
-    # (registry doc or earlier batch doc)
-    intra = (
-        bands.alias("a")
-        .join(bands.alias("b"), band_key)
-        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+    cands = _candidates(
+        bands,
+        state.sigs.read(spark),
+        None if exact_verify else _est_jaccard("a", "b") >= threshold,
     )
-    if exact_verify:
-        cands = intra.select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        ).distinct()
-        if stored is not None:
-            cross = (
-                bands.alias("a")
-                .join(stored.alias("b"), band_key)
-                .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-                .select(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-                .distinct()
+    base_ids = batch_sids.select("doc_id")
+    rows = cands.limit(DRIVER_MAX_PAIRS + 1).collect()
+    if len(rows) <= DRIVER_MAX_PAIRS:
+        # registry membership straight from the candidates: a
+        # registered doc joins a component only through a batch ×
+        # registry band match (on replay too — the winner's own rows
+        # are excluded, but its batch partners still match them)
+        members = {r.doc_b for r in rows if r.b_reg}
+        if exact_verify:
+            pairs = _verified_pairs(
+                spark, rows, batch_sids, state.sids, threshold
             )
-            cands = cands.unionByName(cross)
-        # exact Jaccard on the shingle sets — batch docs from the
-        # materialized sids, registry docs from the sids table
-        side = batch_sids.select("doc_id", "sids")
-        reg_sids = state.sids.read(spark)
-        if reg_sids is not None:
-            side = side.unionByName(reg_sids.select("doc_id", "sids"))
-        edges = (
-            cands.join(
-                side.select(
-                    F.col("doc_id").alias("doc_a"),
-                    F.col("sids").alias("a_sids"),
-                ),
-                "doc_a",
-            )
-            .join(
-                side.select(
-                    F.col("doc_id").alias("doc_b"),
-                    F.col("sids").alias("b_sids"),
-                ),
-                "doc_b",
-            )
-            .filter(_exact_jaccard() >= threshold)
-            .select("doc_a", "doc_b")
+        else:
+            pairs = [(r.doc_a, r.doc_b) for r in rows]
+        losers = component_losers(union_find(pairs), members)
+        node_t = base_ids.schema["doc_id"].dataType
+        verdicts = verdict_frame(spark, base_ids, losers, node_t)
+        dropped = local_frame(
+            spark,
+            [(n,) for n in losers],
+            T.StructType([T.StructField("doc_id", node_t)]),
         )
     else:
-        edges = intra.filter(_est_jaccard("a", "b") >= threshold).select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
+        # too many candidates for the driver: the distributed path,
+        # membership from the same candidate frame
+        edges = cands.select("doc_a", "doc_b")
+        if exact_verify:
+            side = batch_sids.select("doc_id", "sids")
+            reg_sids = state.sids.read(spark)
+            if reg_sids is not None:
+                side = side.unionByName(reg_sids.select("doc_id", "sids"))
+            edges = _exact_edges(edges, side, threshold)
+        reg_nodes = (
+            cands.filter(F.col("b_reg") == 1)
+            .select(F.col("doc_b").alias("doc_id"))
+            .distinct()
+            .withColumn("_reg", F.lit(1))
         )
-        if stored is not None:
-            cross = (
-                bands.alias("a")
-                .join(stored.alias("b"), band_key)
-                .filter(F.col("a.doc_id") != F.col("b.doc_id"))
-                .filter(_est_jaccard("a", "b") >= threshold)
-                .select(
-                    F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"),
-                )
-            )
-            edges = edges.unionByName(cross)
+        verdicts = registry_winner_verdicts(
+            spark, base_ids, edges, reg_nodes
+        )
+        dropped = verdicts.filter(F.col("keep") == 0).select("doc_id")
 
-    # winner per component: registered member (min id among them) if
-    # any, else min batch doc id — the shared gate tail
-    # (operators/dedup.registry_winner_verdicts)
-    reg_nodes = (
-        stored.select("doc_id").distinct().withColumn("_reg", F.lit(1))
-        if stored is not None
-        else None
-    )
-    verdicts = registry_winner_verdicts(
-        spark, sig.select("doc_id"), edges, reg_nodes
-    )
-
-    kept = verdicts.filter(F.col("keep") == 1).select("doc_id")
     # Stage both registries CONCURRENTLY (staging is the expensive
     # Spark write; files are invisible until commit), then commit
     # sids first, signatures last — the signatures marker is the
@@ -272,7 +363,7 @@ def process_neardup_batch(
     with ThreadPoolExecutor(max_workers=2) as pool:
         if stage_sids:
             new_sids = batch_sids.select("doc_id", "sids").join(
-                kept, "doc_id"
+                dropped, "doc_id", "left_anti"
             ).withColumn(
                 "bucket",
                 F.pmod(F.xxhash64("doc_id"), F.lit(_NB)).cast("long"),
@@ -287,7 +378,9 @@ def process_neardup_batch(
                 site="neardup.py:sids-append",
             )
         if stage_sigs:
-            new_rows = bands.join(kept, "doc_id").withColumn(
+            new_rows = bands.join(
+                dropped, "doc_id", "left_anti"
+            ).withColumn(
                 "bucket",
                 F.pmod(F.xxhash64("h_lo", "h_hi"), F.lit(_NB)).cast("long"),
             )

@@ -324,3 +324,28 @@ def test_repetition_stage_gates_kept_docs(spark, tmp_path):
         for r in process_curation_batch(spark, docs, on, "b0").collect()
     }
     assert kept_replay == kept_on
+
+
+def test_counts_report_reads_in_two_jobs(spark, tmp_path, docs):
+    """The counts report has one row per source: a repeat read takes
+    at most 2 Spark jobs (no range-partition sampling or exchange for
+    the sort) and comes back ordered by source."""
+    state = CurationState(str(tmp_path / "s"))
+    process_curation_batch(spark, docs, state, "b0")
+    # a polling reader has read the tables before: the first read of
+    # each table infers its schema (one job per table, cached after)
+    read_curation_counts(spark, state).collect()
+    sc = spark.sparkContext
+    sc.setJobGroup("curation-counts", "counts report")
+    try:
+        rows = read_curation_counts(spark, state).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("curation-counts")) <= 2
+    assert list(rows[0].asDict()) == [
+        "source", "n_input", "n_url", "n_lang", "n_quality", "n_ppl",
+        "n_final", "n_neardup",
+    ]
+    sources = [r["source"] for r in rows]
+    assert len(sources) > 1 and sources == sorted(set(sources))

@@ -130,3 +130,23 @@ def test_incompatible_registry_config_rejected(spark, tmp_path, vecs):
         process_embdedup_batch(
             spark, vecs, state, "b2", THR, dim=DIM, engine="arrow"
         )
+
+
+def test_null_vector_kept_and_never_registered(spark, tmp_path):
+    """A NULL vector has no band values: it keeps its verdict row
+    (keep = 1, itself as dup_of) but adds no registry rows — rows
+    with a NULL vector would join every later probe in the all-zero
+    buckets and never score."""
+    state = EmbDedupState(str(tmp_path / "s"))
+    batch = spark.createDataFrame(
+        [(1, None), (2, [1.0, 0.0]), (3, [0.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    got = _verdicts(
+        process_embdedup_batch(spark, batch, state, "b0", THR, dim=2)
+    )
+    assert got == {1: (1, 1), 2: (1, 2), 3: (1, 3)}
+    reg = state.bands.read(spark)
+    assert reg.filter(F.col("vec_id") == 1).count() == 0
+    assert reg.filter(F.col("vec").isNull()).count() == 0
+    assert {r["vec_id"] for r in reg.select("vec_id").collect()} == {2, 3}

@@ -6,7 +6,9 @@ the gate's recall step against true shingle Jaccard."""
 
 from __future__ import annotations
 
+import os
 import random
+from urllib.parse import urlparse
 
 import pytest
 from pyspark.sql import functions as F
@@ -173,6 +175,184 @@ def test_registry_appends_take_driver_path_when_small(spark, tmp_path, docs):
     }
     assert evs["neardup.py:sids-append"]["path"] == "driver"
     assert evs["neardup.py:sigs-append"]["path"] == "driver"
+
+
+def _clones(df, ids, offset=1_000_000):
+    """Exact copies of ``ids`` under new doc ids (``id + offset``)."""
+    return df.filter(F.col("doc_id").isin(*ids)).select(
+        (F.col("doc_id") + offset).alias("doc_id"), "text"
+    )
+
+
+def _table_rows(spark, table):
+    df = table.read(spark)
+    cols = sorted(c for c in df.columns if c != "bucket")
+    return sorted(tuple(r) for r in df.select(*cols).collect())
+
+
+def test_gate_stays_batch_scoped(spark, tmp_path, docs, monkeypatch):
+    """After 3 prior batches the candidate → verdict chain runs at
+    most 5 Spark jobs on the calling thread, reads the sids registry
+    only from the live files of the candidate buckets, and never
+    broadcasts a registry scan."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicFrame
+
+    from nfl_data_pipeline_spark.jobs.txlog import TxTable
+
+    state = NearDupState(str(tmp_path / "s"))
+    base = docs.select("doc_id", "text")
+    prior = {}
+    for k in range(3):
+        prior.update(_verdict_map(process_neardup_batch(
+            spark, base.filter(F.col("doc_id") % 4 == k), state, f"b{k}", THR
+        )))
+    first = sorted(prior)[:5]
+    batch = base.filter(F.col("doc_id") % 4 == 3).unionByName(
+        _clones(base, first)
+    ).localCheckpoint()
+    # the gate's first step builds the batch's shingle cache; build it
+    # here so the job count below covers the candidate → verdict chain
+    _materialized_sids(batch, "text", 3).count()
+
+    # the registry docs the batch can match, computed independently
+    sig = with_minhash_signature(
+        _materialized_sids(batch, "text", 3), GATE_PERMS
+    ).select("doc_id", *_SIG)
+    key = ["band_id", "h_lo", "h_hi"]
+    probe = _band_rows(sig).select(*key)
+    reg_docs = (
+        state.sigs.read(spark).join(probe, key, "left_semi")
+        .select("doc_id").distinct()
+    )
+    want_buckets = {
+        r[0] for r in reg_docs.select(
+            F.pmod(F.xxhash64("doc_id"), F.lit(16)).cast("long")
+        ).collect()
+    }
+    assert want_buckets and len(want_buckets) < 16
+    live = {
+        os.path.abspath(f["path"])
+        for f in state.sids.live_files(partitions=want_buckets)
+    }
+
+    sids_reads, plans = [], []
+    read = TxTable.read
+    collect = ClassicFrame.collect
+
+    def spy_read(self, spark_, *a, **k):
+        df = read(self, spark_, *a, **k)
+        if self is state.sids:
+            sids_reads.append((k.get("partitions"), df))
+        return df
+
+    def spy_collect(self):
+        out = collect(self)
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return out
+
+    monkeypatch.setattr(TxTable, "read", spy_read)
+    monkeypatch.setattr(ClassicFrame, "collect", spy_collect)
+    sc = spark.sparkContext
+    sc.setJobGroup("neardup-batch-scope", "candidate to verdict chain")
+    try:
+        verdicts = process_neardup_batch(spark, batch, state, "b3", THR)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    monkeypatch.undo()
+
+    jobs = sc.statusTracker().getJobIdsForGroup("neardup-batch-scope")
+    got = _verdict_map(verdicts)
+    assert len(jobs) <= 5, f"{len(jobs)} jobs on the verdict path"
+    for i in first:  # a copy loses to its original's winner
+        assert got[i + 1_000_000] == (0, prior[i][1])
+    # one sids read: exactly the live files of the candidate buckets
+    assert len(sids_reads) == 1
+    parts, df = sids_reads[0]
+    assert set(parts) == want_buckets
+    assert {urlparse(p).path for p in df.inputFiles()} == live
+    # no BroadcastExchange over a registry scan
+    for plan in plans:
+        lines = plan.splitlines()
+        for i, line in enumerate(lines):
+            if "BroadcastExchange" not in line:
+                continue
+            depth = len(line) - len(line.lstrip(" :+-"))
+            for sub in lines[i + 1:]:
+                if len(sub) - len(sub.lstrip(" :+-")) <= depth:
+                    break
+                assert "FileScan" not in sub or state.sigs.root not in sub
+                assert "FileScan" not in sub or state.sids.root not in sub
+
+
+def test_replay_with_registered_winners_is_identical(spark, tmp_path, docs):
+    """Replaying a batch whose winners are already registered (the
+    gate's membership then comes from the batch × registry matches of
+    their batch partners) reproduces the verdicts and leaves both
+    registries unchanged."""
+    state = NearDupState(str(tmp_path / "s"))
+    base = docs.select("doc_id", "text")
+    b0 = base.filter(F.col("doc_id") % 2 == 0)
+    odd = [r["doc_id"] for r in base.filter(F.col("doc_id") % 2 == 1)
+           .orderBy("doc_id").limit(4).collect()]
+    even = [r["doc_id"] for r in b0.orderBy("doc_id").limit(3).collect()]
+    # batch 1: new docs, in-batch copies of some of them (their
+    # winners register with this batch) and copies of batch-0 docs
+    b1 = (
+        base.filter(F.col("doc_id") % 2 == 1)
+        .unionByName(_clones(base, odd))
+        .unionByName(_clones(base, even, offset=2_000_000))
+    )
+    v0 = _verdict_map(process_neardup_batch(spark, b0, state, "b0", THR))
+    first = _verdict_map(process_neardup_batch(spark, b1, state, "b1", THR))
+    for i in odd:  # a copy loses to its original's winner
+        assert first[i + 1_000_000] == (0, first[i][1])
+    for i in even:
+        assert first[i + 2_000_000] == (0, v0[i][1])
+    kept = [i for i in odd if first[i][0] == 1]
+    assert kept
+    sigs, sids = _table_rows(spark, state.sigs), _table_rows(spark, state.sids)
+    registered = state.sids.read(spark).select("doc_id").collect()
+    assert set(kept) <= {r["doc_id"] for r in registered}
+
+    replay = _verdict_map(process_neardup_batch(spark, b1, state, "b1", THR))
+    assert replay == first
+    assert _table_rows(spark, state.sigs) == sigs
+    assert _table_rows(spark, state.sids) == sids
+
+
+def test_distributed_fallback_matches_driver_path(
+    spark, tmp_path, docs, monkeypatch
+):
+    """Past the driver bound the gate resolves verdicts on the
+    distributed path, with registry membership from the same
+    candidate frame; the verdicts equal the driver path's."""
+    from nfl_data_pipeline_spark.operators import dedup
+    from nfl_data_pipeline_spark.streaming import neardup
+
+    base = docs.select("doc_id", "text")
+    even = list(range(0, 20, 2))
+    b1 = base.filter(F.col("doc_id") % 2 == 1).unionByName(
+        _clones(base, even)
+    )
+
+    def run(root):
+        state = NearDupState(str(root))
+        v0 = _verdict_map(process_neardup_batch(
+            spark, base.filter(F.col("doc_id") % 2 == 0), state, "b0", THR
+        ))
+        return v0, _verdict_map(
+            process_neardup_batch(spark, b1, state, "b1", THR)
+        )
+
+    want = run(tmp_path / "driver")
+    with monkeypatch.context() as m:
+        m.setattr(neardup, "DRIVER_MAX_PAIRS", 0)
+        m.setattr(dedup, "_union_find_rows", lambda *a, **k: None)
+        got = run(tmp_path / "fallback")
+    assert got == want
+    for i in even:  # a copy loses to its original's winner
+        assert want[1][i + 1_000_000] == (0, want[0][i][1])
 
 
 def _planted_pairs(rng, n_per_level=150, doc_tokens=60):
