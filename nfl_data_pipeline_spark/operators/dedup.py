@@ -621,8 +621,9 @@ def registry_winner_verdicts(
     component's REGISTRY member when one exists (first-arrival-wins
     across batches, ``reg_nodes`` columns ``(doc_id, _reg)``; only
     ``_reg == 1`` rows are members), else the min batch id; returns
-    one ``(id_col, dup_of, keep)`` verdict row per ``base_ids`` row.
-    The winner rule itself lives in :func:`component_losers` and the
+    one ``(id_col, dup_of, keep)`` verdict row per ``base_ids`` row,
+    checkpointed so the caller can mutate the registry afterwards.
+    The winner rule lives in :func:`driver_verdicts` and the
     distributed fallback below — one definition, so a change to winner
     selection can never diverge across the four gates.
 
@@ -630,8 +631,8 @@ def registry_winner_verdicts(
     component nodes (the only fact Spark must supply) comes from ONE
     bounded semi-join: |comp nodes| ≤ 2·|edges|, broadcast against the
     registry with NO exchange of the registry side. The MinHash gate
-    already knows its members from its candidates and calls the two
-    driver halves directly."""
+    already knows its members from its candidates and calls
+    :func:`driver_verdicts` directly."""
     from pyspark.sql import types as T
 
     from nfl_data_pipeline_spark.operators.localframe import local_frame
@@ -654,86 +655,83 @@ def registry_winner_verdicts(
                 .select("doc_id")
                 .collect()
             }
-        return verdict_frame(
-            spark,
-            base_ids,
-            component_losers(comp_rows, members),
-            node_t,
-            id_col,
+        out, _ = driver_verdicts(
+            spark, base_ids, comp_rows, members, node_t, id_col
         )
-    # the bounded collect above already found the edge set too large
-    # for the driver: go straight to the distributed path
-    comps = _distributed_components(dedup_edges)
-    if reg_nodes is None:
-        from nfl_data_pipeline_spark.operators.localframe import empty_frame
+    else:
+        # the bounded collect above already found the edge set too
+        # large for the driver: go straight to the distributed path
+        comps = _distributed_components(dedup_edges)
+        if reg_nodes is None:
+            from nfl_data_pipeline_spark.operators.localframe import (
+                empty_frame,
+            )
 
-        reg_nodes = empty_frame(spark, "doc_id long, _reg int")
-    labeled = comps.join(
-        reg_nodes, comps["node"] == reg_nodes["doc_id"], "left"
-    ).select(
-        "node", "component", F.coalesce("_reg", F.lit(0)).alias("_reg")
-    )
-    winners = labeled.groupBy("component").agg(
-        F.coalesce(
-            F.min(F.when(F.col("_reg") == 1, F.col("node"))),
-            F.min("node"),
-        ).alias("winner")
-    )
-    verdict_in_comp = (
-        labeled.join(winners, "component")
-        .filter(F.col("_reg") == 0)  # verdicts: batch docs only
-        .select(
-            F.col("node").alias(id_col),
-            F.col("winner").alias("dup_of"),
+            reg_nodes = empty_frame(spark, "doc_id long, _reg int")
+        labeled = comps.join(
+            reg_nodes, comps["node"] == reg_nodes["doc_id"], "left"
+        ).select(
+            "node", "component", F.coalesce("_reg", F.lit(0)).alias("_reg")
         )
-    )
-    # this frame still reads the registry: pin it before the caller
-    # mutates the registry
-    return _verdict_cols(
-        base_ids.join(verdict_in_comp, id_col, "left"), id_col
-    ).localCheckpoint(eager=True)
+        winners = labeled.groupBy("component").agg(
+            F.coalesce(
+                F.min(F.when(F.col("_reg") == 1, F.col("node"))),
+                F.min("node"),
+            ).alias("winner")
+        )
+        verdict_in_comp = (
+            labeled.join(winners, "component")
+            .filter(F.col("_reg") == 0)  # verdicts: batch docs only
+            .select(
+                F.col("node").alias(id_col),
+                F.col("winner").alias("dup_of"),
+            )
+        )
+        out = _verdict_cols(
+            base_ids.join(verdict_in_comp, id_col, "left"), id_col
+        )
+    return out.localCheckpoint(eager=True)  # pin before the registry mutates
 
 
-def component_losers(comp_rows: list, members: set) -> dict:
-    """Driver half of :func:`registry_winner_verdicts`: ``{node:
-    winner}`` for every batch node that loses its component, from the
+def driver_verdicts(
+    spark,
+    base_ids: DataFrame,
+    comp_rows: list,
+    members: set,
+    node_t,
+    id_col: str = "doc_id",
+):
+    """Driver path of :func:`registry_winner_verdicts`, from the
     union-find's ``(node, component)`` rows and the registry
-    ``members`` among the nodes. The winner is the component's min
-    member, else the component id (its min node); members and winners
-    get no entry — their verdict is "keep"."""
-    best: dict = {}
-    for n, c in comp_rows:
-        if n in members and (c not in best or n < best[c]):
-            best[c] = n
-    out = {}
-    for n, c in comp_rows:
-        w = best.get(c, c)
-        if n not in members and n != w:
-            out[n] = w
-    return out
-
-
-def verdict_frame(
-    spark, base_ids: DataFrame, losers: dict, node_t, id_col: str = "doc_id"
-) -> DataFrame:
-    """``(id_col, dup_of, keep)`` per ``base_ids`` row from the
-    driver-side ``losers`` map. The frame reads only ``base_ids`` and
-    driver data, so it needs no pin against a later registry commit;
-    with no losers the lookup join folds away."""
+    ``members`` among the nodes. A component's winner is its min
+    member, else the component id (its min node). Returns
+    ``(verdicts, losers)``: the ``(id_col, dup_of, keep)`` frame over
+    ``base_ids``, and the ``(id_col, dup_of)`` frame of the batch
+    nodes that lose. Both read only ``base_ids`` and driver data."""
     from pyspark.sql import types as T
 
     from nfl_data_pipeline_spark.operators.localframe import local_frame
 
-    vmap = local_frame(
+    best: dict = {}
+    for n, c in comp_rows:
+        if n in members and (c not in best or n < best[c]):
+            best[c] = n
+    lost = []
+    for n, c in comp_rows:
+        w = best.get(c, c)
+        if n not in members and n != w:
+            lost.append((n, w))
+    losers = local_frame(
         spark,
-        list(losers.items()),
+        lost,
         T.StructType(
             [T.StructField(id_col, node_t), T.StructField("dup_of", node_t)]
         ),
     )
-    return _verdict_cols(
-        base_ids.join(F.broadcast(vmap), id_col, "left"), id_col
+    verdicts = _verdict_cols(
+        base_ids.join(F.broadcast(losers), id_col, "left"), id_col
     )
+    return verdicts, losers
 
 
 def _verdict_cols(out: DataFrame, id_col: str) -> DataFrame:

@@ -42,19 +42,21 @@ Per batch:
    the registry streams. Past ``DRIVER_MAX_PAIRS`` candidates the
    distributed path below takes over;
 3. exact verify on narrow rows: the sids registry is read only for
-   the candidate buckets (manifest pruning), both sides keep only
-   the candidate ids, and the ``(doc_id, sids)`` rows come back in
-   one collect; edges with true Jaccard ≥ ``threshold`` survive;
+   the candidate buckets (manifest pruning) and both sides keep only
+   the candidate ids. Up to the planner's broadcast bound the
+   ``(doc_id, sids)`` rows come back in one collect and are verified
+   on the driver; past it they are verified on the executors and
+   only the edges come back. Edges with true Jaccard ≥ ``threshold``
+   survive;
 4. winners on the driver: union-find over the verified edges
    (operators/dedup.union_find), registry membership from the
    candidates' ``b_reg`` side — a registered doc joins a component
-   only through a batch × registry band match, on replay too (the
-   winner's own rows are excluded by ``doc_a != doc_b``, its batch
-   partners still match them). A component's winner is its
-   registry member if one exists (first-arrival-wins across
-   batches), else the min batch doc_id
-   (operators/dedup.component_losers). The verdict frame reads only
-   batch rows and driver data, so it needs no pin;
+   only through a batch × registry band match, and a registered
+   batch doc (a replayed winner, an id sent again) matches its own
+   registry rows. A component's winner is its registry member if one
+   exists (first-arrival-wins across batches), else the min batch
+   doc_id (operators/dedup.driver_verdicts). The verdict frame reads
+   only batch rows and driver data, so it needs no pin;
 5. winners' sids rows, then band rows, append to the registry — each
    an atomic manifest swap carrying the batch id.
 
@@ -64,13 +66,14 @@ band values are uniform hashes, so a real batch touches every one
 of the _NB buckets and manifest pruning cannot bite — but it
 streams (it is never broadcast) and only the band-matched pairs are
 shuffled. The sids read is O(candidate buckets) and narrows to the
-candidate ids before anything leaves the executors. Past
+candidate ids before anything leaves the executors; the driver
+holds at most what a broadcast of it would. Past
 ``DRIVER_MAX_PAIRS`` candidates the distributed fallback joins them
 against the whole sids registry and takes membership from the same
 candidate frame (operators/dedup.registry_winner_verdicts).
 
-Replay (same batch id): winners are already registered; their
-registry rows are excluded as self-matches, losers re-match the same
+Replay (same batch id): winners are already registered and meet
+their own registry rows (members, kept), losers re-match the same
 winners (now through the registry), verdicts reproduce exactly —
 asserted by the crash-replay test.
 """
@@ -87,10 +90,9 @@ from nfl_data_pipeline_spark.jobs.txlog import TxTable
 from nfl_data_pipeline_spark.operators.dedup import (
     DRIVER_MAX_PAIRS,
     _materialized_sids,
-    component_losers,
+    driver_verdicts,
     registry_winner_verdicts,
     union_find,
-    verdict_frame,
     with_minhash_signature,
 )
 from nfl_data_pipeline_spark.operators.hashing import gate_minhash_perms
@@ -166,8 +168,10 @@ def _candidates(
     """Pass 1: the batch band self-join and the batch × registry band
     join as ONE join — the batch bands against the union of the batch
     bands and the registry rows — deduped by one aggregate. A batch
-    pair keeps ``doc_a < doc_b``; a registry pair keeps ``doc_a !=
-    doc_b``, so a replayed winner never matches its own rows.
+    pair keeps ``doc_a < doc_b``; a registry pair keeps every match,
+    and one with ``doc_a == doc_b`` (a batch doc meeting its own
+    registered rows: a replay, or an id sent again) is a membership
+    row, not an edge.
     ``b_reg`` is 1 when ``doc_b`` came from the registry and
     ``bucket`` is ``doc_b``'s sids-registry bucket. Only the batch
     bands are ever a broadcast candidate: the registry streams.
@@ -179,7 +183,7 @@ def _candidates(
             stored.select(*bands.columns).withColumn("b_reg", F.lit(1))
         )
     a, b = F.col("a.doc_id"), F.col("b.doc_id")
-    cond = F.when(F.col("b.b_reg") == 1, a != b).otherwise(a < b)
+    cond = (F.col("b.b_reg") == 1) | (a < b)
     return (
         bands.alias("a")
         .join(other.alias("b"), ["band_id", "h_lo", "h_hi"])
@@ -211,28 +215,36 @@ def _exact_edges(
 
 def _verified_pairs(
     spark: SparkSession,
-    rows: list,
+    pairs: list,
     batch_sids: DataFrame,
     sids: TxTable,
     threshold: float,
 ) -> list:
-    """Pass 2: exact verify of the collected candidates on narrow
-    rows. The sids registry is read only for the candidate buckets,
-    both sides keep only the candidate ids, and the one ``(doc_id,
-    sids)`` frame comes back in one collect — the footprint a
-    broadcast of it would put on the driver anyway, without a second
-    lookup join. Jaccard is |∩| / |∪| of the id sets, the same double
-    the SQL form computes; an empty union is never an edge."""
-    if not rows:
+    """Pass 2: exact verify of the candidate ``pairs`` (candidate rows
+    with ``doc_a != doc_b``) on narrow rows. The sids registry is read
+    only for the candidate buckets, and one broadcast id list keeps
+    only the candidate docs of the batch and of the registry.
+
+    When that ``(doc_id, sids)`` frame is no larger than the planner
+    would broadcast (``spark.sql.autoBroadcastJoinThreshold``, by its
+    own size estimate), it comes back in one collect and Jaccard is
+    |∩| / |∪| of the id sets on the driver — the double
+    :func:`_exact_edges` computes; a broadcast would put the same rows
+    on the driver. That form runs 2 fewer jobs and ~0.2 s less per
+    batch than :func:`_exact_edges` over the same frame (replay of an
+    8-batch registry at ``local[4]``: 7 vs 9 jobs, 1.21 vs 1.41 s).
+    A larger frame is verified on the executors by
+    :func:`_exact_edges`, and only the edges reach the driver."""
+    if not pairs:
         return []
-    batch_ids = {r.doc_a for r in rows}
-    batch_ids |= {r.doc_b for r in rows if not r.b_reg}
+    batch_ids = {r.doc_a for r in pairs}
+    batch_ids |= {r.doc_b for r in pairs if not r.b_reg}
     # a replayed winner is a batch doc AND a registry doc: its batch
     # partners reach it through both joins, so its sids come from the
     # batch and it needs no registry read
     reg_ids = {
         r.doc_b: r.bucket
-        for r in rows
+        for r in pairs
         if r.b_reg and r.doc_b not in batch_ids
     }
     side = batch_sids.select("doc_id", "sids", F.lit(0).alias("_src"))
@@ -243,22 +255,36 @@ def _verified_pairs(
         side = side.unionByName(
             reg.select("doc_id", "sids", F.lit(1).alias("_src"))
         )
+    id_t = batch_sids.schema["doc_id"].dataType
     want = local_frame(
         spark,
         [(i,) for i in batch_ids | set(reg_ids)],
-        T.StructType(
-            [T.StructField("doc_id", batch_sids.schema["doc_id"].dataType)]
-        ),
+        T.StructType([T.StructField("doc_id", id_t)]),
     )
+    side = side.join(F.broadcast(want), "doc_id", "left_semi")
+    edges = {(r.doc_a, r.doc_b) for r in pairs}
+    est = side._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if int(est) > int(
+        spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    ):
+        pf = local_frame(
+            spark,
+            sorted(edges),
+            T.StructType(
+                [T.StructField("doc_a", id_t), T.StructField("doc_b", id_t)]
+            ),
+        )
+        # a registry row never replaces a batch doc's sids
+        side = side.groupBy("doc_id").agg(
+            F.min_by("sids", "_src").alias("sids")
+        )
+        return [tuple(r) for r in _exact_edges(pf, side, threshold).collect()]
     sets: dict = {}
     # batch rows first: a registry row never replaces a batch doc's sids
-    for i, v, _ in sorted(
-        side.join(F.broadcast(want), "doc_id", "left_semi").collect(),
-        key=lambda r: r[2],
-    ):
+    for i, v, _ in sorted(side.collect(), key=lambda r: r[2]):
         sets.setdefault(i, frozenset(v))
     out = []
-    for a, b in {(r.doc_a, r.doc_b) for r in rows}:
+    for a, b in edges:
         sa, sb = sets.get(a), sets.get(b)
         if sa is None or sb is None:
             continue
@@ -312,27 +338,30 @@ def process_neardup_batch(
     if len(rows) <= DRIVER_MAX_PAIRS:
         # registry membership straight from the candidates: a
         # registered doc joins a component only through a batch ×
-        # registry band match (on replay too — the winner's own rows
-        # are excluded, but its batch partners still match them)
+        # registry band match, and a registered batch doc (replay, an
+        # id sent again) matches its own registry rows
         members = {r.doc_b for r in rows if r.b_reg}
+        pairs = [r for r in rows if r.doc_a != r.doc_b]
         if exact_verify:
             pairs = _verified_pairs(
-                spark, rows, batch_sids, state.sids, threshold
+                spark, pairs, batch_sids, state.sids, threshold
             )
         else:
-            pairs = [(r.doc_a, r.doc_b) for r in rows]
-        losers = component_losers(union_find(pairs), members)
-        node_t = base_ids.schema["doc_id"].dataType
-        verdicts = verdict_frame(spark, base_ids, losers, node_t)
-        dropped = local_frame(
+            pairs = [(r.doc_a, r.doc_b) for r in pairs]
+        verdicts, losers = driver_verdicts(
             spark,
-            [(n,) for n in losers],
-            T.StructType([T.StructField("doc_id", node_t)]),
+            base_ids,
+            union_find(pairs),
+            members,
+            base_ids.schema["doc_id"].dataType,
         )
+        dropped = losers.select("doc_id")
     else:
         # too many candidates for the driver: the distributed path,
         # membership from the same candidate frame
-        edges = cands.select("doc_a", "doc_b")
+        edges = cands.filter(F.col("doc_a") != F.col("doc_b")).select(
+            "doc_a", "doc_b"
+        )
         if exact_verify:
             side = batch_sids.select("doc_id", "sids")
             reg_sids = state.sids.read(spark)

@@ -355,6 +355,70 @@ def test_distributed_fallback_matches_driver_path(
         assert want[1][i + 1_000_000] == (0, want[0][i][1])
 
 
+def test_executor_verify_matches_driver_verify(
+    spark, tmp_path, docs, monkeypatch
+):
+    """A candidate sids frame above the broadcast bound is verified on
+    the executors (``_exact_edges``) instead of on the driver; the two
+    Jaccard forms give the same verdicts and the same registry."""
+    from nfl_data_pipeline_spark.streaming import neardup
+
+    base = docs.select("doc_id", "text")
+    even = list(range(0, 20, 2))
+    b1 = base.filter(F.col("doc_id") % 2 == 1).unionByName(
+        _clones(base, even)
+    )
+
+    def run(root):
+        state = NearDupState(str(root))
+        verdicts = [
+            _verdict_map(process_neardup_batch(spark, b, state, bid, THR))
+            for b, bid in ((base.filter(F.col("doc_id") % 2 == 0), "b0"),
+                           (b1, "b1"))
+        ]
+        return verdicts, _table_rows(spark, state.sids)
+
+    want = run(tmp_path / "driver")
+    calls = []
+    exact_edges = neardup._exact_edges
+    monkeypatch.setattr(
+        neardup, "_exact_edges",
+        lambda *a: calls.append(1) or exact_edges(*a),
+    )
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")  # every frame is above the bound
+    try:
+        got = run(tmp_path / "executors")
+    finally:
+        spark.conf.set(key, old)
+    assert calls
+    assert got == want
+    for i in even:  # a copy loses to its original's winner
+        assert want[0][1][i + 1_000_000] == (0, want[0][0][i][1])
+
+
+def test_resent_registered_id_stays_a_member(spark, tmp_path):
+    """A registered doc sent again under a later batch id, with no
+    batch partner, is a registry member: it meets its own registered
+    rows, so it is kept even when it now matches another registered
+    doc (reached here by lowering the threshold between batches)."""
+    rng = random.Random(7)
+    words = [f"w{rng.randrange(10_000_000)}" for _ in range(60)]
+    near = words[:48] + [f"m{rng.randrange(10_000_000)}" for _ in range(12)]
+    schema = "doc_id long, text string"
+    state = NearDupState(str(tmp_path / "s"))
+    # 46 of 70 shingles shared: J ≈ 0.66, under 0.95, over 0.3
+    b0 = spark.createDataFrame(
+        [(1, " ".join(words)), (2, " ".join(near))], schema
+    )
+    first = _verdict_map(process_neardup_batch(spark, b0, state, "b0", 0.95))
+    assert first == {1: (1, 1), 2: (1, 2)}
+    resent = spark.createDataFrame([(2, " ".join(near))], schema)
+    got = _verdict_map(process_neardup_batch(spark, resent, state, "b1", 0.3))
+    assert got == {2: (1, 2)}
+
+
 def _planted_pairs(rng, n_per_level=150, doc_tokens=60):
     """Cross-batch pairs over a sweep of overlap levels: each batch-2
     doc shares its first k tokens with a batch-1 original and fills
