@@ -10,8 +10,8 @@ Two layers:
    100-TB table stays untouched elsewhere), published as one atomic
    manifest swap with an optional replay marker.
 
-2. ``forget_docs_*``: per-gate wrappers that purge a doc-id set from
-   a gate's persisted registries (streaming/neardup, embdedup,
+2. ``forget_docs``: one purge of a doc-id set from the persisted
+   registries a gate state names (streaming/neardup, embdedup,
    mediadedup, funnel). WHY this must exist: the gates are
    first-arrival-wins — a registered winner's rows silently DROP
    every future near-copy. Once the winner itself is deleted
@@ -254,74 +254,24 @@ def delete_by_key_tx(
     }
 
 
-def forget_docs_neardup(
+def forget_docs(
     spark: SparkSession, state, doc_ids, batch_id: str | None = None
 ) -> dict:
-    """Purge doc ids from the MinHash gate's signature AND sids
-    registries (streaming/neardup.NearDupState)."""
-    return {
-        "signatures": delete_by_key_tx(
-            spark, state.sigs, "doc_id", doc_ids, "bucket",
-            batch_id=batch_id and f"{batch_id}-sigs",
-        ),
-        "sids": delete_by_key_tx(
-            spark, state.sids, "doc_id", doc_ids, "bucket",
-            batch_id=batch_id and f"{batch_id}-sids",
-        ),
-    }
-
-
-def forget_docs_embdedup(
-    spark: SparkSession, state, vec_ids, batch_id: str | None = None
-) -> dict:
-    """Purge vector ids from the embedding gate's band registry
-    (streaming/embdedup.EmbDedupState)."""
-    return {
-        "bands": delete_by_key_tx(
-            spark, state.bands, "vec_id", vec_ids, "bucket",
-            batch_id=batch_id,
-        )
-    }
-
-
-def forget_docs_image(
-    spark: SparkSession, state, doc_ids, batch_id: str | None = None
-) -> dict:
-    """Purge doc ids from the pHash chunk registry
-    (streaming/mediadedup.ImageDedupState)."""
-    return {
-        "chunks": delete_by_key_tx(
-            spark, state.chunks, "doc_id", doc_ids, "bucket",
-            batch_id=batch_id,
-        )
-    }
-
-
-def forget_docs_audio(
-    spark: SparkSession, state, doc_ids, batch_id: str | None = None
-) -> dict:
-    """Purge doc ids from the constellation landmark registry
-    (streaming/mediadedup.AudioDedupState)."""
-    return {
-        "landmarks": delete_by_key_tx(
-            spark, state.landmarks, "doc_id", doc_ids, "bucket",
-            batch_id=batch_id,
-        )
-    }
-
-
-def forget_docs_funnel(
-    spark: SparkSession, state, doc_ids, batch_id: str | None = None
-) -> dict:
-    """Purge doc ids from the funnel's exact-fingerprint registry
-    (streaming/funnel.FunnelState). Vocab/count tables are AGGREGATES, not
+    """Purge doc ids from every registry table of a gate state — the
+    text MinHash, embedding, image and audio gates and the funnel's
+    fingerprint registry. ``state.registries`` names each table as
+    ``(name, table, suffix)``: ids match on ``state.id_col``, and the
+    table's purge commit carries ``batch_id + suffix`` (the near-dup
+    tables' ``-sigs``/``-sids``), so a purge replays as a no-op per
+    table. The funnel's vocab/count tables are AGGREGATES, not
     per-doc records: they hold no row attributable to a document, so
     nothing to purge there."""
     return {
-        "fingerprints": delete_by_key_tx(
-            spark, state.fps, "doc_id", doc_ids, "bucket",
-            batch_id=batch_id,
+        name: delete_by_key_tx(
+            spark, table, state.id_col, doc_ids, "bucket",
+            batch_id=batch_id and f"{batch_id}{suffix}",
         )
+        for name, table, suffix in state.registries
     }
 
 
@@ -336,13 +286,11 @@ def forget_docs_curation(
     attributable to a document (that irreversibility is exactly what
     makes them sketches), so there is nothing to purge there and
     nothing that identifies the forgotten doc."""
-    out = forget_docs_funnel(
+    out = forget_docs(
         spark, state.funnel, doc_ids,
         batch_id=batch_id and f"{batch_id}-funnel",
     )
-    out.update(
-        forget_docs_neardup(spark, state.neardup, doc_ids, batch_id=batch_id)
-    )
+    out.update(forget_docs(spark, state.neardup, doc_ids, batch_id=batch_id))
     return out
 
 

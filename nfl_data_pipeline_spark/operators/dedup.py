@@ -608,130 +608,200 @@ def hamming_near_pairs(
     )
 
 
-def registry_winner_verdicts(
-    spark,
-    base_ids: DataFrame,
-    edges: DataFrame,
-    reg_nodes: DataFrame | None,
+def probe_candidates(
+    batch: DataFrame,
+    stored: DataFrame | None,
+    key_cols: list[str],
     id_col: str = "doc_id",
+    keep=None,
 ) -> DataFrame:
-    """Shared winner-resolution tail of every incremental dedup gate
-    (text MinHash / embedding / image / audio): connected components
-    over the verified ``(doc_a, doc_b)`` edges, winner = the
-    component's REGISTRY member when one exists (first-arrival-wins
-    across batches, ``reg_nodes`` columns ``(doc_id, _reg)``; only
-    ``_reg == 1`` rows are members), else the min batch id; returns
-    one ``(id_col, dup_of, keep)`` verdict row per ``base_ids`` row,
-    checkpointed so the caller can mutate the registry afterwards.
-    The winner rule lives in :func:`driver_verdicts` and the
-    distributed fallback below — one definition, so a change to winner
-    selection can never diverge across the four gates.
-
-    When the edges fit the driver, registry membership of the
-    component nodes (the only fact Spark must supply) comes from ONE
-    bounded semi-join: |comp nodes| ≤ 2·|edges|, broadcast against the
-    registry with NO exchange of the registry side. The MinHash gate
-    already knows its members from its candidates and calls
-    :func:`driver_verdicts` directly."""
-    from pyspark.sql import types as T
-
-    from nfl_data_pipeline_spark.operators.localframe import local_frame
-
-    dedup_edges = edges.distinct()
-    uf = _union_find_rows(dedup_edges)
-    if uf is not None:
-        comp_rows, node_t = uf
-        members: set = set()
-        if reg_nodes is not None and comp_rows:
-            nodes_f = local_frame(
-                spark,
-                [(n,) for n, _ in comp_rows],
-                T.StructType([T.StructField("doc_id", node_t)]),
-            )
-            members = {
-                r[0]
-                for r in reg_nodes.filter(F.col("_reg") == 1)
-                .join(F.broadcast(nodes_f), "doc_id")
-                .select("doc_id")
-                .collect()
-            }
-        out, _ = driver_verdicts(
-            spark, base_ids, comp_rows, members, node_t, id_col
+    """Candidate rows ``(doc_a, doc_b, b_reg)`` of a gate whose probe
+    is an equi-join on ``key_cols`` (the text MinHash and image gates):
+    the batch rows against the union of the batch rows and the
+    ``stored`` registry rows, as ONE join deduped by one aggregate.
+    ``b_reg`` is 1 when ``doc_b`` came from the registry. A batch pair
+    keeps ``doc_a < doc_b``; a registry pair keeps every match that
+    passes ``keep`` (the gate's similarity test over the ``a.``/``b.``
+    sides). A registry pair with ``doc_a == doc_b`` (a batch doc
+    meeting its own registered rows: a replay, or an id sent again) is
+    a membership row for :func:`gate_verdicts` and needs no ``keep``.
+    Only the batch rows are ever a broadcast candidate: the registry
+    streams."""
+    other = batch.withColumn("b_reg", F.lit(0))
+    if stored is not None:
+        other = other.unionByName(
+            stored.select(*batch.columns).withColumn("b_reg", F.lit(1))
         )
-    else:
-        # the bounded collect above already found the edge set too
-        # large for the driver: go straight to the distributed path
-        comps = _distributed_components(dedup_edges)
-        if reg_nodes is None:
-            from nfl_data_pipeline_spark.operators.localframe import (
-                empty_frame,
-            )
-
-            reg_nodes = empty_frame(spark, "doc_id long, _reg int")
-        labeled = comps.join(
-            reg_nodes, comps["node"] == reg_nodes["doc_id"], "left"
-        ).select(
-            "node", "component", F.coalesce("_reg", F.lit(0)).alias("_reg")
-        )
-        winners = labeled.groupBy("component").agg(
-            F.coalesce(
-                F.min(F.when(F.col("_reg") == 1, F.col("node"))),
-                F.min("node"),
-            ).alias("winner")
-        )
-        verdict_in_comp = (
-            labeled.join(winners, "component")
-            .filter(F.col("_reg") == 0)  # verdicts: batch docs only
-            .select(
-                F.col("node").alias(id_col),
-                F.col("winner").alias("dup_of"),
-            )
-        )
-        out = _verdict_cols(
-            base_ids.join(verdict_in_comp, id_col, "left"), id_col
-        )
-    return out.localCheckpoint(eager=True)  # pin before the registry mutates
+    a, b = F.col(f"a.{id_col}"), F.col(f"b.{id_col}")
+    cond = (F.col("b.b_reg") == 1) | (a < b)
+    if keep is not None:
+        cond = cond & (keep | (a == b))
+    return (
+        batch.alias("a")
+        .join(other.alias("b"), key_cols)
+        .filter(cond)
+        .select(a.alias("doc_a"), b.alias("doc_b"), "b.b_reg")
+        .distinct()
+    )
 
 
-def driver_verdicts(
+def gate_verdicts(
     spark,
     base_ids: DataFrame,
-    comp_rows: list,
-    members: set,
-    node_t,
+    cands: DataFrame,
     id_col: str = "doc_id",
+    rows: list | None = None,
 ):
-    """Driver path of :func:`registry_winner_verdicts`, from the
-    union-find's ``(node, component)`` rows and the registry
-    ``members`` among the nodes. A component's winner is its min
-    member, else the component id (its min node). Returns
-    ``(verdicts, losers)``: the ``(id_col, dup_of, keep)`` frame over
-    ``base_ids``, and the ``(id_col, dup_of)`` frame of the batch
-    nodes that lose. Both read only ``base_ids`` and driver data."""
+    """Shared verdict tail of every incremental dedup gate (text
+    MinHash / embedding / image / audio). ``cands`` holds ``(doc_a,
+    doc_b, b_reg)`` rows: the verified edges, plus membership rows
+    (``doc_a == doc_b``, ``b_reg = 1``) where a batch doc met its own
+    registered rows. Registry membership comes from these rows alone —
+    a registered doc joins a component only through a batch × registry
+    match — so no gate reads its registry to find its members.
+
+    Winner per connected component of the edges: its min registry
+    member (first arrival wins across batches), else its min node (the
+    min batch id). Returns ``(verdicts, losers)``: ``(id_col, dup_of,
+    keep)`` over ``base_ids``, and ``(id_col, dup_of)`` for the batch
+    docs that lose.
+
+    ``rows`` are candidate ``(doc_a, doc_b, b_reg)`` tuples the caller
+    already holds (the text gate verifies on the driver); otherwise
+    one bounded collect takes them. Up to ``DRIVER_MAX_PAIRS`` rows the
+    winners resolve on the driver and the verdicts read only
+    ``base_ids`` and driver data. Past it the components come from
+    :func:`_distributed_components`, membership from the same frame,
+    and the verdicts are pinned: they read the registry, which the
+    caller mutates next."""
     from pyspark.sql import types as T
 
     from nfl_data_pipeline_spark.operators.localframe import local_frame
 
-    best: dict = {}
-    for n, c in comp_rows:
-        if n in members and (c not in best or n < best[c]):
-            best[c] = n
-    lost = []
-    for n, c in comp_rows:
-        w = best.get(c, c)
-        if n not in members and n != w:
-            lost.append((n, w))
-    losers = local_frame(
-        spark,
-        lost,
-        T.StructType(
+    cands = cands.select("doc_a", "doc_b", "b_reg").distinct()
+    if rows is None:
+        rows = cands.limit(DRIVER_MAX_PAIRS + 1).collect()
+    if len(rows) <= DRIVER_MAX_PAIRS:
+        members = {b for _, b, reg in rows if reg}
+        comp_rows = union_find((a, b) for a, b, _ in rows if a != b)
+        best: dict = {}
+        for n, c in comp_rows:
+            if n in members and (c not in best or n < best[c]):
+                best[c] = n
+        lost = [
+            (n, best.get(c, c))
+            for n, c in comp_rows
+            if n not in members and n != best.get(c, c)
+        ]
+        node_t = base_ids.schema[id_col].dataType
+        schema = T.StructType(
             [T.StructField(id_col, node_t), T.StructField("dup_of", node_t)]
-        ),
+        )
+        losers = local_frame(spark, lost, schema)
+        verdicts = _verdict_cols(
+            base_ids.join(F.broadcast(losers), id_col, "left"), id_col
+        )
+        return verdicts, losers
+    comps = _distributed_components(
+        cands.filter(F.col("doc_a") != F.col("doc_b"))
+    )
+    reg = (
+        cands.filter(F.col("b_reg") == 1)
+        .select(F.col("doc_b").alias("node"), F.lit(1).alias("_reg"))
+        .distinct()
+    )
+    labeled = comps.join(reg, "node", "left").withColumn(
+        "_reg", F.coalesce("_reg", F.lit(0))
+    )
+    winners = labeled.groupBy("component").agg(
+        F.coalesce(
+            F.min(F.when(F.col("_reg") == 1, F.col("node"))), F.min("node")
+        ).alias("winner")
+    )
+    lost = (
+        labeled.join(winners, "component")
+        .filter((F.col("_reg") == 0) & (F.col("node") != F.col("winner")))
+        .select(F.col("node").alias(id_col), F.col("winner").alias("dup_of"))
     )
     verdicts = _verdict_cols(
-        base_ids.join(F.broadcast(losers), id_col, "left"), id_col
+        base_ids.join(lost, id_col, "left"), id_col
+    ).localCheckpoint(eager=True)
+    return verdicts, verdicts.filter(F.col("keep") == 0).select(
+        id_col, "dup_of"
     )
-    return verdicts, losers
+
+
+def register_kept(
+    writes: list, dropped: DataFrame, batch_id: str, cfg: dict
+) -> None:
+    """Shared registry write of every incremental dedup gate. Each
+    ``(table, key_rows, bucket, site)`` in ``writes`` is a registry
+    table, the batch's rows for it, their bucket expression and the
+    staging path: the rows of the ``dropped`` ids (one column, named
+    as in the key rows) leave, ``bucket`` is added, and the tables
+    stage concurrently (files stay invisible until commit). The
+    commits then run in ``writes`` order with the batch id; the last
+    carries ``{"gate_config": cfg}`` and is the batch-completion
+    marker. A table that already applied ``batch_id`` (a replay, or a
+    crash between two commits) is skipped. ``site`` names a
+    ``stage_files_auto`` call site, for narrow rows only; ``None``
+    stages with ``stage_files``, the path for rows with a payload
+    (vectors), whose bounding collect would itself be the driver
+    hazard."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    todo = [w for w in writes if not w[0].is_applied(batch_id)]
+    if not todo:
+        return
+    key = dropped.columns[0]
+    staged = []
+    with ThreadPoolExecutor(max_workers=len(todo)) as pool:
+        for table, rows, bucket, site in todo:
+            rows = rows.join(dropped, key, "left_anti").withColumn(
+                "bucket", bucket
+            )
+            if site is None:
+                fut = pool.submit(table.stage_files, rows, "bucket")
+            else:
+                fut = pool.submit(
+                    table.stage_files_auto, rows, "bucket", site=site
+                )
+            staged.append((table, fut))
+    last = writes[-1][0]
+    for table, fut in staged:
+        table.commit(
+            fut.result(),
+            batch_id=batch_id,
+            meta={"gate_config": cfg} if table is last else None,
+        )
+
+
+def maintain_gate_state(
+    spark,
+    state,
+    min_files: int = 8,
+    retain_versions: int = 2,
+    grace_s: float = 300.0,
+) -> dict:
+    """Periodic maintenance of a gate's registries (``state.registries``
+    — ``(name, table, forget suffix)`` rows, every table bucketed on
+    ``bucket``). Each batch appends one file per touched bucket, so
+    file counts grow O(buckets × batches): compact back toward one
+    file per bucket once ``min_files`` accumulate, then vacuum
+    versions beyond ``retain_versions``. Metadata + layout only —
+    identical rows, batch markers and stamps carried forward, so probe
+    results and replay verdicts are unchanged
+    (tests/test_gate_maintenance)."""
+    out = {}
+    for name, table, _ in state.registries:
+        compacted = table.compact(
+            spark, min_files=min_files, partition_col="bucket"
+        )
+        deleted = table.vacuum(
+            retain_versions=retain_versions, grace_s=grace_s
+        )
+        out[name] = {"compacted": compacted, "deleted_files": deleted}
+    return out
 
 
 def _verdict_cols(out: DataFrame, id_col: str) -> DataFrame:
@@ -743,30 +813,6 @@ def _verdict_cols(out: DataFrame, id_col: str) -> DataFrame:
 # edge (or candidate) rows a driver-side union-find takes; past it the
 # distributed paths run
 DRIVER_MAX_PAIRS = 1_000_000
-
-
-def _union_find_rows(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    driver_max_pairs: int = DRIVER_MAX_PAIRS,
-):
-    """Driver-side union-find over the edge frame when it fits
-    (``connected_components``' fast path, shared with the gate tail so
-    ``registry_winner_verdicts`` can resolve winners in Python).
-
-    Returns ``(rows, node_type)`` with ``rows = [(node, component)]``
-    (component = min reachable id), or ``None`` when the edge set
-    exceeds ``driver_max_pairs``. One bounded collect decides both:
-    the edges fit iff at most ``driver_max_pairs`` rows come back.
-    ``pairs`` is not persisted: on the common (fitting) path a cache
-    adds a job and nothing reads it again, and a too-large edge set
-    goes to ``_distributed_components``, which persists its input
-    itself."""
-    rows = pairs.select(a_col, b_col).limit(driver_max_pairs + 1).collect()
-    if len(rows) > driver_max_pairs:
-        return None
-    return union_find(rows), pairs.schema[a_col].dataType
 
 
 def union_find(pairs) -> list:
@@ -825,12 +871,19 @@ def connected_components(
     in tests): union-by-min-root makes each union-find root the min
     id of its component.
     """
-    uf = _union_find_rows(pairs, a_col, b_col, driver_max_pairs)
-    if uf is not None:
-        out_rows, node_t = uf
-        spark = pairs.sparkSession
+    # one bounded collect decides the path: the edges fit iff at most
+    # driver_max_pairs rows come back. ``pairs`` is not persisted: on
+    # the fitting path nothing reads it again, and the distributed path
+    # persists its input itself
+    rows = pairs.select(a_col, b_col).limit(driver_max_pairs + 1).collect()
+    if len(rows) <= driver_max_pairs:
         from pyspark.sql import types as T
 
+        from nfl_data_pipeline_spark.operators.localframe import (
+            local_frame,
+        )
+
+        node_t = pairs.schema[a_col].dataType
         schema = T.StructType(
             [T.StructField("node", node_t), T.StructField("component", node_t)]
         )
@@ -839,11 +892,7 @@ def connected_components(
         # worker on every scan (~0.1-0.3 s of executor time per task
         # per action); the Arrow construction is pure JVM at execution
         # and needs no checkpoint at all (driver data, deterministic).
-        from nfl_data_pipeline_spark.operators.localframe import (
-            local_frame,
-        )
-
-        return local_frame(spark, out_rows, schema)
+        return local_frame(pairs.sparkSession, union_find(rows), schema)
     return _distributed_components(pairs, a_col, b_col)
 
 

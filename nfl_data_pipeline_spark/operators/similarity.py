@@ -223,52 +223,6 @@ def embedding_near_dups(
     )
 
 
-def brp_lsh_topk(
-    df: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bucket_length: float = 2.0,
-    num_tables: int = 3,
-) -> DataFrame:
-    """Stock-ML ANN path: pyspark.ml BucketedRandomProjectionLSH
-    approxSimilarityJoin on euclidean distance (SURVEY §7 phase 6).
-
-    Complements the exact/IVF cosine operators: this is the
-    off-the-shelf scale path when euclidean semantics suffice. Not
-    oracle-checkable (random hyperplanes live in the fitted model),
-    so it ships as an operator + test, not a registry query.
-    """
-    from pyspark.ml.feature import BucketedRandomProjectionLSH
-    from pyspark.ml.functions import array_to_vector
-
-    prep = lambda d: d.select(  # noqa: E731
-        F.col(id_col),
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features"),
-    )
-    base, q = prep(df), prep(queries)
-    lsh = BucketedRandomProjectionLSH(
-        inputCol="features",
-        outputCol="hashes",
-        bucketLength=bucket_length,
-        numHashTables=num_tables,
-        seed=42,
-    ).fit(base)
-    joined = lsh.approxSimilarityJoin(q, base, float("inf"), distCol="dist")
-    out = joined.select(
-        F.col(f"datasetA.{id_col}").alias("q_id"),
-        F.col(f"datasetB.{id_col}").alias("c_id"),
-        "dist",
-    ).filter(F.col("q_id") != F.col("c_id"))
-    w = Window.partitionBy("q_id").orderBy(F.col("dist").asc(), F.col("c_id"))
-    return (
-        out.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("q_id", "rank", "c_id", "dist")
-    )
-
-
 def kmeans_ivf_topk(
     df: DataFrame,
     queries: DataFrame,
@@ -750,7 +704,43 @@ def semantic_dedup(
     # crossJoin+window assignment subtree replays per consumer
     # (ReuseExchange reuses only identical shuffle subtrees)
     probed = _assign_nearest(v, cents1, probes=n_probe).localCheckpoint()
-    return _dedup_from_assignments(probed, id_col, threshold, dim)
+    # Pair scoring runs in the grouped pair kernel, grouped by cid:
+    # every vector crosses the Python boundary once per cell it sits
+    # in, and only narrow (a_id, b_id, cosine) rows come back.
+    # Primary rows are side 0 and probe rows side 1, so the kernel's
+    # "never side 1 x side 1" rule is exactly "at least one side is
+    # in its primary cell"; a same-id pair (the gates' membership row)
+    # is no duplicate. Cosines equal the SQL fold's bit for bit
+    # (see _grouped_pair_scores), and the threshold filter stays in
+    # Spark. Per-group pair state is O(c²) for cluster size c —
+    # bounded by the auto-k ~512 target.
+    members = with_norm(probed, "vec").select(
+        F.col("vid").alias("c_id"),
+        F.col("vec").alias("c_vec"),
+        F.col("norm").alias("c_norm"),
+        "cid",
+        (F.col("rn") > 1).cast("int").alias("c_side"),
+    )
+    dropped = (
+        _grouped_pair_scores(members, ["cid"], dim, side_col="c_side")
+        .filter(
+            (F.col("cosine") >= F.lit(threshold))
+            & (F.col("a_id") != F.col("b_id"))
+        )
+        .select(F.greatest("a_id", "b_id").alias("vid"))
+        .distinct()
+    )
+    a2 = probed.filter(F.col("rn") == 1).select("vid", "cid")
+    wsz = Window.partitionBy("cid")
+    return (
+        a2.join(dropped.withColumn("is_dup", F.lit(1)), "vid", "left")
+        .select(
+            F.col("vid").alias(id_col),
+            F.col("cid").alias("cluster_id"),
+            F.count("*").over(wsz).alias("cluster_size"),
+            F.when(F.col("is_dup").isNull(), 1).otherwise(0).alias("is_kept"),
+        )
+    )
 
 
 def fit_centroids(v: DataFrame, k: int) -> DataFrame:
@@ -783,93 +773,6 @@ def fit_centroids(v: DataFrame, k: int) -> DataFrame:
         .agg(F.array_sort(F.collect_list(F.struct("pos", "m"))).alias("sm"))
         .select("cid", F.expr("transform(sm, s -> s.m)").alias("cvec"))
     )
-
-
-def _dedup_from_assignments(
-    probed: DataFrame, id_col: str, threshold: float, dim: int
-) -> DataFrame:
-    """Pair/drop/report stage shared by every clustering backend:
-    ``probed`` is a materialized (vid, vec, cid, rn) table (rn = 1 is
-    the primary cell; rn > 1 are probe cells) whose vectors are
-    ``dim`` wide."""
-    # Pair scoring runs in the grouped pair kernel, grouped by cid:
-    # every vector crosses the Python boundary once per cell it sits
-    # in, and only narrow (a_id, b_id, cosine) rows come back.
-    # Primary rows are side 0 and probe rows side 1, so the kernel's
-    # "never side 1 x side 1" rule is exactly "at least one side is
-    # in its primary cell". Cosines equal the SQL fold's bit for bit
-    # (see _grouped_pair_scores), and the threshold filter stays in
-    # Spark. Per-group pair state is O(c²) for cluster size c —
-    # bounded by the auto-k ~512 target.
-    members = with_norm(probed, "vec").select(
-        F.col("vid").alias("c_id"),
-        F.col("vec").alias("c_vec"),
-        F.col("norm").alias("c_norm"),
-        "cid",
-        (F.col("rn") > 1).cast("int").alias("c_side"),
-    )
-    dropped = (
-        _grouped_pair_scores(members, ["cid"], dim, side_col="c_side")
-        .filter(F.col("cosine") >= F.lit(threshold))
-        .select(F.greatest("a_id", "b_id").alias("vid"))
-        .distinct()
-    )
-    a2 = probed.filter(F.col("rn") == 1).select("vid", "cid")
-    wsz = Window.partitionBy("cid")
-    return (
-        a2.join(dropped.withColumn("is_dup", F.lit(1)), "vid", "left")
-        .select(
-            F.col("vid").alias(id_col),
-            F.col("cid").alias("cluster_id"),
-            F.count("*").over(wsz).alias("cluster_size"),
-            F.when(F.col("is_dup").isNull(), 1).otherwise(0).alias("is_kept"),
-        )
-    )
-
-
-def semantic_dedup_ml(
-    df: DataFrame,
-    k: int | None = None,
-    threshold: float = 0.4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_probe: int = 1,
-    max_iter: int = 20,
-    seed: int = 42,
-) -> DataFrame:
-    """Production-backend SemDedup: pyspark.ml KMeans (real Lloyd to
-    convergence, k-means|| init) trains the partition; the trained
-    centroids feed the SAME probed-assignment and pair/drop stages as
-    the deterministic variant — swap the clustering, keep the dedup
-    semantics. Not oracle-checkable (ml KMeans is seed-stable within
-    Spark but not reproducible in SQL); equivalence-of-shape is
-    asserted in tests and recall against planted dups is recorded in
-    SCALING.md §"Semantic-dedup pair bound".
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    n, dim = _count_and_width(df, vec_col)
-    if k is None:
-        k = max(8, n // TARGET_CLUSTER_SIZE)
-    v = df.select(
-        F.col(id_col).alias("vid"),
-        F.col(vec_col).cast("array<double>").alias("vec"),
-    )
-    feats = v.withColumn("features", array_to_vector("vec"))
-    km = KMeans(k=k, seed=seed, maxIter=max_iter, featuresCol="features").fit(
-        feats
-    )
-    spark = df.sparkSession
-    from nfl_data_pipeline_spark.operators.localframe import local_frame
-
-    cents = local_frame(
-        spark,
-        [(int(i), [float(x) for x in c]) for i, c in enumerate(km.clusterCenters())],
-        "cid int, cvec array<double>",
-    )
-    probed = _assign_nearest(v, cents, probes=n_probe).localCheckpoint()
-    return _dedup_from_assignments(probed, id_col, threshold, dim)
 
 
 def _hyperplane_proj(vec_col: str, plane_id: int, dim: int) -> str:
@@ -1166,11 +1069,14 @@ def _grouped_pair_scores(
 
     Without ``side_col``: all unordered pairs, a_id < b_id. With
     ``side_col``: side-0 pairs once with a_id < b_id, plus every
-    (side 0, side 1) pair with a_id != b_id — and NEVER side 1 x
-    side 1. In the gate, side 0 is the batch and side 1 the registry,
-    whose pairs would merge components across already-registered
-    winners; in semantic dedup, side 0 is a vector's primary cell and
-    side 1 a probe cell, so every pair has a primary member.
+    (side 0, side 1) pair — a_id == b_id included — and NEVER side 1 x
+    side 1; a ``b_side`` column carries the b row's side. In the gate,
+    side 0 is the batch and side 1 the registry, whose pairs would
+    merge components across already-registered winners, and an
+    a_id == b_id pair is a batch vector meeting its own registered
+    rows (a membership row); in semantic dedup, side 0 is a vector's
+    primary cell and side 1 a probe cell, so every pair has a primary
+    member.
 
     Bit-identity contract (tests/test_pair_kernel.py compares both
     sides of the banded operator's gate hex-exactly): the dot is a
@@ -1211,6 +1117,7 @@ def _grouped_pair_scores(
             T.StructField("b_id", id_field.dataType),
             T.StructField("cosine", T.DoubleType()),
         ]
+        + ([T.StructField("b_side", T.IntegerType())] if side_col else [])
     )
 
     id_pa_name = {
@@ -1226,6 +1133,7 @@ def _grouped_pair_scores(
         id_type = getattr(pa, id_pa_name)()
         out_pa = pa.schema(
             [("a_id", id_type), ("b_id", id_type), ("cosine", pa.float64())]
+            + ([("b_side", pa.int32())] if side_col else [])
         )
 
         def emit(ids, norms, V, sides, seg_starts):
@@ -1278,18 +1186,14 @@ def _grouped_pair_scores(
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = acc / nprod
             live = nprod != 0.0
+            cols = [
+                pa.array(ids[a_idx][live], type=out_pa[0].type),
+                pa.array(ids[b_idx][live], type=out_pa[1].type),
+                pa.array(cos[live], type=pa.float64()),
+            ]
             if sides is not None:
-                # replayed probe docs coexist with their registry row:
-                # the join form's a_id != b_id
-                live &= ids[a_idx] != ids[b_idx]
-            return pa.RecordBatch.from_arrays(
-                [
-                    pa.array(ids[a_idx][live], type=out_pa[0].type),
-                    pa.array(ids[b_idx][live], type=out_pa[1].type),
-                    pa.array(cos[live], type=pa.float64()),
-                ],
-                schema=out_pa,
-            )
+                cols.append(pa.array(sides[b_idx][live], type=pa.int32()))
+            return pa.RecordBatch.from_arrays(cols, schema=out_pa)
 
         carry = None  # (gkeys, ids, norms, V, sides) of the trailing group
         for batch in batches:

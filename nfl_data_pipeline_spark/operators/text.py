@@ -79,29 +79,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def tfidf_features(
-    df: DataFrame, text_col: str = "text", n_features: int = 1 << 12
-) -> DataFrame:
-    """TF-IDF document vectors via pyspark.ml (HashingTF → IDF) —
-    the SURVEY §7 phase-6 text-featurization path. Hashing TF keeps it
-    vocabulary-free (no global fit besides the IDF pass, which is one
-    aggregate over the corpus)."""
-    from pyspark.ml.feature import IDF, HashingTF, Tokenizer
-
-    tok = Tokenizer(inputCol=text_col, outputCol="__words")
-    words = tok.transform(df)
-    tf = HashingTF(
-        inputCol="__words", outputCol="__tf", numFeatures=n_features
-    ).transform(words)
-    if tf.isEmpty():
-        # IDF.fit throws "Haven't seen any document yet" on an empty
-        # corpus; an empty result with the right schema is the sane
-        # contract for composable pipelines
-        return tf.withColumn("tfidf", F.col("__tf")).drop("__words", "__tf")
-    idf_model = IDF(inputCol="__tf", outputCol="tfidf").fit(tf)
-    return idf_model.transform(tf).drop("__words", "__tf")
-
-
 def word_ngram_rows(
     df: DataFrame, n: int, text_col: str = "text", out_col: str = "gram"
 ) -> DataFrame:
@@ -121,17 +98,6 @@ def word_ngram_rows(
             )
         ).alias(out_col)
     )
-
-
-def ngrams(df: DataFrame, n: int = 2, text_col: str = "text") -> DataFrame:
-    """Word n-grams via pyspark.ml.NGram (feeds MinHashLSH-style
-    pipelines; our dedup uses the arithmetic-composition variant for
-    oracle exactness)."""
-    from pyspark.ml.feature import NGram, Tokenizer
-
-    words = Tokenizer(inputCol=text_col, outputCol="__words").transform(df)
-    out = NGram(n=n, inputCol="__words", outputCol="ngrams").transform(words)
-    return out.drop("__words")
 
 
 # --- character-n-gram language ID ----------------------------------------

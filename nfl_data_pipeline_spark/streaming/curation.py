@@ -380,11 +380,9 @@ def maintain_curation_state(
     queued right-to-be-forgotten ids purge on the maintenance cadence
     and the subsequent compaction immediately reclaims the space
     over the purged rows."""
+    from nfl_data_pipeline_spark.operators.dedup import maintain_gate_state
     from nfl_data_pipeline_spark.streaming.funnel import (
         maintain_funnel_state,
-    )
-    from nfl_data_pipeline_spark.streaming.neardup import (
-        maintain_neardup_state,
     )
 
     out = {}
@@ -393,7 +391,7 @@ def maintain_curation_state(
     out["funnel"] = maintain_funnel_state(
         spark, state.funnel, min_files, retain_versions, grace_s=grace_s
     )
-    out["neardup"] = maintain_neardup_state(
+    out["neardup"] = maintain_gate_state(
         spark, state.neardup, min_files, retain_versions, grace_s=grace_s
     )
     for name, table in (

@@ -13,14 +13,20 @@ two-table layout trades that for a second join). Hash-derived planes
 by any future batch — the property that lets the registry stay
 probe-compatible without storing plane weights.
 
-Per batch: band rows → candidates (batch×registry ∪ batch×batch on
-equal band values; the registry SCAN is O(registry) per batch — only
-the candidate SHUFFLE is bounded by the banding, same honesty note
-as streaming/neardup.py) → exact cosine verify ≥ threshold → connected
-components with registered-member-wins (first-arrival across
-batches, min-id within a batch) → winners' band rows append with the
-batch id in one atomic manifest swap. Replays reproduce verdicts
-exactly (self-matches excluded), same argument as the MinHash gate.
+Per batch: band rows → candidates from the sided pair kernel
+(batch×registry ∪ batch×batch on equal band values; the registry SCAN
+is O(registry) per batch — only the candidate SHUFFLE is bounded by
+the banding, same honesty note as streaming/neardup.py) → exact
+cosine verify ≥ threshold; a batch vector meeting its own registered
+rows is a membership row and skips the verify → the shared verdict
+tail (operators/dedup.gate_verdicts: registered-member-wins, first
+arrival across batches, min id within a batch, membership from the
+candidates — no registry id scan) → the shared registry write
+(operators/dedup.register_kept): the winners' band rows append with
+the batch id in one atomic manifest swap. Replays reproduce verdicts
+exactly, same argument as the MinHash gate. Maintenance and forget
+are the shared operators/dedup.maintain_gate_state and
+jobs/forget.forget_docs.
 
 Threshold regime: hyperplane LSH is only selective at high cosine
 (recall 1-(1-p^r)^L, p = 1-θ/π) — production near-dup ≥0.9 is the
@@ -34,8 +40,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nfl_data_pipeline_spark.jobs.txlog import TxTable
-from nfl_data_pipeline_spark.operators.dedup import registry_winner_verdicts
+from nfl_data_pipeline_spark.jobs.txlog import TxTable, check_gate_config
+from nfl_data_pipeline_spark.operators.dedup import (
+    gate_verdicts,
+    register_kept,
+)
 from nfl_data_pipeline_spark.operators.similarity import (
     _count_and_width,
     hyperplane_band_rows,
@@ -45,19 +54,11 @@ _NB = 16  # registry hash buckets
 
 
 class EmbDedupState:
+    id_col = "vec_id"
+
     def __init__(self, root: str):
         self.bands = TxTable(os.path.join(root, "bands"))
-
-
-def _check_gate_config(state: EmbDedupState, cfg: dict) -> None:
-    """Raise before any work when the persisted registry was written
-    under a different gate configuration — the shared guard
-    (jobs/txlog.check_gate_config): band layout/dim change the band
-    keys, threshold changes verdicts, and the two projection engines
-    are not bit-identical — one configuration per registry."""
-    from nfl_data_pipeline_spark.jobs.txlog import check_gate_config
-
-    check_gate_config(state.bands, cfg, "embedding")
+        self.registries = (("bands", self.bands, ""),)
 
 
 def process_embdedup_batch(
@@ -97,7 +98,12 @@ def process_embdedup_batch(
         "dim": dim,
         "engine": engine,
     }
-    _check_gate_config(state, cfg)
+    # raise before any work when the registry was written under
+    # another configuration (jobs/txlog.check_gate_config): band
+    # layout/dim change the band keys, threshold changes verdicts, and
+    # the two projection engines are not bit-identical — one
+    # configuration per registry
+    check_gate_config(state.bands, cfg, "embedding")
     # a NULL vector has no bands: it can match nothing, keeps its
     # verdict row (keep = 1) and never registers
     bands = hyperplane_band_rows(
@@ -115,7 +121,7 @@ def process_embdedup_batch(
     # both vectors on the pair row — ~1 KB of Arrow/codegen traffic
     # per pair (SCALING.md: ~3M candidates/batch at the 10× tier).
     # The sided grouped kernel ships each band row once per bucket,
-    # scores probe-probe (a < b) and probe-registry (a ≠ b) pairs in
+    # scores probe-probe (a < b) and probe-registry pairs in
     # segment-vectorized numpy with the exact fold order of the SQL
     # engine's dim-unrolled dot, and never emits registry-registry
     # pairs. Only this VERIFY stage is exact by construction: a given
@@ -131,94 +137,49 @@ def process_embdedup_batch(
     )
 
     stored = state.bands.read(spark)
-    members = bands.select(
-        "band_id",
-        "band_val",
-        "c_id",
-        "c_vec",
-        "c_norm",
-        F.lit(0).alias("c_side"),
+    members = bands.selectExpr(
+        "band_id", "band_val", "c_id", "c_vec", "c_norm", "0 AS c_side"
     )
     if stored is not None:
         members = members.unionByName(
-            stored.select(
-                "band_id",
-                "band_val",
-                F.col("vec_id").alias("c_id"),
-                F.col("vec").alias("c_vec"),
-                F.col("norm").alias("c_norm"),
-                F.lit(1).alias("c_side"),
+            stored.selectExpr(
+                "band_id", "band_val", "vec_id AS c_id", "vec AS c_vec",
+                "norm AS c_norm", "1 AS c_side",
             )
         )
-    edges = (
+    cands = (
         _grouped_pair_scores(
             members, ["band_id", "band_val"], dim, side_col="c_side"
         )
-        .filter(F.col("cosine") >= threshold)
+        # a_id == b_id: a batch vector meeting its own registered rows,
+        # a membership row that needs no verify
+        .filter(
+            (F.col("cosine") >= threshold) | (F.col("a_id") == F.col("b_id"))
+        )
         .select(
-            F.col("a_id").alias("doc_a"), F.col("b_id").alias("doc_b")
+            F.col("a_id").alias("doc_a"),
+            F.col("b_id").alias("doc_b"),
+            F.col("b_side").alias("b_reg"),
         )
     )
-    reg_nodes = (
-        stored.select(F.col("vec_id").alias("doc_id"))
-        .distinct()
-        .withColumn("_reg", F.lit(1))
-        if stored is not None
-        else None
+    verdicts, losers = gate_verdicts(
+        spark, vectors.select(id_col), cands, id_col=id_col
     )
-    verdicts = registry_winner_verdicts(
-        spark, vectors.select(id_col), edges, reg_nodes, id_col=id_col
+    new_rows = bands.selectExpr(
+        "c_id AS vec_id", "c_vec AS vec", "c_norm AS norm", "band_id",
+        "band_val",
     )
-
-    if not state.bands.is_applied(batch_id):
-        kept = verdicts.filter(F.col("keep") == 1).select(
-            F.col(id_col).alias("c_id")
-        )
-        new_rows = (
-            bands.join(kept, "c_id")
-            .select(
-                F.col("c_id").alias("vec_id"),
-                F.col("c_vec").alias("vec"),
-                F.col("c_norm").alias("norm"),
-                "band_id",
-                "band_val",
-            )
-            .withColumn(
-                "bucket",
-                F.pmod(
-                    F.xxhash64("band_id", "band_val"), F.lit(_NB)
-                ).cast("long"),
-            )
-        )
-        # Deliberately NOT stage_files_auto: these rows carry the
-        # embedding payload, so the bounding limit(N+1).collect()
-        # would itself be the driver hazard at production dims
-        # (20k × 768-d ≈ 120 MB). Row-count bounds only make the
-        # driver path safe for NARROW frames; vector registries stay
-        # on the distributed write at every size.
-        adds = state.bands.stage_files(new_rows, "bucket")
-        state.bands.commit(
-            adds, batch_id=batch_id, meta={"gate_config": cfg}
-        )
+    # stage_files, never stage_files_auto: these rows carry the
+    # embedding payload, so the bounding limit(N+1).collect() would
+    # itself be the driver hazard at production dims (20k × 768-d ≈
+    # 120 MB)
+    bucket = F.pmod(F.xxhash64("band_id", "band_val"), F.lit(_NB)).cast(
+        "long"
+    )
+    register_kept(
+        [(state.bands, new_rows, bucket, None)],
+        losers.select(F.col(id_col).alias("vec_id")),
+        batch_id,
+        cfg,
+    )
     return verdicts
-
-
-def maintain_embdedup_state(
-    spark: SparkSession,
-    state: EmbDedupState,
-    min_files: int = 8,
-    retain_versions: int = 2,
-    grace_s: float = 300.0,
-) -> dict:
-    """Periodic maintenance for the band-row registry (one file per
-    touched bucket per batch otherwise — O(buckets × batches) growth):
-    compact to ~one file per bucket, vacuum expired versions. Metadata
-    + layout only; band values, probe verdicts, and replay markers
-    are unchanged (tests/test_gate_maintenance)."""
-    compacted = state.bands.compact(
-        spark, min_files=min_files, partition_col="bucket"
-    )
-    deleted = state.bands.vacuum(
-        retain_versions=retain_versions, grace_s=grace_s
-    )
-    return {"bands": {"compacted": compacted, "deleted_files": deleted}}

@@ -72,6 +72,8 @@ class FunnelState:
     a plain left join (``registry_probe``; SCALING.md §"Funnel registry
     probe" is why there is no prefilter)."""
 
+    id_col = "doc_id"
+
     def __init__(
         self,
         root: str,
@@ -81,6 +83,8 @@ class FunnelState:
         self.vocab = TxTable(os.path.join(root, "vocab"))
         self.fps = TxTable(os.path.join(root, "fingerprints"))
         self.counts = TxTable(os.path.join(root, "counts"))
+        # the per-doc registry jobs/forget.forget_docs purges
+        self.registries = (("fingerprints", self.fps, ""),)
         # optional order-2 perplexity gate (r11, VERDICT r10 missing
         # #1): mergeable bigram/context count tables behind the
         # funnel, scored prefix-consistently like the unigram ppl

@@ -22,13 +22,20 @@ landmarks to registry landmarks on ``h`` and keeps pairs with
 offset-consistency vote that kills coincidental collisions, identical
 to the batch ``audio_near_dups``.
 
-Both gates follow the registry protocol the text/embedding gates
-pinned down:
+Both gates run the registry skeleton all four dedup gates share —
+each keeps only its key rows, its registry read and its verify:
 
-- only KEPT (non-duplicate) media register, so state grows with the
+- candidates ``(doc_a, doc_b, b_reg)`` from ONE join of the batch
+  rows against the batch rows plus the registry rows; a batch doc
+  meeting its own registered rows (a replay, an id sent again) is a
+  membership row — one shared key, no verify — so no step scans the
+  registry to find its members;
+- the shared verdict tail (operators/dedup.gate_verdicts): winner
+  per connected component is its REGISTRY member when one exists
+  (first-arrival-wins across batches), else the min batch id;
+- the shared registry write (operators/dedup.register_kept): only
+  KEPT (non-duplicate) media register, so state grows with the
   deduplicated corpus, not the stream;
-- winner per connected component is its REGISTRY member when one
-  exists (first-arrival-wins across batches), else the min batch id;
 - the registry probe is partition-scoped: every row of one probe
   key (chunk value / landmark hash) lives in one of ``_NB`` hash
   buckets, so each batch reads only its touched buckets —
@@ -48,8 +55,10 @@ pinned down:
   first commit and enforced on every batch — the ADVICE-r4 lesson
   from the text gate: an incompatible registry must raise, not
   silently pass known near-dups;
-- maintenance compacts the per-batch bucket files back toward one
-  file per bucket and vacuums old versions — verdict-preserving.
+- maintenance (operators/dedup.maintain_gate_state) compacts the
+  per-batch bucket files back toward one file per bucket and vacuums
+  old versions — verdict-preserving; forget is
+  jobs/forget.forget_docs.
 
 Operating guidance on the hot caps (SCALING.md round 7): because the
 caps now bound BOTH sides of the candidate join, size them for the
@@ -69,8 +78,10 @@ from pyspark.sql import functions as F
 from nfl_data_pipeline_spark.jobs.txlog import TxTable
 from nfl_data_pipeline_spark.operators.dedup import (
     cap_hot_values,
+    gate_verdicts,
     hamming_chunk_rows,
-    registry_winner_verdicts,
+    probe_candidates,
+    register_kept,
 )
 from nfl_data_pipeline_spark.operators.multimodal import (
     WAV_MIMES,
@@ -236,8 +247,11 @@ def rebucket_media_registry(
 
 
 class ImageDedupState:
+    id_col = "doc_id"
+
     def __init__(self, root: str):
         self.chunks = TxTable(os.path.join(root, "chunks"))
+        self.registries = (("chunks", self.chunks, ""),)
 
 
 def process_image_batch(
@@ -284,20 +298,6 @@ def process_image_batch(
         fp, "doc_id", "phash", max_hamming, max_bucket
     )
 
-    ham = F.bit_count(F.col("a._fp").bitwiseXOR(F.col("b._fp")))
-    chunk_key = (
-        (F.col("a.chunk_id") == F.col("b.chunk_id"))
-        & (F.col("a.chunk_val") == F.col("b.chunk_val"))
-    )
-    intra = (
-        chunks.alias("a")
-        .join(chunks.alias("b"), chunk_key & (F.col("a._id") < F.col("b._id")))
-        .filter(ham <= max_hamming)
-        .select(
-            F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b")
-        )
-    )
-    edges = intra
     # partition-scoped probe: a registry row can only match a batch
     # chunk row on equal (chunk_id, chunk_val) — same bucket — so
     # reading only the batch's touched buckets is verdict-identical
@@ -312,12 +312,6 @@ def process_image_batch(
         chunks, ("chunk_id", "chunk_val"), nb,
     )
     if stored is not None:
-        reg = stored.select(
-            F.col("doc_id").alias("_id"),
-            F.col("fp").alias("_fp"),
-            "chunk_id",
-            "chunk_val",
-        )
         # registry-side hot-value cap — the batch-side rule applied
         # to the stored rows too (all rows of a chunk value share a
         # bucket, so the count over the pruned slice is exact): a
@@ -325,44 +319,37 @@ def process_image_batch(
         # candidates instead of eroding the defense as the registry
         # grows. Verdict-changing like the batch cap, hence it rides
         # the same stamped max_bucket.
-        reg = cap_hot_values(reg, ["chunk_id", "chunk_val"], max_bucket)
-        cross = (
-            chunks.alias("a")
-            .join(reg.alias("b"), chunk_key & (F.col("a._id") != F.col("b._id")))
-            .filter(ham <= max_hamming)
-            .select(
-                F.col("a._id").alias("doc_a"),
-                F.col("b._id").alias("doc_b"),
-            )
-        )
-        edges = edges.unionByName(cross)
-        reg_nodes = (
-            stored.select("doc_id").distinct().withColumn("_reg", F.lit(1))
-        )
-    else:
-        reg_nodes = None
-
-    base_ids = fp.select("doc_id").distinct()
-    verdicts = registry_winner_verdicts(spark, base_ids, edges, reg_nodes)
-
-    if not replay:  # single-writer per gate; resolved at entry
-        kept = verdicts.filter(F.col("keep") == 1).select(
-            F.col("doc_id").alias("_id")
-        )
-        new_rows = (
-            chunks.join(kept, "_id")
-            .select(
-                F.col("_id").alias("doc_id"),
-                F.col("_fp").alias("fp"),
+        stored = cap_hot_values(
+            stored.select(
+                F.col("doc_id").alias("_id"),
+                F.col("fp").alias("_fp"),
                 "chunk_id",
                 "chunk_val",
-            )
-            .withColumn("bucket", _bucket_col(nb, "chunk_id", "chunk_val"))
+            ),
+            ["chunk_id", "chunk_val"],
+            max_bucket,
         )
-        adds = state.chunks.stage_files(new_rows, "bucket")
-        state.chunks.commit(
-            adds, batch_id=batch_id, meta={"gate_config": cfg}
-        )
+    ham = F.bit_count(F.col("a._fp").bitwiseXOR(F.col("b._fp")))
+    cands = probe_candidates(
+        chunks, stored, ["chunk_id", "chunk_val"], "_id",
+        keep=ham <= max_hamming,
+    )
+    verdicts, losers = gate_verdicts(
+        spark, fp.select("doc_id").distinct(), cands
+    )
+    new_rows = chunks.select(
+        F.col("_id").alias("doc_id"),
+        F.col("_fp").alias("fp"),
+        "chunk_id",
+        "chunk_val",
+    )
+    bucket = _bucket_col(nb, "chunk_id", "chunk_val")
+    register_kept(
+        [(state.chunks, new_rows, bucket, None)],
+        losers.select("doc_id"),
+        batch_id,
+        cfg,
+    )
     return verdicts
 
 
@@ -370,33 +357,32 @@ def process_image_batch(
 
 
 class AudioDedupState:
+    id_col = "doc_id"
+
     def __init__(self, root: str):
         self.landmarks = TxTable(os.path.join(root, "landmarks"))
+        self.registries = (("landmarks", self.landmarks, ""),)
 
 
-def _offset_vote(
-    a: DataFrame, b: DataFrame, min_matches: int, symmetric: bool
-) -> DataFrame:
-    """Pairs sharing ≥ ``min_matches`` DISTINCT landmark hashes at
-    one consistent time offset (the same distinct-hash vote as the
-    batch ``audio_near_dups`` — raw co-occurrence counting is
-    degenerate on stationary content, see its docstring).
-    ``symmetric=True`` is the intra-batch self-join (``id_a <
-    id_b``); otherwise batch-vs-registry (``id_a != id_b``)."""
-    cond = (
-        F.col("id_a") < F.col("id_b")
-        if symmetric
-        else F.col("id_a") != F.col("id_b")
-    )
+def _offset_vote(a: DataFrame, b: DataFrame, min_matches: int) -> DataFrame:
+    """Candidate rows ``(doc_a, doc_b, b_reg)`` of the audio gate: the
+    batch landmarks ``a`` against ``b`` — the batch landmarks (``b_reg
+    = 0``, kept ``id_a < id_b``) and the registry landmarks (``b_reg =
+    1``) — joined on ``h``. A pair is an edge when it shares ≥
+    ``min_matches`` DISTINCT landmark hashes at one consistent time
+    offset (the same distinct-hash vote as the batch
+    ``audio_near_dups`` — raw co-occurrence counting is degenerate on
+    stationary content, see its docstring). A batch clip meeting its
+    own registered landmarks is a membership row: one shared ``h`` is
+    enough."""
+    key = ["id_a", "id_b", "b_reg"]
     votes = (
         a.join(b, "h")
-        .filter(cond)
-        .groupBy(
-            "id_a", "id_b", (F.col("ta") - F.col("tb")).alias("offset")
-        )
+        .filter((F.col("b_reg") == 1) | (F.col("id_a") < F.col("id_b")))
+        .groupBy(*key, (F.col("ta") - F.col("tb")).alias("offset"))
         .agg(F.countDistinct("h").alias("n_matches"))
     )
-    best = Window.partitionBy("id_a", "id_b").orderBy(
+    best = Window.partitionBy(*key).orderBy(
         # ties across offsets happen on stationary spectra — prefer
         # the physically sensible smallest |offset| alignment
         F.desc("n_matches"), F.asc(F.abs("offset")), F.asc("offset")
@@ -404,10 +390,14 @@ def _offset_vote(
     return (
         votes.withColumn("_rk", F.row_number().over(best))
         .filter(
-            (F.col("_rk") == 1) & (F.col("n_matches") >= min_matches)
+            (F.col("_rk") == 1)
+            & (
+                (F.col("n_matches") >= min_matches)
+                | (F.col("id_a") == F.col("id_b"))
+            )
         )
         .select(
-            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
+            F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b"), "b_reg"
         )
     )
 
@@ -506,21 +496,21 @@ def process_audio_batch(
         # BEFORE any batch work — a mismatched registry must raise
         # before the Arrow decode, not after (check_gate_config's
         # documented contract; review fix)
-        cfg = _cfg(min_matches)
-        nb = _resolve_buckets(state.landmarks, cfg, "audio")
-        fp = capped_fingerprints(audio_fingerprints(media), max_df_hash)
-    else:
+        _resolve_buckets(state.landmarks, _cfg(min_matches), "audio")
+    fp = capped_fingerprints(audio_fingerprints(media), max_df_hash)
+    if min_matches is None:
         # fresh registry: the density derivation needs the batch's
         # fingerprints first; the guard is vacuous (nothing stamped)
-        fp = capped_fingerprints(audio_fingerprints(media), max_df_hash)
         min_matches = auto_min_matches(fp)
-        cfg = _cfg(min_matches)
-        nb = _resolve_buckets(state.landmarks, cfg, "audio")
+    cfg = _cfg(min_matches)
+    nb = _resolve_buckets(state.landmarks, cfg, "audio")
     replay = state.landmarks.is_applied(batch_id)
 
     a = fp.select(F.col("doc_id").alias("id_a"), "h", F.col("t").alias("ta"))
-    b = fp.select(F.col("doc_id").alias("id_b"), "h", F.col("t").alias("tb"))
-    edges = _offset_vote(a, b, min_matches, symmetric=True)
+    b = fp.select(
+        F.col("doc_id").alias("id_b"), "h", F.col("t").alias("tb"),
+        F.lit(0).alias("b_reg"),
+    )
     # partition-scoped probe (see the image gate): landmark matches
     # are equi-joins on h, and every registry row of one h lives in
     # one bucket, so reading only the batch's touched buckets is
@@ -538,17 +528,12 @@ def process_audio_batch(
         reg_rows = cap_hot_values(
             stored, ["h"], max_df_hash, distinct_col="doc_id"
         )
-        reg_b = reg_rows.select(
-            F.col("doc_id").alias("id_b"), "h", F.col("t").alias("tb")
+        b = b.unionByName(
+            reg_rows.select(
+                F.col("doc_id").alias("id_b"), "h", F.col("t").alias("tb"),
+                F.lit(1).alias("b_reg"),
+            )
         )
-        edges = edges.unionByName(
-            _offset_vote(a, reg_b, min_matches, symmetric=False)
-        )
-        reg_nodes = (
-            stored.select("doc_id").distinct().withColumn("_reg", F.lit(1))
-        )
-    else:
-        reg_nodes = None
 
     # verdict base: every decodable WAV row, including clips whose
     # capped/empty fingerprint produced no landmarks (trivially kept)
@@ -557,55 +542,14 @@ def process_audio_batch(
         .select("doc_id")
         .distinct()
     )
-    verdicts = registry_winner_verdicts(spark, base_ids, edges, reg_nodes)
-
-    if not replay:  # single-writer per gate; resolved at entry
-        kept = verdicts.filter(F.col("keep") == 1).select("doc_id")
-        new_rows = fp.join(kept, "doc_id").withColumn(
-            "bucket", _bucket_col(nb, "h")
-        )
-        adds = state.landmarks.stage_files(new_rows, "bucket")
-        state.landmarks.commit(
-            adds, batch_id=batch_id, meta={"gate_config": cfg}
-        )
+    verdicts, losers = gate_verdicts(
+        spark, base_ids, _offset_vote(a, b, min_matches)
+    )
+    new_rows = fp.select("doc_id", "h", "t")
+    register_kept(
+        [(state.landmarks, new_rows, _bucket_col(nb, "h"), None)],
+        losers.select("doc_id"),
+        batch_id,
+        cfg,
+    )
     return verdicts
-
-
-# ---- maintenance ---------------------------------------------------------
-
-
-def maintain_image_state(
-    spark: SparkSession,
-    state: ImageDedupState,
-    min_files: int = 8,
-    retain_versions: int = 2,
-    grace_s: float = 300.0,
-) -> dict:
-    """Compact the chunk registry back toward one file per bucket and
-    vacuum expired versions — metadata + layout only, verdicts and
-    replay markers unchanged (tests/test_streaming_mediadedup)."""
-    compacted = state.chunks.compact(
-        spark, min_files=min_files, partition_col="bucket"
-    )
-    deleted = state.chunks.vacuum(
-        retain_versions=retain_versions, grace_s=grace_s
-    )
-    return {"chunks": {"compacted": compacted, "deleted_files": deleted}}
-
-
-def maintain_audio_state(
-    spark: SparkSession,
-    state: AudioDedupState,
-    min_files: int = 8,
-    retain_versions: int = 2,
-    grace_s: float = 300.0,
-) -> dict:
-    compacted = state.landmarks.compact(
-        spark, min_files=min_files, partition_col="bucket"
-    )
-    deleted = state.landmarks.vacuum(
-        retain_versions=retain_versions, grace_s=grace_s
-    )
-    return {
-        "landmarks": {"compacted": compacted, "deleted_files": deleted}
-    }

@@ -48,29 +48,30 @@ Per batch:
    on the driver; past it they are verified on the executors and
    only the edges come back. Edges with true Jaccard ≥ ``threshold``
    survive;
-4. winners on the driver: union-find over the verified edges
-   (operators/dedup.union_find), registry membership from the
-   candidates' ``b_reg`` side — a registered doc joins a component
-   only through a batch × registry band match, and a registered
-   batch doc (a replayed winner, an id sent again) matches its own
-   registry rows. A component's winner is its registry member if one
-   exists (first-arrival-wins across batches), else the min batch
-   doc_id (operators/dedup.driver_verdicts). The verdict frame reads
-   only batch rows and driver data, so it needs no pin;
-5. winners' sids rows, then band rows, append to the registry — each
+4. winners (operators/dedup.gate_verdicts, the verdict tail all four
+   registry gates share): registry membership from the candidates'
+   ``b_reg`` side — a registered doc joins a component only through a
+   batch × registry band match, and a registered batch doc (a
+   replayed winner, an id sent again) meets its own registry rows in
+   a membership row. A component's winner is its registry member if
+   one exists (first-arrival-wins across batches), else the min batch
+   doc_id. On the driver path the verdict frame reads only batch rows
+   and driver data, so it needs no pin;
+5. the winners' sids rows, then band rows, append to the registry
+   (operators/dedup.register_kept, the shared registry write) — each
    an atomic manifest swap carrying the batch id.
 
 Cost honesty: a batch reads the registry twice and touches it
-nowhere else. The signature scan is still O(registry) per batch —
-band values are uniform hashes, so a real batch touches every one
-of the _NB buckets and manifest pruning cannot bite — but it
-streams (it is never broadcast) and only the band-matched pairs are
-shuffled. The sids read is O(candidate buckets) and narrows to the
-candidate ids before anything leaves the executors; the driver
-holds at most what a broadcast of it would. Past
-``DRIVER_MAX_PAIRS`` candidates the distributed fallback joins them
-against the whole sids registry and takes membership from the same
-candidate frame (operators/dedup.registry_winner_verdicts).
+nowhere else; no step reads it to find membership. The signature
+scan is still O(registry) per batch — band values are uniform
+hashes, so a real batch touches every one of the _NB buckets and
+manifest pruning cannot bite — but it streams (it is never
+broadcast) and only the band-matched pairs are shuffled. The sids
+read is O(candidate buckets) and narrows to the candidate ids before
+anything leaves the executors; the driver holds at most what a
+broadcast of it would. Past ``DRIVER_MAX_PAIRS`` candidates the
+distributed fallback joins them against the whole sids registry and
+the shared tail takes membership from the same candidate frame.
 
 Replay (same batch id): winners are already registered and meet
 their own registry rows (members, kept), losers re-match the same
@@ -86,13 +87,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from nfl_data_pipeline_spark.jobs.txlog import TxTable
+from nfl_data_pipeline_spark.jobs.txlog import TxTable, check_gate_config
 from nfl_data_pipeline_spark.operators.dedup import (
     DRIVER_MAX_PAIRS,
     _materialized_sids,
-    driver_verdicts,
-    registry_winner_verdicts,
-    union_find,
+    gate_verdicts,
+    probe_candidates,
+    register_kept,
     with_minhash_signature,
 )
 from nfl_data_pipeline_spark.operators.hashing import gate_minhash_perms
@@ -105,9 +106,17 @@ _SIG = [f"mh{i}" for i in range(len(GATE_PERMS))]
 
 
 class NearDupState:
+    id_col = "doc_id"
+
     def __init__(self, root: str):
         self.sigs = TxTable(os.path.join(root, "signatures"))
         self.sids = TxTable(os.path.join(root, "sids"))
+        # (name, table, forget batch-id suffix) — operators/dedup.
+        # maintain_gate_state and jobs/forget.forget_docs
+        self.registries = (
+            ("signatures", self.sigs, "-sigs"),
+            ("sids", self.sids, "-sids"),
+        )
 
 
 def _gate_config(exact_verify: bool) -> dict:
@@ -122,18 +131,6 @@ def _gate_config(exact_verify: bool) -> dict:
         "bands": GATE_BANDS,
         "exact_verify": bool(exact_verify),
     }
-
-
-def _check_gate_config(state: NearDupState, exact_verify: bool) -> dict:
-    """Raise before any work if the persisted registry was written
-    under a different gate configuration — the shared guard
-    (jobs/txlog.check_gate_config). Returns the current config for
-    stamping into the commit's meta."""
-    from nfl_data_pipeline_spark.jobs.txlog import check_gate_config
-
-    return check_gate_config(
-        state.sigs, _gate_config(exact_verify), "signature"
-    )
 
 
 def _band_rows(sig: DataFrame) -> DataFrame:
@@ -162,44 +159,10 @@ def _est_jaccard(a_prefix: str, b_prefix: str):
     return agree / float(len(_SIG))
 
 
-def _candidates(
-    bands: DataFrame, stored: DataFrame | None, keep=None
-) -> DataFrame:
-    """Pass 1: the batch band self-join and the batch × registry band
-    join as ONE join — the batch bands against the union of the batch
-    bands and the registry rows — deduped by one aggregate. A batch
-    pair keeps ``doc_a < doc_b``; a registry pair keeps every match,
-    and one with ``doc_a == doc_b`` (a batch doc meeting its own
-    registered rows: a replay, or an id sent again) is a membership
-    row, not an edge.
-    ``b_reg`` is 1 when ``doc_b`` came from the registry and
-    ``bucket`` is ``doc_b``'s sids-registry bucket. Only the batch
-    bands are ever a broadcast candidate: the registry streams.
-    ``keep`` (the estimator fallback's similarity test) filters pairs
-    in the join."""
-    other = bands.withColumn("b_reg", F.lit(0))
-    if stored is not None:
-        other = other.unionByName(
-            stored.select(*bands.columns).withColumn("b_reg", F.lit(1))
-        )
-    a, b = F.col("a.doc_id"), F.col("b.doc_id")
-    cond = (F.col("b.b_reg") == 1) | (a < b)
-    return (
-        bands.alias("a")
-        .join(other.alias("b"), ["band_id", "h_lo", "h_hi"])
-        .filter(cond if keep is None else cond & keep)
-        .select(a.alias("doc_a"), b.alias("doc_b"), "b.b_reg")
-        .distinct()
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("doc_b"), F.lit(_NB)).cast("long")
-        )
-    )
-
-
 def _exact_edges(
     pairs: DataFrame, side: DataFrame, threshold: float
 ) -> DataFrame:
-    """Candidate pairs whose exact shingle Jaccard is ≥ ``threshold``
+    """Candidate rows whose exact shingle Jaccard is ≥ ``threshold``
     (the distributed path); ``side`` holds the ``(doc_id, sids)`` rows
     of both ends."""
     a, b = side.alias("sa"), side.alias("sb")
@@ -209,7 +172,7 @@ def _exact_edges(
         pairs.join(a, F.col("doc_a") == F.col("sa.doc_id"))
         .join(b, F.col("doc_b") == F.col("sb.doc_id"))
         .filter(inter / union >= threshold)
-        .select("doc_a", "doc_b")
+        .select("doc_a", "doc_b", "b_reg")
     )
 
 
@@ -221,7 +184,8 @@ def _verified_pairs(
     threshold: float,
 ) -> list:
     """Pass 2: exact verify of the candidate ``pairs`` (candidate rows
-    with ``doc_a != doc_b``) on narrow rows. The sids registry is read
+    with ``doc_a != doc_b``) on narrow rows; returns the passing
+    ``(doc_a, doc_b, b_reg)`` rows. The sids registry is read
     only for the candidate buckets, and one broadcast id list keeps
     only the candidate docs of the batch and of the registry.
 
@@ -263,7 +227,7 @@ def _verified_pairs(
         T.StructType([T.StructField("doc_id", id_t)]),
     )
     side = side.join(F.broadcast(want), "doc_id", "left_semi")
-    edges = {(r.doc_a, r.doc_b) for r in pairs}
+    edges = {(r.doc_a, r.doc_b, r.b_reg) for r in pairs}
     est = side._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     if int(est) > int(
         spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -272,7 +236,11 @@ def _verified_pairs(
             spark,
             sorted(edges),
             T.StructType(
-                [T.StructField("doc_a", id_t), T.StructField("doc_b", id_t)]
+                [
+                    T.StructField("doc_a", id_t),
+                    T.StructField("doc_b", id_t),
+                    T.StructField("b_reg", T.IntegerType()),
+                ]
             ),
         )
         # a registry row never replaces a batch doc's sids
@@ -285,13 +253,13 @@ def _verified_pairs(
     for i, v, _ in sorted(side.collect(), key=lambda r: r[2]):
         sets.setdefault(i, frozenset(v))
     out = []
-    for a, b in edges:
+    for a, b, reg in edges:
         sa, sb = sets.get(a), sets.get(b)
         if sa is None or sb is None:
             continue
         union = len(sa | sb)
         if union and len(sa & sb) / union >= threshold:
-            out.append((a, b))
+            out.append((a, b, reg))
     return out
 
 
@@ -309,7 +277,11 @@ def process_neardup_batch(
     winning doc (itself when kept) — and registers the winners'
     signatures + sids unless this ``batch_id`` already applied
     (replay)."""
-    cfg = _check_gate_config(state, exact_verify)
+    # raise before any work on a registry written under another
+    # configuration; the config is stamped into the commit's meta
+    cfg = check_gate_config(
+        state.sigs, _gate_config(exact_verify), "signature"
+    )
     batch_sids = _materialized_sids(docs, text_col, 3)
     sig = with_minhash_signature(batch_sids, GATE_PERMS).select(
         "doc_id", *_SIG
@@ -329,128 +301,63 @@ def process_neardup_batch(
     # per batch (r13)
     bands = bands.localCheckpoint(eager=False)
 
-    cands = _candidates(
+    # pass 1: the batch band self-join and the batch × registry band
+    # join as ONE join; ``keep`` is the estimator fallback's test, and
+    # ``bucket`` is ``doc_b``'s sids-registry bucket
+    cands = probe_candidates(
         bands,
         state.sigs.read(spark),
-        None if exact_verify else _est_jaccard("a", "b") >= threshold,
+        ["band_id", "h_lo", "h_hi"],
+        keep=None if exact_verify else _est_jaccard("a", "b") >= threshold,
+    ).withColumn(
+        "bucket", F.pmod(F.xxhash64("doc_b"), F.lit(_NB)).cast("long")
     )
-    base_ids = batch_sids.select("doc_id")
-    rows = cands.limit(DRIVER_MAX_PAIRS + 1).collect()
-    if len(rows) <= DRIVER_MAX_PAIRS:
-        # registry membership straight from the candidates: a
-        # registered doc joins a component only through a batch ×
-        # registry band match, and a registered batch doc (replay, an
-        # id sent again) matches its own registry rows
-        members = {r.doc_b for r in rows if r.b_reg}
-        pairs = [r for r in rows if r.doc_a != r.doc_b]
-        if exact_verify:
-            pairs = _verified_pairs(
-                spark, pairs, batch_sids, state.sids, threshold
-            )
-        else:
-            pairs = [(r.doc_a, r.doc_b) for r in pairs]
-        verdicts, losers = driver_verdicts(
-            spark,
-            base_ids,
-            union_find(pairs),
-            members,
-            base_ids.schema["doc_id"].dataType,
-        )
-        dropped = losers.select("doc_id")
-    else:
-        # too many candidates for the driver: the distributed path,
-        # membership from the same candidate frame
-        edges = cands.filter(F.col("doc_a") != F.col("doc_b")).select(
-            "doc_a", "doc_b"
-        )
+    got = cands.limit(DRIVER_MAX_PAIRS + 1).collect()
+    rows = None
+    if len(got) > DRIVER_MAX_PAIRS:
+        # too many candidates for the driver: the distributed tail
         if exact_verify:
             side = batch_sids.select("doc_id", "sids")
             reg_sids = state.sids.read(spark)
             if reg_sids is not None:
                 side = side.unionByName(reg_sids.select("doc_id", "sids"))
-            edges = _exact_edges(edges, side, threshold)
-        reg_nodes = (
-            cands.filter(F.col("b_reg") == 1)
-            .select(F.col("doc_b").alias("doc_id"))
-            .distinct()
-            .withColumn("_reg", F.lit(1))
+            member = F.col("doc_a") == F.col("doc_b")
+            cands = cands.filter(member).select(
+                "doc_a", "doc_b", "b_reg"
+            ).unionByName(
+                _exact_edges(cands.filter(~member), side, threshold)
+            )
+    else:
+        rows = [(r.doc_a, r.doc_b, r.b_reg) for r in got]
+        if exact_verify:
+            rows = [r for r in rows if r[0] == r[1]] + _verified_pairs(
+                spark,
+                [r for r in got if r.doc_a != r.doc_b],
+                batch_sids,
+                state.sids,
+                threshold,
+            )
+    verdicts, losers = gate_verdicts(
+        spark, batch_sids.select("doc_id"), cands, rows=rows
+    )
+    # sids before signatures: the signatures commit is the
+    # batch-completion signal (the is_applied gate in replay).
+    # stage_files_auto: a metadata-sized batch stages driver-side (a
+    # distributed append pays the ~1 s/table Spark-job floor); frames
+    # past its bound take stage_files unchanged
+    writes = [
+        (
+            state.sigs,
+            bands,
+            F.pmod(F.xxhash64("h_lo", "h_hi"), F.lit(_NB)).cast("long"),
+            "neardup.py:sigs-append",
         )
-        verdicts = registry_winner_verdicts(
-            spark, base_ids, edges, reg_nodes
+    ]
+    if exact_verify:
+        sids_rows = batch_sids.select("doc_id", "sids")
+        bucket = F.pmod(F.xxhash64("doc_id"), F.lit(_NB)).cast("long")
+        writes.insert(
+            0, (state.sids, sids_rows, bucket, "neardup.py:sids-append")
         )
-        dropped = verdicts.filter(F.col("keep") == 0).select("doc_id")
-
-    # Stage both registries CONCURRENTLY (staging is the expensive
-    # Spark write; files are invisible until commit), then commit
-    # sids first, signatures last — the signatures marker is the
-    # batch-completion signal (is_applied gate below and in replay),
-    # so the publish order stays exactly as before.
-    from concurrent.futures import ThreadPoolExecutor
-
-    stage_sids = exact_verify and not state.sids.is_applied(batch_id)
-    stage_sigs = not state.sigs.is_applied(batch_id)
-    sids_adds = sigs_adds = None
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        if stage_sids:
-            new_sids = batch_sids.select("doc_id", "sids").join(
-                dropped, "doc_id", "left_anti"
-            ).withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("doc_id"), F.lit(_NB)).cast("long"),
-            )
-            # stage_files_auto: a metadata-sized incremental batch
-            # stages driver-side (r11 left these two appends always
-            # distributed — a small batch paid the ~1 s/table
-            # Spark-job floor twice); bench-scale frames exceed the
-            # bound and take stage_files unchanged.
-            sids_adds = pool.submit(
-                state.sids.stage_files_auto, new_sids, "bucket",
-                site="neardup.py:sids-append",
-            )
-        if stage_sigs:
-            new_rows = bands.join(
-                dropped, "doc_id", "left_anti"
-            ).withColumn(
-                "bucket",
-                F.pmod(F.xxhash64("h_lo", "h_hi"), F.lit(_NB)).cast("long"),
-            )
-            sigs_adds = pool.submit(
-                state.sigs.stage_files_auto, new_rows, "bucket",
-                site="neardup.py:sigs-append",
-            )
-    if sids_adds is not None:
-        state.sids.commit(sids_adds.result(), batch_id=batch_id)
-    if sigs_adds is not None:
-        state.sigs.commit(
-            sigs_adds.result(),
-            batch_id=batch_id,
-            meta={"gate_config": cfg},
-        )
+    register_kept(writes, losers.select("doc_id"), batch_id, cfg)
     return verdicts
-
-
-def maintain_neardup_state(
-    spark: SparkSession,
-    state: NearDupState,
-    min_files: int = 8,
-    retain_versions: int = 2,
-    grace_s: float = 300.0,
-) -> dict:
-    """Periodic maintenance for a long-running gate: every batch
-    appends one file per touched bucket to the signature and sids
-    registries, so file counts grow O(buckets × batches) — the
-    streaming small-file problem. Compact back toward one file per
-    bucket once ``min_files`` accumulate, then vacuum versions beyond
-    ``retain_versions``. Pure metadata + layout transaction: identical
-    rows, batch markers carried forward — probe results and replay
-    verdicts are unchanged (asserted in tests/test_gate_maintenance)."""
-    out = {}
-    for name, table in (("signatures", state.sigs), ("sids", state.sids)):
-        compacted = table.compact(
-            spark, min_files=min_files, partition_col="bucket"
-        )
-        deleted = table.vacuum(
-            retain_versions=retain_versions, grace_s=grace_s
-        )
-        out[name] = {"compacted": compacted, "deleted_files": deleted}
-    return out

@@ -108,14 +108,14 @@ def test_packed_hash_field_overflow_rejected():
 
 
 def test_rich_clip_generator_landmark_diversity():
-    """operators/mediasynth.rich_clip (VERDICT r7 #5): the r5
+    """tests/mediasynth.rich_clip (VERDICT r7 #5): the r5
     stationary tones emit ~10 distinct landmark hashes per clip —
     right at the min_matches=8 verify edge; the note-sequence
     generator must emit an order of magnitude more, with noisy-copy
     offset votes far above any cross-clip coincidence."""
     import numpy as np
 
-    from nfl_data_pipeline_spark.operators.mediasynth import (
+    from tests.mediasynth import (
         rich_clip,
         wav_bytes,
     )
@@ -159,7 +159,7 @@ def test_audio_near_dups_density_default(spark):
     on the degenerate sparse fixture: on rich content the derived
     threshold is strictly higher, and the gate still finds exactly
     the planted copies with no chain-merging."""
-    from nfl_data_pipeline_spark.operators.mediasynth import rich_clip, wav_bytes
+    from tests.mediasynth import rich_clip, wav_bytes
     from nfl_data_pipeline_spark.operators.multimodal import (
         attach_media,
         audio_fingerprints,

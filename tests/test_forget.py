@@ -7,11 +7,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from nfl_data_pipeline_spark.catalog import load
-from nfl_data_pipeline_spark.jobs.forget import (
-    delete_by_key_tx,
-    forget_docs_image,
-    forget_docs_neardup,
-)
+from nfl_data_pipeline_spark.jobs.forget import delete_by_key_tx, forget_docs
 from nfl_data_pipeline_spark.jobs.txlog import TxTable
 from tests.conftest import SF_SMOKE
 
@@ -81,7 +77,7 @@ def test_forget_neardup_winner_reopens_registration(spark, tmp_path):
 
     # forget the winner AND the clone's ghost entry is impossible —
     # the clone never registered; purge the winner only
-    res = forget_docs_neardup(spark, state, [winner], batch_id="f0")
+    res = forget_docs(spark, state, [winner], batch_id="f0")
     assert res["signatures"]["deleted_rows"] > 0
     assert res["sids"]["deleted_rows"] == 1
     assert (
@@ -132,7 +128,7 @@ def test_forget_image_winner_reopens_registration(spark, tmp_path):
     vc = process_image_batch(spark, clone, state, "b1").collect()[0]
     assert vc["keep"] == 0 and vc["dup_of"] == winner
 
-    res = forget_docs_image(spark, state, [winner], batch_id="f0")
+    res = forget_docs(spark, state, [winner], batch_id="f0")
     assert res["chunks"]["deleted_rows"] == 11  # max_hamming+1 rows
 
     re_arrival = _image_media(spark, [(winner + 2_000_000, payload)])
@@ -143,7 +139,6 @@ def test_forget_image_winner_reopens_registration(spark, tmp_path):
 def test_forget_funnel_fingerprint(spark, tmp_path):
     """Purging a doc from the funnel's exact-fingerprint registry
     lets the same fingerprint register fresh on re-arrival."""
-    from nfl_data_pipeline_spark.jobs.forget import forget_docs_funnel
     from nfl_data_pipeline_spark.streaming.funnel import (
         FunnelState,
         process_funnel_batch,
@@ -168,7 +163,7 @@ def test_forget_funnel_fingerprint(spark, tmp_path):
     row = fc.filter(F.col("doc_id") == target + 1_000_000).collect()[0]
     assert row["pass_dedup"] == 0
 
-    res = forget_docs_funnel(spark, state, [target], batch_id="f0")
+    res = forget_docs(spark, state, [target], batch_id="f0")
     assert res["fingerprints"]["deleted_rows"] == 1
 
     re_arrival = docs.filter(F.col("doc_id") == target).withColumn(
@@ -215,7 +210,6 @@ def test_forget_docs_curation_composed(spark, tmp_path):
 
 
 def test_forget_embdedup_winner_reopens_registration(spark, tmp_path):
-    from nfl_data_pipeline_spark.jobs.forget import forget_docs_embdedup
     from nfl_data_pipeline_spark.streaming.embdedup import (
         EmbDedupState,
         process_embdedup_batch,
@@ -244,7 +238,7 @@ def test_forget_embdedup_winner_reopens_registration(spark, tmp_path):
     ).collect()[0]
     assert vc["keep"] == 0 and vc["dup_of"] == winner
 
-    res = forget_docs_embdedup(spark, state, [winner], batch_id="f0")
+    res = forget_docs(spark, state, [winner], batch_id="f0")
     assert res["bands"]["deleted_rows"] > 0
 
     re_arrival = vecs.filter(F.col("vec_id") == winner).select(
@@ -257,7 +251,6 @@ def test_forget_embdedup_winner_reopens_registration(spark, tmp_path):
 
 
 def test_forget_audio_winner_reopens_registration(spark, tmp_path):
-    from nfl_data_pipeline_spark.jobs.forget import forget_docs_audio
     from nfl_data_pipeline_spark.streaming.mediadedup import (
         AudioDedupState,
         process_audio_batch,
@@ -279,7 +272,7 @@ def test_forget_audio_winner_reopens_registration(spark, tmp_path):
     vc = process_audio_batch(spark, clone, state, "b1").collect()[0]
     assert vc["keep"] == 0 and vc["dup_of"] == winner
 
-    res = forget_docs_audio(spark, state, [winner], batch_id="f0")
+    res = forget_docs(spark, state, [winner], batch_id="f0")
     assert res["landmarks"]["deleted_rows"] > 0
 
     re_arrival = _audio_media(spark, [(winner + 2_000, payload)])

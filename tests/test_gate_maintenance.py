@@ -11,14 +11,13 @@ import pytest
 from pyspark.sql import functions as F
 
 from nfl_data_pipeline_spark.catalog import load
+from nfl_data_pipeline_spark.operators.dedup import maintain_gate_state
 from nfl_data_pipeline_spark.streaming.embdedup import (
     EmbDedupState,
-    maintain_embdedup_state,
     process_embdedup_batch,
 )
 from nfl_data_pipeline_spark.streaming.neardup import (
     NearDupState,
-    maintain_neardup_state,
     process_neardup_batch,
 )
 from tests.conftest import SF_SMOKE
@@ -51,7 +50,7 @@ def test_neardup_maintenance_bounds_files_and_preserves_verdicts(
     )
     assert before >= 2 * n_buckets, "premise: multi-file buckets exist"
 
-    stats = maintain_neardup_state(spark, sa, min_files=2)
+    stats = maintain_gate_state(spark, sa, min_files=2)
     assert stats["signatures"]["compacted"] > 0
     after = len(sa.sigs.live_files())
     assert after <= n_buckets, f"{after} files for {n_buckets} buckets"
@@ -95,7 +94,7 @@ def test_embdedup_maintenance_bounds_files_and_preserves_verdicts(
     n_buckets = len({f["partition"] for f in sa.bands.live_files()})
     assert len(sa.bands.live_files()) >= 2 * n_buckets
 
-    stats = maintain_embdedup_state(spark, sa, min_files=2)
+    stats = maintain_gate_state(spark, sa, min_files=2)
     assert stats["bands"]["compacted"] > 0
     assert len(sa.bands.live_files()) <= n_buckets
 
@@ -133,7 +132,7 @@ def test_curation_maintenance_runs_every_table(spark, tmp_path):
 
 
 def test_maintenance_grace_protects_inflight_staging(spark, tmp_path):
-    """ADVICE r7: every maintain_* helper now vacuums with a non-zero
+    """ADVICE r7: every maintenance helper now vacuums with a non-zero
     grace window by default, so maintenance running concurrently with
     a streaming batch no longer sweeps that batch's staged-but-
     uncommitted files (previously only ForgetQueue.drain passed a
@@ -157,10 +156,10 @@ def test_maintenance_grace_protects_inflight_staging(spark, tmp_path):
         state.sigs.read(spark).limit(5), "bucket"
     )
     assert all(os.path.exists(a["path"]) for a in staged)
-    maintain_neardup_state(spark, state, min_files=1)
+    maintain_gate_state(spark, state, min_files=1)
     assert all(
         os.path.exists(a["path"]) for a in staged
     ), "default-grace maintenance swept an in-flight staging"
     # the zero-grace (single-writer) mode still reaps it
-    maintain_neardup_state(spark, state, min_files=1, grace_s=0.0)
+    maintain_gate_state(spark, state, min_files=1, grace_s=0.0)
     assert not any(os.path.exists(a["path"]) for a in staged)

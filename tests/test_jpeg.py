@@ -19,7 +19,7 @@ from nfl_data_pipeline_spark.operators.jpeg import (
     decode_jpeg_raster,
     encode_jpeg,
 )
-from nfl_data_pipeline_spark.operators.mediasynth import (
+from tests.mediasynth import (
     ppm_bytes,
     rich_image,
     smooth_image,

@@ -100,42 +100,6 @@ def test_parse_json_column(spark):
     assert all(r["k"] is not None for r in rows)
 
 
-def test_tfidf_and_ngrams(spark):
-    from nfl_data_pipeline_spark.operators.text import ngrams, tfidf_features
-
-    docs = load(spark, SF_SMOKE, "documents").limit(100)
-    feats = tfidf_features(docs)
-    rows = feats.select("doc_id", "tfidf").collect()
-    assert len(rows) == 100
-    v = rows[0]["tfidf"]
-    assert v.size == 1 << 12 and v.numNonzeros() > 0
-
-    ng = ngrams(docs, n=2).select("doc_id", "ngrams").collect()[0]["ngrams"]
-    assert all(len(g.split(" ")) == 2 for g in ng)
-
-
-def test_brp_lsh_topk_matches_exact_on_easy_neighbors(spark):
-    from nfl_data_pipeline_spark.operators.similarity import (
-        brp_lsh_topk,
-        cosine_topk,
-    )
-
-    emb = load(spark, SF_SMOKE, "embeddings")
-    q = emb.filter("vec_id < 5")
-    approx = brp_lsh_topk(emb, q, k=5)
-    rows = approx.collect()
-    assert {r["q_id"] for r in rows} == set(range(5))
-    assert all(1 <= r["rank"] <= 5 for r in rows)
-    # recall vs exact euclidean isn't guaranteed; sanity: distances
-    # non-negative and increasing with rank per query
-    by_q = {}
-    for r in sorted(rows, key=lambda r: (r["q_id"], r["rank"])):
-        by_q.setdefault(r["q_id"], []).append(r["dist"])
-    for dists in by_q.values():
-        assert all(d >= 0 for d in dists)
-        assert dists == sorted(dists)
-
-
 def test_pq_topk_recall_and_full_shortlist_exactness(spark):
     from nfl_data_pipeline_spark.operators.similarity import (
         cosine_topk,

@@ -1,7 +1,7 @@
 """Focused tests for the segment-vectorized kernels: the grouped
 pair scorer (operators/similarity._grouped_pair_scores — the banded
 near-dup, embedding-gate and semantic-dedup pair engine), the
-driver-side winner resolution in registry_winner_verdicts, and the
+driver-side winner resolution in dedup.gate_verdicts, and the
 text-hash Arrow kernels (operators/arrowfold).
 
 The semantic contracts the join forms enforced structurally are
@@ -75,16 +75,29 @@ def test_sided_never_pairs_registry_rows(spark):
     assert set(got) == {(10, 20), (10, 100), (10, 200), (20, 100), (20, 200)}
 
 
-def test_sided_replay_same_id_excluded(spark):
+def test_sided_replay_same_id_is_a_membership_row(spark):
+    from nfl_data_pipeline_spark.operators.similarity import (
+        _grouped_pair_scores,
+    )
+
     n = math.sqrt(2.0)
     rows = [
         (1, 10, _vec(1, 1), n, 0),
         (1, 10, _vec(1, 1), n, 1),  # the SAME doc already registered
         (1, 20, _vec(1, 1), n, 0),
     ]
-    got = _scores(spark, rows, side=True)
-    # (10, 10) excluded; (10, 20) probe-probe; (20, 10) probe-registry
-    assert set(got) == {(10, 20), (20, 10)}
+    df = spark.createDataFrame(
+        rows,
+        "g int, c_id long, c_vec array<double>, c_norm double, c_side int",
+    )
+    got = {
+        (r["a_id"], r["b_id"], r["b_side"])
+        for r in _grouped_pair_scores(df, ["g"], 2, side_col="c_side")
+        .collect()
+    }
+    # (10, 10) probe meets its own registry row; (10, 20) probe-probe;
+    # (20, 10) probe-registry
+    assert got == {(10, 10, 1), (10, 20, 0), (20, 10, 1)}
 
 
 def test_zero_norm_pairs_dropped_like_sql_null_division(spark):
@@ -129,29 +142,23 @@ def test_segment_carry_across_arrow_batches(spark):
         )
 
 
-def test_winner_verdicts_driver_path_matches_contract(spark):
-    from nfl_data_pipeline_spark.operators.dedup import (
-        registry_winner_verdicts,
-    )
-    from nfl_data_pipeline_spark.operators.localframe import local_frame
+def _winners(spark, base_ids, cands):
+    from nfl_data_pipeline_spark.operators.dedup import gate_verdicts
 
-    base = spark.createDataFrame(
-        [(1,), (2,), (3,), (4,), (9,)], "doc_id long"
-    )
+    base = spark.createDataFrame([(i,) for i in base_ids], "doc_id long")
+    frame = spark.createDataFrame(cands, "doc_a long, doc_b long, b_reg int")
+    verdicts, _ = gate_verdicts(spark, base, frame)
+    return {r["doc_id"]: (r["dup_of"], r["keep"]) for r in verdicts.collect()}
+
+
+def test_winner_verdicts_driver_path_matches_contract(spark):
     # component {1, 2, 100(reg), 200(reg)} -> winner 100 (min REG, not
     # min node); component {3, 4} -> winner 3 (min node); 9 untouched
-    edges = spark.createDataFrame(
-        [(1, 2), (1, 100), (2, 200), (3, 4)], "doc_a long, doc_b long"
+    got = _winners(
+        spark,
+        [1, 2, 3, 4, 9],
+        [(1, 2, 0), (1, 100, 1), (2, 200, 1), (3, 4, 0)],
     )
-    reg = spark.createDataFrame(
-        [(100, 1), (200, 1)], "doc_id long, _reg int"
-    )
-    got = {
-        r["doc_id"]: (r["dup_of"], r["keep"])
-        for r in registry_winner_verdicts(
-            spark, base, edges, reg
-        ).collect()
-    }
     assert got == {
         1: (100, 0),
         2: (100, 0),
@@ -162,50 +169,24 @@ def test_winner_verdicts_driver_path_matches_contract(spark):
 
 
 def test_winner_verdicts_no_registry(spark):
-    from nfl_data_pipeline_spark.operators.dedup import (
-        registry_winner_verdicts,
-    )
-
-    base = spark.createDataFrame([(5,), (6,), (7,)], "doc_id long")
-    edges = spark.createDataFrame([(6, 7)], "doc_a long, doc_b long")
-    got = {
-        r["doc_id"]: (r["dup_of"], r["keep"])
-        for r in registry_winner_verdicts(
-            spark, base, edges, None
-        ).collect()
-    }
+    got = _winners(spark, [5, 6, 7], [(6, 7, 0)])
     assert got == {5: (5, 1), 6: (6, 1), 7: (6, 0)}
 
 
 def test_winner_verdicts_only_reg_1_nodes_win(spark, monkeypatch):
-    """Registry membership is ``_reg == 1`` on both paths. A ``_reg =
-    0`` node must not win its component, even as its min id, and the
+    """Registry membership is ``b_reg == 1`` on both paths. A ``b_reg
+    = 0`` node must not win its component, even as its min id, and the
     driver path and the forced distributed fallback give equal
     verdicts."""
     from nfl_data_pipeline_spark.operators import dedup
 
-    base = spark.createDataFrame([(1,), (2,), (3,), (4,)], "doc_id long")
-    # component {1, 0, 100}: 0 is _reg = 0, 100 is registered → 100;
+    # component {1, 0, 100}: 0 is b_reg = 0, 100 is registered → 100;
     # component {3, 4, 60}: no registered node → min node 3, not 60
-    edges = spark.createDataFrame(
-        [(0, 1), (1, 100), (3, 4), (3, 60)], "doc_a long, doc_b long"
-    )
-    reg = spark.createDataFrame(
-        [(0, 0), (100, 1), (60, 0)], "doc_id long, _reg int"
-    )
-
-    def verdicts():
-        return {
-            r["doc_id"]: (r["dup_of"], r["keep"])
-            for r in dedup.registry_winner_verdicts(
-                spark, base, edges, reg
-            ).collect()
-        }
-
-    driver = verdicts()
+    cands = [(1, 0, 0), (1, 100, 1), (3, 4, 0), (3, 60, 0)]
+    driver = _winners(spark, [1, 2, 3, 4], cands)
     with monkeypatch.context() as m:
-        m.setattr(dedup, "_union_find_rows", lambda *a, **k: None)
-        fallback = verdicts()
+        m.setattr(dedup, "DRIVER_MAX_PAIRS", 0)
+        fallback = _winners(spark, [1, 2, 3, 4], cands)
     assert driver == {1: (100, 0), 2: (2, 1), 3: (3, 1), 4: (3, 0)}
     assert fallback == driver
 

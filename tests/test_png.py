@@ -12,7 +12,7 @@ import zlib
 import numpy as np
 import pytest
 
-from nfl_data_pipeline_spark.operators.mediasynth import (
+from tests.mediasynth import (
     png_bytes,
     ppm_bytes,
     rich_image,

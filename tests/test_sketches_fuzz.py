@@ -305,43 +305,6 @@ def test_freq_items_contains_true_heavy_hitters(spark):
     assert truth <= approx, f"missed heavy hitters: {truth - approx}"
 
 
-def test_semantic_dedup_ml_backend_shape(spark):
-    """The ml-KMeans backend must produce the same decision-table
-    shape and invariants as the deterministic backend: one row per
-    vector, clusters of reported size, planted-style behavior on the
-    fixture (kept representative per near-dup group)."""
-    from pyspark.sql import functions as F
-
-    from nfl_data_pipeline_spark.catalog import load
-    from nfl_data_pipeline_spark.operators.similarity import (
-        semantic_dedup,
-        semantic_dedup_ml,
-    )
-    from tests.conftest import SF_SMOKE
-
-    e = load(spark, SF_SMOKE, "embeddings")
-    n = e.count()
-    det = semantic_dedup(e, k=4, threshold=0.4)
-    ml = semantic_dedup_ml(e, k=4, threshold=0.4)
-    assert ml.columns == det.columns
-    assert ml.count() == n
-    # cluster sizes are consistent with the reported table
-    sizes = {
-        r["cluster_id"]: r["n"]
-        for r in ml.groupBy("cluster_id").agg(F.count("*").alias("n")).collect()
-    }
-    for r in ml.select("cluster_id", "cluster_size").distinct().collect():
-        assert sizes[r["cluster_id"]] == r["cluster_size"]
-    # dedup is within-cluster: a dropped vector always has a kept
-    # lower-id neighbor in its own cluster
-    dropped = ml.filter(F.col("is_kept") == 0)
-    kept_min = ml.groupBy("cluster_id").agg(F.min("vec_id").alias("lo"))
-    bad = dropped.join(kept_min, "cluster_id").filter(
-        F.col("vec_id") <= F.col("lo")
-    )
-    assert bad.count() == 0
-
-
 # --- histogram-bucket property fuzz --------------------------------------
 
 

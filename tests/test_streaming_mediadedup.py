@@ -11,6 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nfl_data_pipeline_spark.operators.dedup import connected_components
+from nfl_data_pipeline_spark.operators.dedup import maintain_gate_state
 from nfl_data_pipeline_spark.operators.multimodal import (
     attach_media,
     audio_near_dups,
@@ -19,8 +20,6 @@ from nfl_data_pipeline_spark.operators.multimodal import (
 from nfl_data_pipeline_spark.streaming.mediadedup import (
     AudioDedupState,
     ImageDedupState,
-    maintain_audio_state,
-    maintain_image_state,
     process_audio_batch,
     process_image_batch,
 )
@@ -29,7 +28,7 @@ from tests.test_audio_fp import _clip, _wav
 # generator; the gate tests use the same rich fixtures (the r5
 # blocky generator's near-collision degeneracy is exactly what these
 # recall dials were re-tuned against in r8)
-from nfl_data_pipeline_spark.operators.mediasynth import (
+from tests.mediasynth import (
     ppm_bytes as _ppm,
     rich_image as _image,
 )
@@ -186,7 +185,7 @@ def test_image_maintenance_bounds_files_preserves_verdicts(spark, tmp_path):
     # (with _NB=64 not every bucket doubles up, but compaction must
     # still have work)
     assert len(sa.chunks.live_files()) > n_buckets
-    stats = maintain_image_state(spark, sa, min_files=2)
+    stats = maintain_gate_state(spark, sa, min_files=2)
     assert stats["chunks"]["compacted"] > 0
     assert len(sa.chunks.live_files()) <= n_buckets
     # probe after compaction == probe against the uncompacted control
@@ -279,7 +278,7 @@ def test_audio_maintenance_bounds_files_preserves_verdicts(spark, tmp_path):
     # premise: multi-file buckets exist (small batches touch a subset
     # of buckets each, so the growth is > buckets, not 2×)
     assert len(sa.landmarks.live_files()) > n_buckets
-    stats = maintain_audio_state(spark, sa, min_files=2)
+    stats = maintain_gate_state(spark, sa, min_files=2)
     assert stats["landmarks"]["compacted"] > 0
     assert len(sa.landmarks.live_files()) <= n_buckets
     probe_rows = [(5_000_000 + d, p) for d, p in rows[:2]]
@@ -694,7 +693,7 @@ def test_audio_gate_density_default_stamps_and_rides(spark, tmp_path):
     stamps it; later default-call batches read the STAMP (the config
     guard would raise on any drift); a registry built under an
     explicit dial keeps that dial when later callers pass None."""
-    from nfl_data_pipeline_spark.operators.mediasynth import rich_clip, wav_bytes
+    from tests.mediasynth import rich_clip, wav_bytes
     from nfl_data_pipeline_spark.operators.multimodal import (
         audio_fingerprints,
         auto_min_matches,
@@ -781,7 +780,7 @@ def test_image_gate_dedups_across_codecs(spark, tmp_path):
     so a PNG re-encode of a registered PPM image is caught as a dup
     by the incremental gate — mixed-mime media tables dedup as one
     corpus."""
-    from nfl_data_pipeline_spark.operators.mediasynth import png_bytes
+    from tests.mediasynth import png_bytes
 
     state = ImageDedupState(str(tmp_path / "img"))
     img_a, img_b = _image(400), _image(401)
