@@ -667,8 +667,8 @@ def gate_verdicts(
     docs that lose.
 
     ``rows`` are candidate ``(doc_a, doc_b, b_reg)`` tuples the caller
-    already holds (the text gate verifies on the driver); otherwise
-    one bounded collect takes them. Up to ``DRIVER_MAX_PAIRS`` rows the
+    already holds, at most ``DRIVER_MAX_PAIRS`` (the text gate verifies
+    on the driver); otherwise one bounded collect takes them. Up to ``DRIVER_MAX_PAIRS`` rows the
     winners resolve on the driver and the verdicts read only
     ``base_ids`` and driver data. Past it the components come from
     :func:`_distributed_components`, membership from the same frame,
@@ -678,8 +678,8 @@ def gate_verdicts(
 
     from nfl_data_pipeline_spark.operators.localframe import local_frame
 
-    cands = cands.select("doc_a", "doc_b", "b_reg").distinct()
     if rows is None:
+        cands = cands.select("doc_a", "doc_b", "b_reg").distinct()
         rows = cands.limit(DRIVER_MAX_PAIRS + 1).collect()
     if len(rows) <= DRIVER_MAX_PAIRS:
         members = {b for _, b, reg in rows if reg}
